@@ -28,7 +28,7 @@ per-row Arrow traffic carries only true per-row columns.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -74,6 +74,98 @@ def sort_group(pdf: pd.DataFrame) -> pd.DataFrame:
     if EVENT_TIME in pdf.columns and pdf[EVENT_TIME].notna().any():
         return pdf.sort_values(EVENT_TIME, kind="stable", na_position="first")
     return pdf
+
+
+class EnginePlan(NamedTuple):
+    """One batch-engine decision (see ``resolve_engine``)."""
+
+    engine: str  # recorded as _lastFoldEngine
+    vectorized: bool  # a batched fold runs (recorded as _lastFoldVectorized)
+    # fold factory; for distributedScan the distributed transform itself
+    factory: Callable
+    # layout of the fold's output frame: "scalar" (flat doubles), "nd"
+    # (flat n-D), "mixture" (flat mixture columns) or "own" (the
+    # operator's sequential schema)
+    boundary: str
+    reason: str
+    buckets: int | None = None  # salt buckets; sized only when keyed is given
+
+
+def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None = None) -> EnginePlan:
+    """Pick the fold engine for ``op`` — the one place every estimation
+    operator (LKF/EKF/UKF/CKF incl. MMAE, the smoother, RLS, LMS, the
+    mixtures) decides how its batch runs.
+
+    ============  ==============================  =====================
+    foldEngine    batch input                     streaming input
+    ============  ==============================  =====================
+    auto          scan if the shape is            sequential
+                  scan-eligible, else sequential
+    sequential    sequential                      sequential
+    scan          scan (needs vectorizedBatch)    ValueError
+    distributed-  distscan.py transform (needs    ValueError
+    Scan          vectorizedBatch)
+    ============  ==============================  =====================
+
+    A batch "scan" or ``vectorizedBatch`` run folds salted multi-key
+    buckets when the operator's ``_bucketedFold`` offers a factory for
+    the shape; otherwise it falls back to the per-key sequential fold.
+    Operators without a ``foldEngine`` param (the mixtures) resolve as
+    "sequential". Auto scans only scalar shapes: the n-D scans lose on
+    many-key batches (``_scanEligible`` of each family says where).
+
+    Pure unless the keyed input frame is given for a bucketed plan: then
+    the bucket count is sized from it (``vectorizedBuckets`` overrides). Width ~128
+    keys per bucket balances the operator families: LAPACK-heavy n-D
+    folds amortize batched calls over width, cheap elementwise folds want
+    task parallelism. The distinct-key count comes from a bounded sample
+    (``take(2048)``, one job on the first partition) instead of a count
+    job, which taxed the fold by ~13%; a floor of 4 buckets keeps task
+    parallelism. An under-estimate only yields fewer, wider buckets.
+    """
+    params = op._paramMap
+    requested = params.get("foldEngine", "sequential")
+    batched = bool(params.get("vectorizedBatch"))
+    if requested in ("scan", "distributedScan") and (streaming or not batched):
+        raise ValueError(
+            f"foldEngine={requested!r} is a batch vectorized engine: call "
+            f"setVectorizedBatch(True) and use batch input{op._batchOnlyHint}"
+        )
+    if requested == "distributedScan":
+        return EnginePlan(
+            requested, True, op._distributedTransform(constants), "own",
+            "foldEngine='distributedScan'",
+        )
+    engine, reason = requested, f"foldEngine={requested!r}"
+    if requested == "auto":
+        if streaming:
+            engine, reason = "sequential", "auto: streaming input"
+        elif op._scanEligible(constants):
+            engine, reason = "scan", "auto: scan-eligible shape"
+        else:
+            engine, reason = "sequential", "auto: shape not scan-eligible"
+    if not streaming and (engine == "scan" or batched):
+        picked = op._bucketedFold(constants, engine)
+        if picked is not None:
+            buckets = _bucket_count(op, keyed) if keyed is not None else None
+            return EnginePlan(engine, True, *picked, f"{reason}; salted buckets", buckets)
+        reason += "; no batched fold for this shape"
+    return EnginePlan(
+        "sequential", False, op._foldFactory(), op._foldBoundary(constants), reason
+    )
+
+
+def _bucket_count(op, keyed: DataFrame) -> int:
+    buckets = op.get("vectorizedBuckets")
+    if buckets is None:
+        par = max(1, int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")))
+        head = keyed.select(STATE_KEY).take(2048)
+        n_keys = len({r[0] for r in head})
+        if n_keys >= 1024:
+            # mostly-distinct sample => high cardinality; use all buckets
+            n_keys = 128 * par
+        buckets = max(min(4, par), min(par, int(n_keys) // 128))
+    return int(buckets)
 
 
 class StatefulTransformer(HasParams):
@@ -129,6 +221,26 @@ class StatefulTransformer(HasParams):
     def _unpackState(packed) -> object:
         raise NotImplementedError
 
+    # -- engine hooks (resolve_engine); the defaults fold per key ----------
+
+    _lastFoldEngine: str | None = None
+    _lastFoldVectorized = False
+    _batchOnlyHint = ""
+
+    def _scanEligible(self, c: dict) -> bool:
+        """Shapes ``foldEngine="auto"`` promotes to the scan in batch."""
+        return False
+
+    def _bucketedFold(self, c: dict, engine: str):
+        """(fold factory, boundary kind) of the salted multi-key fold for
+        ``engine`` ("scan" or "sequential"), or None when the shape has
+        none; raises ValueError for a forced scan it cannot run."""
+        return None
+
+    def _foldBoundary(self, c: dict) -> str:
+        """Boundary kind of the sequential fold's output frame."""
+        return "own"
+
     # -- shared plumbing ----------------------------------------------------
 
     def _keyed(self, df: DataFrame) -> DataFrame:
@@ -145,56 +257,18 @@ class StatefulTransformer(HasParams):
             out = out.withWatermark(EVENT_TIME, self.get("watermarkDuration"))
         return out
 
-    def _saltedKeys(self, df: DataFrame, keyed: DataFrame) -> DataFrame:
-        """Salt keys into vectorized multi-key buckets (subclasses with a
-        ``vectorizedBatch`` mode call this from their vectorized transform).
-
-        Batch width matters more than task count for LAPACK-heavy folds
-        (einsum overhead amortizes with width), while cheap elementwise
-        folds want task parallelism. Quiet-machine median-of-5 sweeps on
-        the sf0.1 events table (1000 keys, 100k rows, local[32]): the
-        general n-D LKF fold peaked at 4 buckets (65-70k rows/s; 8: 63k,
-        16: 61k); after the scalar 1-D fast path landed
-        (vectorized.py vectorized_scalar_lkf_fold_factory) the same shape
-        re-sweeps 2: 119k, 4: 86k, 8: 132k, 16: 114k — the fold is now
-        cheap enough that 8 tasks beat 4 wide ones. GMM 4: 116k, 8: 125k,
-        16: 117k; smoother 4: 115k, 8: 119k, 16: 105k. Width ~128 (8
-        buckets at 1000 keys) is the balanced target across operator
-        families. Auto mode estimates the distinct key count from a
-        bounded sample (a full-scan count job taxed the fold ~13% at
-        sf0.1) and sizes buckets for width ~128, floor 4 buckets for task
-        parallelism. An under-estimate (keys clustered late in the scan)
-        just yields fewer, wider buckets — the safe direction for
-        throughput.
-        setVectorizedBuckets overrides (bench.py pins the LKF row to its
-        sweep optimum so the recorded number measures the fold, not the
-        heuristic).
-        """
-        buckets = self.get("vectorizedBuckets")
-        if buckets is None:
-            par = max(1, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")))
-            # take() short-circuits to the first partition — one job-floor
-            # job at any input size (vs ~13% fold tax for a full count job,
-            # or several incremental jobs for a take() larger than the first
-            # partition). A sample this small under-counts only mid-range
-            # cardinalities (256..2k keys), where the error shifts bucket
-            # count by a handful — immaterial.
-            head = keyed.select(STATE_KEY).take(2048)
-            n_keys = len({r[0] for r in head})
-            if n_keys >= 1024:
-                # mostly-distinct sample => high cardinality; use all buckets
-                n_keys = 128 * par
-            buckets = max(min(4, par), min(par, int(n_keys) // 128))
-        buckets = int(buckets)
-        return keyed.withColumn(
-            "__salt__", F.pmod(F.crc32(F.col(STATE_KEY).cast("binary")), F.lit(buckets))
-        )
-
     def transform(self, df: DataFrame) -> DataFrame:
+        constants = self._constants()
         keyed = self._keyed(df)
+        plan = resolve_engine(self, constants, df.isStreaming, keyed)
+        self._lastFoldEngine, self._lastFoldVectorized = plan.engine, plan.vectorized
+        if plan.engine == "distributedScan":
+            return plan.factory(self, df)
+        if plan.vectorized:
+            return self._bucketedTransform(keyed, plan, constants)
         # factory is invoked lazily on the worker (once per python worker, via
         # the cache cell) so callable params stay as by-value pickles in transit
-        factory, constants = self._foldFactory(), self._constants()
+        factory = plan.factory
         cell: list = []
 
         def fold(pdf, state):
@@ -307,6 +381,33 @@ class StatefulTransformer(HasParams):
                 result = result.withWatermark(EVENT_TIME, self.get("watermarkDuration"))
 
         return self._shapeOutput(result)
+
+    def _bucketedTransform(self, keyed: DataFrame, plan: EnginePlan, constants: dict) -> DataFrame:
+        """The salted multi-key bucket path shared by every batched fold:
+        keys hash into ``plan.buckets`` groups, so ONE ``applyInPandas``
+        call folds many keys time-synchronously (operators/vectorized.py);
+        each bucket is stably sorted by (key, event time) before the fold,
+        and the operator's reassembly turns the ``plan.boundary`` frame
+        into its public schema."""
+        salted = self._bucketInput(keyed).withColumn(
+            "__salt__", F.pmod(F.crc32(F.col(STATE_KEY).cast("binary")), F.lit(plan.buckets))
+        )
+        factory, cell = plan.factory, []
+
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            if not cell:
+                cell.append(factory(constants))
+            cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
+            pdf = pdf.sort_values(cols, kind="stable", na_position="first")
+            out, _ = cell[0](pdf, None)
+            return out
+
+        res = salted.groupBy("__salt__").applyInPandas(fn, self._outSchema(plan.boundary))
+        return self._shapeOutput(res, plan.boundary)
+
+    def _bucketInput(self, keyed: DataFrame) -> DataFrame:
+        """Projection of the keyed frame the bucketed folds read."""
+        return keyed
 
     def _transformWithState(self, keyed: DataFrame, fold, out_schema: StructType) -> DataFrame:
         """Streaming execution on the PySpark >=4.0 arbitrary-state API.
@@ -451,6 +552,7 @@ class StatefulTransformer(HasParams):
             eventTimeColumnName=ev_out,
         )
 
-    def _shapeOutput(self, df: DataFrame) -> DataFrame:
-        """Rename/prune the raw fold output (subclasses may extend)."""
+    def _shapeOutput(self, df: DataFrame, boundary: str | None = None) -> DataFrame:
+        """Reassemble a fold's output frame of the given boundary kind
+        (default: the sequential fold's) into the public schema."""
         return df

@@ -714,7 +714,7 @@ def distributed_nd_scan_transform(op, df: DataFrame) -> DataFrame:
 def _shape_nd_output(op, res: DataFrame) -> DataFrame:
     """Flat n-D boundary frame (vflat_nd_fields) -> public struct schema
     (same JVM-side projection as the n-D branch of
-    KalmanBase._vectorizedTransform)."""
+    KalmanBase._shapeOutput)."""
     from artan_spark.operators.vectorized import nd_flat_select_exprs
 
     n, mdim = int(op.get("stateSize")), int(op.get("measurementSize"))

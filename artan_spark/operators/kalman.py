@@ -29,6 +29,24 @@ from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
+from artan_spark.operators.vectorized import (
+    VFLAT_SCALAR_OUT_SCHEMA,
+    flat_input_projection,
+    nd_flat_select_exprs,
+    supports_scalar_sigma,
+    supports_scalar_vectorized,
+    supports_scan,
+    supports_scan_general,
+    supports_vectorized,
+    vectorized_ekf_fold_factory,
+    vectorized_lkf_fold_factory,
+    vectorized_lkf_scan_fold_factory,
+    vectorized_scalar_lkf_fold_factory,
+    vectorized_scalar_lkf_scan_fold_factory,
+    vectorized_scalar_sigma_fold_factory,
+    vectorized_sigma_fold_factory,
+    vflat_nd_schema,
+)
 from artan_spark.types import (
     GAUSSIAN,
     MATRIX,
@@ -55,9 +73,11 @@ _OUT_SCHEMA = StructType(
         StructField(STATE_KEY, StringType()),
         StructField("stateIndex", LongType()),
         StructField("stepIndex", LongType()),
-        StructField("mean", VECTOR),
-        StructField("cov", ArrayType(DoubleType())),  # column-major
-        StructField("res", VECTOR, True),
+        # element nullability as nd_flat_select_exprs builds it from flat
+        # doubles, so both boundaries reassemble to the same public type
+        StructField("mean", ArrayType(DoubleType()), False),
+        StructField("cov", ArrayType(DoubleType()), False),  # column-major
+        StructField("res", ArrayType(DoubleType()), True),
         StructField("resCov", ArrayType(DoubleType()), True),
         StructField(EVENT_TIME, TimestampType(), True),
         StructField("loglikelihood", DoubleType(), True),
@@ -80,26 +100,6 @@ _STATE_SCHEMA = StructType(
         StructField("adaptiveNoise", ArrayType(DoubleType()), True),
     ]
 )
-
-# scalar fast path emits flat primitives across the Python->JVM boundary
-# (struct-of-array serialization costs ~3x the whole fold at 1M rows);
-# _shapeOutput reassembles the public struct schema JVM-side.
-_FLAT_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-        StructField("mean", DoubleType()),
-        StructField("cov", DoubleType()),
-        StructField("res", DoubleType(), True),
-        StructField("resCov", DoubleType(), True),
-        StructField(EVENT_TIME, TimestampType(), True),
-        StructField("loglikelihood", DoubleType(), True),
-        StructField("mahalanobis", DoubleType(), True),
-        StructField("slidingLikelihood", DoubleType(), True),
-    ]
-)
-
 
 def _scalar_gaussian(mean_col: str, cov_col: str):
     return F.struct(
@@ -242,7 +242,7 @@ def _scalar_lkf_fold_factory(c: dict):
                 "mahalanobis": o_maha,
                 "slidingLikelihood": o_sll,
             },
-            columns=[fld.name for fld in _FLAT_OUT_SCHEMA.fields],
+            columns=[fld.name for fld in VFLAT_SCALAR_OUT_SCHEMA.fields],
         )
         state = {
             "idx": int(idx),
@@ -489,11 +489,10 @@ class KalmanBase(StatefulTransformer):
     """Shared param surface + plumbing for the Kalman family."""
 
     _kind = "lkf"
-    # introspection: did the last transform run a batched (vectorized/scan/
-    # distributed) fold, vs the base per-row chunked fold? _lastFoldEngine
-    # alone can't tell — it reads "sequential" for both the vectorized
-    # time-synchronous fold and the base fold
-    _lastFoldVectorized = False
+    _batchOnlyHint = (
+        " (streaming micro-batches are rows-per-trigger-bound, not "
+        "rows-per-key-bound, so the scan buys nothing there)"
+    )
 
     _defaults = {
         "stateSize": None,
@@ -561,60 +560,8 @@ class KalmanBase(StatefulTransformer):
             # MMAE needs sliding likelihood (KalmanBase.scala:477-479);
             # restored below so the flag does not leak into later transforms
             self._set("calculateSlidingLikelihood", True)
-        engine = self.get("foldEngine")
-        if engine in ("scan", "distributedScan") and (
-            df.isStreaming or not self.get("vectorizedBatch")
-        ):
-            raise ValueError(
-                f"foldEngine={engine!r} is a batch vectorized engine: call "
-                "setVectorizedBatch(True) and use batch input (streaming "
-                "micro-batches are rows-per-trigger-bound, not "
-                "rows-per-key-bound, so the scan buys nothing there)"
-            )
         try:
-            c = self._constants()
-            if engine == "auto":
-                # default engine resolution: batch + a scan-expressible
-                # linear shape -> the parallel-scan fold (rows-per-key no
-                # longer bounds wall-clock; ~1e-12 relative parity with the
-                # sequential recursion). setFoldEngine("sequential") is the
-                # bit-exact escape hatch.
-                engine = (
-                    "scan"
-                    if (not df.isStreaming and self._scanEligible(c))
-                    else "sequential"
-                )
-            if engine == "distributedScan":
-                from artan_spark.operators.distscan import (
-                    distributed_nd_scan_transform,
-                    distributed_scan_transform,
-                    distributed_smoother_transform,
-                    supports_distributed_scan,
-                )
-
-                self._lastFoldEngine = engine  # introspection (tests/bench)
-                self._lastFoldVectorized = True
-                if "fixedLag" in c:
-                    out = distributed_smoother_transform(self, df)
-                elif supports_distributed_scan(c):
-                    out = distributed_scan_transform(self, df)
-                else:
-                    out = distributed_nd_scan_transform(self, df)
-            elif not df.isStreaming and (
-                engine == "scan"
-                or (self.get("vectorizedBatch") and self._supportsVectorized(c))
-            ):
-                self._lastFoldEngine = engine  # introspection (tests/bench)
-                # True iff the batched fold ran (vs the base per-row chunked
-                # fold) — _lastFoldEngine says "sequential" for BOTH, which
-                # is how ekf_events_local_level silently fell back for
-                # rounds; entries guard on this flag
-                self._lastFoldVectorized = True
-                out = self._vectorizedTransform(df, engine)
-            else:
-                self._lastFoldEngine = "sequential"
-                self._lastFoldVectorized = False
-                out = super().transform(df)
+            out = super().transform(df)
         finally:
             if sll_forced:
                 self._set("calculateSlidingLikelihood", False)
@@ -727,11 +674,16 @@ class KalmanBase(StatefulTransformer):
                 cols.append((name, auto_array(df, cp)))
         return cols
 
-    def _scalarFold(self) -> bool:
-        return _is_scalar_lkf(self._constants())
+    def _foldBoundary(self, c: dict) -> str:
+        return "scalar" if _is_scalar_lkf(c) else "own"
 
-    def _outSchema(self):
-        return _FLAT_OUT_SCHEMA if self._scalarFold() else _OUT_SCHEMA
+    def _outSchema(self, boundary: str | None = None):
+        boundary = boundary or self._foldBoundary(self._constants())
+        if boundary == "scalar":
+            return VFLAT_SCALAR_OUT_SCHEMA
+        if boundary == "nd":
+            return vflat_nd_schema(int(self.get("stateSize")), int(self.get("measurementSize")))
+        return _OUT_SCHEMA
 
     def _stateSchema(self):
         return _STATE_SCHEMA
@@ -763,11 +715,6 @@ class KalmanBase(StatefulTransformer):
             "Qa": None if qa is None else np.asarray(qa, dtype=np.float64).reshape(n, n),
         }
 
-    def _supportsVectorized(self, c: dict) -> bool:
-        from artan_spark.operators.vectorized import supports_vectorized
-
-        return supports_vectorized(c)
-
     def _scanEligible(self, c: dict) -> bool:
         """Shapes the auto engine promotes to the parallel-scan fold: the
         SCALAR constant-model LKF only (supports_scan). The n-D matrix scan
@@ -779,122 +726,56 @@ class KalmanBase(StatefulTransformer):
         passes win 1.5-33x for chains >=3k rows and lose at most ~1.4x on
         many-short-key shapes (K=4096/T=48: 0.72x). Sigma-point filters
         and EKF-with-callables have no scan element at all."""
-        from artan_spark.operators.vectorized import supports_scan
-
         return supports_scan(c)
 
-    def _vectorizedTransform(self, df: DataFrame, engine: str = "sequential") -> DataFrame:
-        """Salted multi-key grouped fold, time-synchronous across keys
-        (operators/vectorized.py). Batch only; falls back otherwise."""
-        import pandas as pd
-
-        from artan_spark.operators.vectorized import (
-            VFLAT_SCALAR_OUT_SCHEMA,
-            flat_input_projection,
-            nd_flat_select_exprs,
-            supports_scalar_sigma,
-            supports_scalar_vectorized,
-            vectorized_ekf_fold_factory,
-            vectorized_lkf_fold_factory,
-            vectorized_scalar_lkf_fold_factory,
-            vectorized_scalar_sigma_fold_factory,
-            vectorized_sigma_fold_factory,
-            vflat_nd_schema,
-        )
-
-        keyed = self._keyed(df)
-        constants = self._constants()
-        # ship measurement/model doubles as flat primitive columns (the
-        # input-side twin of the VFLAT output schemas): object cells cost
-        # ~2-3 us/row to cross Arrow->pandas + be read back; float64
-        # buffers cost ~ nothing (vectorized.flat_input_projection)
-        keyed = flat_input_projection(
-            keyed, self.get("measurementSize"), self.get("stateSize")
-        )
-        factory_cell: list = []
-
-        scalar_lkf = self._kind == "lkf" and supports_scalar_vectorized(constants)
-        scalar_sigma = supports_scalar_sigma(constants)
-        scalar = scalar_lkf or scalar_sigma
+    def _bucketedFold(self, c: dict, engine: str):
         if engine == "scan":
-            from artan_spark.operators.vectorized import (
-                supports_scan,
-                supports_scan_general,
-                vectorized_lkf_scan_fold_factory,
-                vectorized_scalar_lkf_scan_fold_factory,
-            )
-
-            if supports_scan(constants):
-                factory = vectorized_scalar_lkf_scan_fold_factory
-                scalar = True
-            elif supports_scan_general(constants):
+            if supports_scan(c):
+                return vectorized_scalar_lkf_scan_fold_factory, "scalar"
+            if supports_scan_general(c):
                 # n-D matrix-element scan (incl. per-row measurementModel —
                 # the OLS regression shape)
-                factory = vectorized_lkf_scan_fold_factory
-                scalar = False
-            else:
-                raise ValueError(
-                    "foldEngine='scan' requires a constant-model LKF shape "
-                    "with fadingFactor=1 (no EKF callables, control, "
-                    "multi-step predict, or sliding likelihood) — use the "
-                    "sequential engine for this configuration"
-                )
-        elif scalar_lkf:
-            factory = vectorized_scalar_lkf_fold_factory
-        elif scalar_sigma:
-            factory = vectorized_scalar_sigma_fold_factory
-        else:
-            factory = {
-                "lkf": vectorized_lkf_fold_factory,
-                "ekf": vectorized_ekf_fold_factory,
-            }.get(self._kind, vectorized_sigma_fold_factory)
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if not factory_cell:
-                factory_cell.append(factory(constants))
-            cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
-            pdf = pdf.sort_values(cols, kind="stable", na_position="first")
-            out, _ = factory_cell[0](pdf, None)
-            return out
-
-        salted = self._saltedKeys(df, keyed)
-        res = salted.groupBy("__salt__").applyInPandas(
-            fn,
-            VFLAT_SCALAR_OUT_SCHEMA
-            if scalar
-            else vflat_nd_schema(
-                int(self.get("stateSize")), int(self.get("measurementSize"))
-            ),
-        )
-
-        if scalar:
-            # flat primitives back to the public struct schema, JVM-side
-            shaped = res.select(
-                STATE_KEY,
-                "stateIndex",
-                "stepIndex",
-                _scalar_gaussian("mean", "cov").alias("state"),
-                F.when(
-                    F.col("resCov").isNotNull() & ~F.isnan(F.col("resCov")),
-                    _scalar_gaussian("res", "resCov"),
-                ).alias("residual"),
-                EVENT_TIME,
-                F.when(~F.isnan("loglikelihood"), F.col("loglikelihood")).alias("loglikelihood"),
-                F.when(~F.isnan("mahalanobis"), F.col("mahalanobis")).alias("mahalanobis"),
-                F.when(~F.isnan("slidingLikelihood"), F.col("slidingLikelihood")).alias(
-                    "slidingLikelihood"
-                ),
+                return vectorized_lkf_scan_fold_factory, "nd"
+            raise ValueError(
+                "foldEngine='scan' requires a constant-model LKF shape "
+                "with fadingFactor=1 (no EKF callables, control, "
+                "multi-step predict, or sliding likelihood) — use the "
+                "sequential engine for this configuration"
             )
-            return self._dropDisabled(shaped)
+        if not supports_vectorized(c):
+            return None
+        if supports_scalar_vectorized(c):
+            return vectorized_scalar_lkf_fold_factory, "scalar"
+        if supports_scalar_sigma(c):
+            return vectorized_scalar_sigma_fold_factory, "scalar"
+        factory = {
+            "lkf": vectorized_lkf_fold_factory,
+            "ekf": vectorized_ekf_fold_factory,
+        }.get(c["kind"], vectorized_sigma_fold_factory)
+        return factory, "nd"
 
-        n, mdim = int(self.get("stateSize")), int(self.get("measurementSize"))
-        shaped = res.select(*nd_flat_select_exprs(n, mdim))
-        return self._dropDisabled(shaped)
+    def _distributedTransform(self, c: dict):
+        from artan_spark.operators import distscan
 
-    def _shapeOutput(self, df: DataFrame) -> DataFrame:
+        if "fixedLag" in c:
+            return distscan.distributed_smoother_transform
+        if distscan.supports_distributed_scan(c):
+            return distscan.distributed_scan_transform
+        return distscan.distributed_nd_scan_transform
+
+    def _bucketInput(self, keyed: DataFrame) -> DataFrame:
+        # ship measurement/model doubles as flat primitive columns (the
+        # input-side twin of the flat output schemas): object cells cost
+        # ~2-3 us/row to cross Arrow->pandas + be read back; float64
+        # buffers cost ~ nothing (vectorized.flat_input_projection)
+        return flat_input_projection(keyed, self.get("measurementSize"), self.get("stateSize"))
+
+    def _shapeOutput(self, df: DataFrame, boundary: str | None = None) -> DataFrame:
         # reassemble the public struct schema JVM-side (cheap Catalyst
         # projection vs expensive Python-side struct serialization)
-        if self._scalarFold():
+        boundary = boundary or self._foldBoundary(self._constants())
+        n, mdim = int(self.get("stateSize")), int(self.get("measurementSize"))
+        if boundary == "scalar":
             df = df.select(
                 STATE_KEY,
                 "stateIndex",
@@ -914,32 +795,38 @@ class KalmanBase(StatefulTransformer):
                     "slidingLikelihood"
                 ),
             )
+        elif boundary == "nd":
+            df = df.select(*nd_flat_select_exprs(n, mdim))
         else:
-            n, mdim = int(self.get("stateSize")), int(self.get("measurementSize"))
 
-            def mat(col_name, rows, cols_):
+            def mat(values, rows, cols_):
                 return F.struct(
                     F.lit(rows).alias("numRows"),
                     F.lit(cols_).alias("numCols"),
-                    F.col(col_name).alias("values"),
+                    values.alias("values"),
                 )
 
-            def gauss(mean_col, cov_col, dim):
-                return F.struct(F.col(mean_col).alias("mean"), mat(cov_col, dim, dim).alias("covariance"))
+            def gauss(mean, cov, dim):
+                return F.struct(mean.alias("mean"), mat(cov, dim, dim).alias("covariance"))
 
+            # the residual is null exactly when res is; coalesce only tells
+            # Catalyst that its fields are not (the type the flat
+            # boundaries reassemble to)
+            none = F.array().cast(ArrayType(DoubleType()))
+            residual = gauss(F.coalesce("res", none), F.coalesce("resCov", none), mdim)
             df = df.select(
                 STATE_KEY,
                 "stateIndex",
                 "stepIndex",
-                gauss("mean", "cov", n).alias("state"),
-                F.when(F.col("res").isNotNull(), gauss("res", "resCov", mdim)).alias("residual"),
+                gauss(F.col("mean"), F.col("cov"), n).alias("state"),
+                F.when(F.col("res").isNotNull(), residual).alias("residual"),
                 EVENT_TIME,
                 "loglikelihood",
                 "mahalanobis",
                 "slidingLikelihood",
-                F.when(F.col("pmVals").isNotNull(), mat("pmVals", n, n)).alias("processModel"),
-                F.when(F.col("pnVals").isNotNull(), mat("pnVals", n, n)).alias("processNoise"),
-                F.when(F.col("mmVals").isNotNull(), mat("mmVals", mdim, n)).alias("measurementModel"),
+                F.when(F.col("pmVals").isNotNull(), mat(F.col("pmVals"), n, n)).alias("processModel"),
+                F.when(F.col("pnVals").isNotNull(), mat(F.col("pnVals"), n, n)).alias("processNoise"),
+                F.when(F.col("mmVals").isNotNull(), mat(F.col("mmVals"), mdim, n)).alias("measurementModel"),
             )
         return self._dropDisabled(df)
 

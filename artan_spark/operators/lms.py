@@ -13,6 +13,10 @@ from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
+from artan_spark.operators.vectorized import (
+    vectorized_lms_fold_factory,
+    vectorized_scalar_lms_scan_fold_factory,
+)
 from artan_spark.types import (
     VECTOR,
     LongType,
@@ -97,78 +101,30 @@ class LeastMeanSquaresFilter(StatefulTransformer):
     def setInitialEstimate(self, value):
         return self._set("initialState", np.asarray(value, dtype=np.float64))
 
-    def transform(self, df):
-        engine = self.get("foldEngine")
-        if engine in ("scan", "distributedScan") and (
-            df.isStreaming or not self.get("vectorizedBatch")
-        ):
+    def _scanEligible(self, c: dict) -> bool:
+        init = c["initialState"]
+        return init is not None and len(init) == 1 and not self.get("initialStateCol")
+
+    def _bucketedFold(self, c: dict, engine: str):
+        """Salted multi-key folds, time-synchronous across keys
+        (operators/vectorized.py). They emit the public (state VECTOR)
+        schema, so no JVM-side reassembly is needed."""
+        if self.get("initialStateCol"):
+            return None
+        if engine != "scan":
+            return vectorized_lms_fold_factory, "own"
+        init = c["initialState"]
+        if init is not None and len(init) != 1:
             raise ValueError(
-                f"foldEngine={engine!r} is a batch vectorized engine: call "
-                "setVectorizedBatch(True) and use batch input"
+                "foldEngine='scan' supports the 1-D LMS shape only — "
+                "use the sequential engine for n-D feature vectors"
             )
-        if engine == "distributedScan":
-            from artan_spark.operators.distscan import distributed_lms_transform
+        return vectorized_scalar_lms_scan_fold_factory, "own"
 
-            self._lastFoldEngine = engine  # introspection (tests/bench)
-            return distributed_lms_transform(self, df)
-        if engine == "auto":
-            init = self.get("initialState")
-            scalar_known = init is not None and len(np.ravel(init)) == 1
-            engine = (
-                "scan"
-                if (
-                    not df.isStreaming
-                    and scalar_known
-                    and not self.get("initialStateCol")
-                )
-                else "sequential"
-            )
-        if (
-            not df.isStreaming
-            and not self.get("initialStateCol")
-            and (engine == "scan" or self.get("vectorizedBatch"))
-        ):
-            self._lastFoldEngine = engine  # introspection (tests/bench)
-            return self._vectorizedTransform(df, engine)
-        self._lastFoldEngine = "sequential"
-        return super().transform(df)
+    def _distributedTransform(self, c: dict):
+        from artan_spark.operators import distscan
 
-    def _vectorizedTransform(self, df, engine: str = "sequential"):
-        """Salted multi-key grouped fold, time-synchronous across keys
-        (operators/vectorized.py vectorized_lms_fold_factory). Batch only.
-        The fold already emits the public (state VECTOR) schema — no
-        JVM-side reassembly needed."""
-        from artan_spark.operators.vectorized import (
-            vectorized_lms_fold_factory,
-            vectorized_scalar_lms_scan_fold_factory,
-        )
-
-        keyed = self._keyed(df)
-        constants = self._constants()
-        if engine == "scan":
-            init = constants["initialState"]
-            feat_1d = init is None or len(np.ravel(init)) == 1
-            if not feat_1d:
-                raise ValueError(
-                    "foldEngine='scan' supports the 1-D LMS shape only — "
-                    "use the sequential engine for n-D feature vectors"
-                )
-            factory = vectorized_scalar_lms_scan_fold_factory
-        else:
-            factory = vectorized_lms_fold_factory
-        factory_cell: list = []
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if not factory_cell:
-                factory_cell.append(factory(constants))
-            cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
-            pdf = pdf.sort_values(cols, kind="stable", na_position="first")
-            out, _ = factory_cell[0](pdf, None)
-            return out
-
-        salted = self._saltedKeys(df, keyed)
-        res = salted.groupBy("__salt__").applyInPandas(fn, _OUT_SCHEMA)
-        return res if self.get("eventTimeCol") else res.drop(EVENT_TIME)
+        return distscan.distributed_lms_transform
 
     def _constants(self):
         init = self.get("initialState")
@@ -189,7 +145,7 @@ class LeastMeanSquaresFilter(StatefulTransformer):
             cols.append(("initialState", auto_array(df, self.get("initialStateCol"))))
         return cols
 
-    def _outSchema(self):
+    def _outSchema(self, boundary: str | None = None):
         return _OUT_SCHEMA
 
     def _stateSchema(self):
@@ -207,5 +163,5 @@ class LeastMeanSquaresFilter(StatefulTransformer):
         idx, mean = packed
         return {"idx": int(idx), "mean": np.asarray(mean, dtype=np.float64)}
 
-    def _shapeOutput(self, df):
+    def _shapeOutput(self, df, boundary: str | None = None):
         return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)

@@ -29,9 +29,14 @@ from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer, empty_pdf
+from artan_spark.operators.vectorized import (
+    mixture_flat_fields,
+    mixture_param_width,
+    supports_vectorized_mixture,
+    vectorized_mixture_fold_factory,
+)
 from artan_spark.types import (
-    MATRIX,
-    VECTOR,
+    GAUSSIAN_OUT,
     ArrayType,
     DoubleType,
     LongType,
@@ -311,16 +316,18 @@ def _mixture_fold_factory(c: dict):
 
 
 def _model_struct_schema(family: str) -> StructType:
+    """Public mixtureModel type; nullability as the JVM-side reassembly of
+    the vectorized fold builds it, so every engine emits the same type."""
     if family == "gaussian":
-        dist = StructType([StructField("mean", VECTOR), StructField("covariance", MATRIX)])
+        dist = GAUSSIAN_OUT
     elif family == "poisson":
         dist = StructType([StructField("rate", DoubleType())])
     else:
         dist = StructType([StructField("probability", DoubleType())])
     return StructType(
         [
-            StructField("weights", ArrayType(DoubleType())),
-            StructField("distributions", ArrayType(dist)),
+            StructField("weights", ArrayType(DoubleType()), False),
+            StructField("distributions", ArrayType(dist, False), False),
         ]
     )
 
@@ -359,17 +366,6 @@ class FiniteMixtureBase(StatefulTransformer):
         raise NotImplementedError
 
     # -----------------------------------------------------------------------
-
-    def _outSchema(self):
-        return StructType(
-            [
-                StructField(STATE_KEY, StringType()),
-                StructField("stateIndex", LongType()),
-                StructField("mixtureModel", _model_struct_schema(self._family)),
-                StructField(EVENT_TIME, TimestampType(), True),
-                StructField("loglikelihood", DoubleType(), True),
-            ]
-        )
 
     def _stateSchema(self):
         sample_t = ArrayType(DoubleType()) if self._family == "gaussian" else DoubleType()
@@ -461,18 +457,25 @@ class FiniteMixtureBase(StatefulTransformer):
         self._packState, self._unpackState = self._mk_pack()
         if self.get("batchTrainEnabled") and not df.isStreaming:
             return self._batchEM(df)
-        if not df.isStreaming and self.get("vectorizedBatch"):
-            from artan_spark.operators.vectorized import supports_vectorized_mixture
+        return super().transform(df)
 
-            if supports_vectorized_mixture(self._constants()):
-                out = self._vectorizedTransform(df)
-                return out if self.get("eventTimeCol") else out.drop(EVENT_TIME)
-        out = super().transform(df)
-        return out if self.get("eventTimeCol") else out.drop(EVENT_TIME)
+    def _bucketedFold(self, c: dict, engine: str):
+        """Salted multi-key batched stochastic-EM fold (vectorized.py)."""
+        if supports_vectorized_mixture(c):
+            return vectorized_mixture_fold_factory, "mixture"
+        return None
 
-    def _flatOutSchema(self):
-        from artan_spark.operators.vectorized import mixture_flat_fields, mixture_param_width
-
+    def _outSchema(self, boundary: str | None = None):
+        if boundary != "mixture":
+            return StructType(
+                [
+                    StructField(STATE_KEY, StringType()),
+                    StructField("stateIndex", LongType()),
+                    StructField("mixtureModel", _model_struct_schema(self._family), False),
+                    StructField(EVENT_TIME, TimestampType(), True),
+                    StructField("loglikelihood", DoubleType(), True),
+                ]
+            )
         c = self._constants()
         kc = len(c["initialWeights"])
         fields = []
@@ -486,6 +489,11 @@ class FiniteMixtureBase(StatefulTransformer):
             else:  # w*/p* and loglikelihood: primitive doubles
                 fields.append(StructField(name, DoubleType(), True))
         return StructType(fields)
+
+    def _shapeOutput(self, df: DataFrame, boundary: str | None = None) -> DataFrame:
+        if boundary == "mixture":
+            df = self._shapeMixtureOutput(df)
+        return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)
 
     def _shapeMixtureOutput(self, df: DataFrame) -> DataFrame:
         """Reassemble the public mixtureModel struct JVM-side from the FLAT
@@ -534,28 +542,6 @@ class FiniteMixtureBase(StatefulTransformer):
             EVENT_TIME,
             "loglikelihood",
         )
-
-    def _vectorizedTransform(self, df: DataFrame) -> DataFrame:
-        """Salted multi-key batched stochastic-EM fold (vectorized.py);
-        same output schema as the sequential path."""
-        from artan_spark.operators.base import STATE_KEY
-        from artan_spark.operators.vectorized import vectorized_mixture_fold_factory
-
-        keyed = self._keyed(df)
-        constants = self._constants()
-        cell: list = []
-
-        def fn(pdf):
-            if not cell:
-                cell.append(vectorized_mixture_fold_factory(constants))
-            cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
-            pdf = pdf.sort_values(cols, kind="stable", na_position="first")
-            out, _ = cell[0](pdf, None)
-            return out
-
-        salted = self._saltedKeys(df, keyed)
-        flat = salted.groupBy("__salt__").applyInPandas(fn, self._flatOutSchema())
-        return self._shapeMixtureOutput(flat)
 
     def _batchEM(self, df: DataFrame) -> DataFrame:
         """Driver-side EM loop (MixtureBase.scala:257-316): minibatch = per-key

@@ -13,8 +13,13 @@ from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
+from artan_spark.operators.vectorized import (
+    vectorized_nd_rls_scan_fold_factory,
+    vectorized_rls_fold_factory,
+    vectorized_scalar_rls_scan_fold_factory,
+)
 from artan_spark.types import (
-    GAUSSIAN,
+    GAUSSIAN_OUT,
     VECTOR,
     ArrayType,
     DoubleType,
@@ -32,7 +37,7 @@ _OUT_SCHEMA = StructType(
     [
         StructField(STATE_KEY, StringType()),
         StructField("stateIndex", LongType()),
-        StructField("state", GAUSSIAN),
+        StructField("state", GAUSSIAN_OUT, False),
         StructField(EVENT_TIME, TimestampType(), True),
     ]
 )
@@ -46,15 +51,22 @@ _STATE_SCHEMA = StructType(
 )
 
 
-_FLAT_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("mean", DoubleType()),
-        StructField("cov", DoubleType()),
-        StructField(EVENT_TIME, TimestampType(), True),
-    ]
-)
+def _flat_schema(value_type, nullable: bool = True) -> StructType:
+    """Boundary schema of the batched folds: state mean and covariance
+    values as flat doubles (1-D) or as array cells (n-D)."""
+    return StructType(
+        [
+            StructField(STATE_KEY, StringType()),
+            StructField("stateIndex", LongType()),
+            StructField("mean", value_type, nullable),
+            StructField("cov", value_type, nullable),
+            StructField(EVENT_TIME, TimestampType(), True),
+        ]
+    )
+
+
+_FLAT_OUT_SCHEMA = _flat_schema(DoubleType())
+_ND_OUT_SCHEMA = _flat_schema(ArrayType(DoubleType()), nullable=False)
 
 
 def _scalar_rls_fold_factory(c: dict):
@@ -177,103 +189,32 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
         "distributedScanMaxGroups": 200_000,
     }
 
-    def transform(self, df):
-        engine = self.get("foldEngine")
-        if engine in ("scan", "distributedScan") and (
-            df.isStreaming or not self.get("vectorizedBatch")
-        ):
-            raise ValueError(
-                f"foldEngine={engine!r} is a batch vectorized engine: call "
-                "setVectorizedBatch(True) and use batch input"
-            )
-        if engine == "distributedScan":
-            from artan_spark.operators.distscan import distributed_rls_transform
+    def _scanEligible(self, c: dict) -> bool:
+        # auto promotes the SCALAR information-form scan only: the n-D
+        # scan wins big on hot keys (6.6x at K=1/T=100k, n=3) but loses
+        # ~1.6x on many-short-key shapes (K>=512: 0.6x) — keep it
+        # explicit opt-in for workloads that know their key shape
+        return not c["hasPerRowCols"] and c["stateSize"] == 1
 
-            self._lastFoldEngine = engine  # introspection (tests/bench)
-            return distributed_rls_transform(self, df)
-        eligible = (
-            not df.isStreaming
-            and not self._constants()["hasPerRowCols"]
-            and self.get("stateSize")
-        )
-        if engine == "auto":
-            # auto promotes the SCALAR information-form scan only: the n-D
-            # scan wins big on hot keys (6.6x at K=1/T=100k, n=3) but loses
-            # ~1.6x on many-short-key shapes (K>=512: 0.6x) — keep it
-            # explicit opt-in for workloads that know their key shape
-            engine = (
-                "scan"
-                if (eligible and int(self.get("stateSize")) == 1)
-                else "sequential"
-            )
-        if eligible and (engine == "scan" or self.get("vectorizedBatch")):
-            self._lastFoldEngine = engine  # introspection (tests/bench)
-            return self._vectorizedTransform(df, engine)
-        self._lastFoldEngine = "sequential"
-        return super().transform(df)
+    def _bucketedFold(self, c: dict, engine: str):
+        """Salted multi-key folds, time-synchronous across keys
+        (operators/vectorized.py); param (not per-row) priors only."""
+        if c["hasPerRowCols"] or not c["stateSize"]:
+            return None
+        boundary = "scalar" if int(c["stateSize"]) == 1 else "nd"
+        if engine != "scan":
+            return vectorized_rls_fold_factory, boundary
+        if boundary == "scalar":
+            return vectorized_scalar_rls_scan_fold_factory, boundary
+        return vectorized_nd_rls_scan_fold_factory, boundary
 
-    def _vectorizedTransform(self, df, engine: str = "sequential"):
-        """Salted multi-key grouped fold, time-synchronous across keys
-        (operators/vectorized.py vectorized_rls_fold_factory). Batch only."""
-        from artan_spark.operators.vectorized import (
-            vectorized_nd_rls_scan_fold_factory,
-            vectorized_rls_fold_factory,
-            vectorized_scalar_rls_scan_fold_factory,
-        )
+    def _distributedTransform(self, c: dict):
+        from artan_spark.operators import distscan
 
-        keyed = self._keyed(df)
-        constants = self._constants()
-        if engine == "scan":
-            factory = (
-                vectorized_scalar_rls_scan_fold_factory
-                if int(constants["stateSize"]) == 1
-                else vectorized_nd_rls_scan_fold_factory
-            )
-        else:
-            factory = vectorized_rls_fold_factory
-        factory_cell: list = []
+        return distscan.distributed_rls_transform
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            if not factory_cell:
-                factory_cell.append(factory(constants))
-            cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
-            pdf = pdf.sort_values(cols, kind="stable", na_position="first")
-            out, _ = factory_cell[0](pdf, None)
-            return out
-
-        n = int(constants["stateSize"])
-        scalar = n == 1
-        schema = (
-            _FLAT_OUT_SCHEMA
-            if scalar
-            else StructType(
-                [
-                    StructField(STATE_KEY, StringType()),
-                    StructField("stateIndex", LongType()),
-                    StructField("mean", VECTOR),
-                    StructField("cov", ArrayType(DoubleType())),
-                    StructField(EVENT_TIME, TimestampType(), True),
-                ]
-            )
-        )
-        salted = self._saltedKeys(df, keyed)
-        res = salted.groupBy("__salt__").applyInPandas(fn, schema)
-        if scalar:
-            return self._shapeOutput(res)  # flat -> GAUSSIAN struct, JVM-side
-        shaped = res.select(
-            STATE_KEY,
-            "stateIndex",
-            F.struct(
-                F.col("mean").alias("mean"),
-                F.struct(
-                    F.lit(n).alias("numRows"),
-                    F.lit(n).alias("numCols"),
-                    F.col("cov").alias("values"),
-                ).alias("covariance"),
-            ).alias("state"),
-            EVENT_TIME,
-        )
-        return shaped if self.get("eventTimeCol") else shaped.drop(EVENT_TIME)
+    def _foldBoundary(self, c: dict) -> str:
+        return "scalar" if _is_scalar_rls(c) else "own"
 
     def __init__(self, stateSize: int | None = None, **kwargs):
         super().__init__(**kwargs)
@@ -317,8 +258,9 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
             cols.append(("regularizationMatrix", auto_array(df, self.get("regularizationMatrixCol"))))
         return cols
 
-    def _outSchema(self):
-        return _FLAT_OUT_SCHEMA if _is_scalar_rls(self._constants()) else _OUT_SCHEMA
+    def _outSchema(self, boundary: str | None = None):
+        boundary = boundary or self._foldBoundary(self._constants())
+        return {"scalar": _FLAT_OUT_SCHEMA, "nd": _ND_OUT_SCHEMA}.get(boundary, _OUT_SCHEMA)
 
     def _stateSchema(self):
         return _STATE_SCHEMA
@@ -337,11 +279,23 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
         n = len(mean)
         return {"idx": int(idx), "mean": mean, "cov": np.asarray(cov, dtype=np.float64).reshape(n, n)}
 
-    def _shapeOutput(self, df):
-        if "mean" in df.columns:  # flat scalar boundary -> rebuild struct
+    def _shapeOutput(self, df, boundary: str | None = None):
+        boundary = boundary or self._foldBoundary(self._constants())
+        if boundary == "scalar":
             from artan_spark.operators.kalman import _scalar_gaussian
 
-            df = df.select(
-                STATE_KEY, "stateIndex", _scalar_gaussian("mean", "cov").alias("state"), EVENT_TIME
+            state = _scalar_gaussian("mean", "cov")
+        elif boundary == "nd":
+            n = int(self.get("stateSize"))
+            state = F.struct(
+                F.col("mean").alias("mean"),
+                F.struct(
+                    F.lit(n).alias("numRows"),
+                    F.lit(n).alias("numCols"),
+                    F.col("cov").alias("values"),
+                ).alias("covariance"),
             )
+        else:
+            state = F.col("state")
+        df = df.select(STATE_KEY, "stateIndex", state.alias("state"), EVENT_TIME)
         return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)

@@ -17,10 +17,26 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY
-from artan_spark.operators.kalman import _COL_PARAMS, KalmanBase, _row_mat, _row_vec
+from artan_spark.operators.kalman import (
+    _COL_PARAMS,
+    KalmanBase,
+    _row_mat,
+    _row_vec,
+    _scalar_gaussian,
+)
+from artan_spark.operators.vectorized import (
+    supports_scan,
+    supports_scan_smoother,
+    supports_vectorized,
+    supports_vectorized_smoother,
+    vectorized_nd_smoother_scan_fold_factory,
+    vectorized_scalar_smoother_scan_fold_factory,
+    vectorized_smoother_fold_factory,
+)
 from artan_spark.types import (
     GAUSSIAN,
     MATRIX,
@@ -65,7 +81,8 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
-# flat boundary schema for the scalar fast path (see kalman._FLAT_OUT_SCHEMA)
+# flat boundary schema for the scalar fast path (see
+# vectorized.VFLAT_SCALAR_OUT_SCHEMA)
 _FLAT_OUT_SCHEMA = StructType(
     [
         StructField(STATE_KEY, StringType()),
@@ -171,13 +188,17 @@ def _scalar_smoother_fold_factory(c: dict):
     return fold
 
 
-def _smoother_fold_factory(c: dict):
-    if (
+def _is_scalar_smoother(c: dict) -> bool:
+    return (
         c["stateSize"] == 1
         and c["measurementSize"] == 1
         and not c.get("perRowCols")
         and c.get("control") is None
-    ):
+    )
+
+
+def _smoother_fold_factory(c: dict):
+    if _is_scalar_smoother(c):
         return _scalar_smoother_fold_factory(c)
     lag = c["fixedLag"]
     n_state = c["stateSize"]
@@ -273,14 +294,6 @@ class LinearKalmanSmoother(KalmanBase):
         c["hasInitDistCol"] = bool(self.get("initialStateDistributionCol"))
         return c
 
-    def _supportsVectorized(self, c: dict) -> bool:
-        from artan_spark.operators.vectorized import (
-            supports_vectorized,
-            supports_vectorized_smoother,
-        )
-
-        return supports_vectorized(c) and supports_vectorized_smoother(c)
-
     def _scanEligible(self, c):
         # SCALAR shape only: the scalar scan smoother wins or ties on every
         # measured (K, T) shape (0.33 vs 0.45 s even at K=2048/T=97; 3.6x
@@ -288,73 +301,35 @@ class LinearKalmanSmoother(KalmanBase):
         # its forward pass is the n-D matrix scan, which only wins on
         # single-hot-key batches (K=1/T=100k: 2.4x) and loses 4-7x on
         # many-key shapes (K>=32: 0.15-0.28x).
-        from artan_spark.operators.vectorized import supports_scan
+        return supports_scan(c) and _is_scalar_smoother(c)
 
-        return supports_scan(c) and self._scalarFold()
-
-    def _vectorizedTransform(self, df, engine: str = "sequential"):
-        """Salted multi-key smoother fold (vectorized.py): same flat output
-        schemas as the sequential smoother, so _shapeOutput is shared.
-        The scan engine (auto-selected on the scalar constant-model shape,
-        or forced via ``foldEngine="scan"``) swaps in the parallel-scan
-        forward pass + anchor-vectorized backward window (rows-per-key no
-        longer bounds wall-clock; ~1e-12 relative parity,
-        tests/test_scan_engine.py)."""
-        from artan_spark.operators.vectorized import (
-            flat_input_projection,
-            supports_scan,
-            supports_scan_smoother,
-            vectorized_nd_smoother_scan_fold_factory,
-            vectorized_scalar_smoother_scan_fold_factory,
-            vectorized_smoother_fold_factory,
-        )
-
-        keyed = self._keyed(df)
-        constants = self._constants()
-        # flat-primitive measurement columns across the Arrow boundary
-        # (vectorized.flat_input_projection)
-        keyed = flat_input_projection(
-            keyed, self.get("measurementSize"), self.get("stateSize")
-        )
+    def _bucketedFold(self, c: dict, engine: str):
+        """Salted multi-key smoother folds (vectorized.py) emit the same
+        boundary as the sequential smoother. The scan engine swaps in the
+        parallel-scan forward pass + anchor-vectorized backward window
+        (~1e-12 relative parity, tests/test_scan_engine.py)."""
+        boundary = self._foldBoundary(c)
         if engine == "scan":
-            if supports_scan(constants) and self._scalarFold():
-                factory = vectorized_scalar_smoother_scan_fold_factory
-            elif supports_scan_smoother(constants):
-                factory = vectorized_nd_smoother_scan_fold_factory
-            else:
-                raise ValueError(
-                    "foldEngine='scan' requires a constant-model smoother "
-                    "shape with fadingFactor=1 (no control or per-row "
-                    "columns) — use the sequential engine for this "
-                    "configuration"
-                )
-        else:
-            factory = vectorized_smoother_fold_factory
-        cell: list = []
+            if supports_scan(c) and boundary == "scalar":
+                return vectorized_scalar_smoother_scan_fold_factory, boundary
+            if supports_scan_smoother(c):
+                return vectorized_nd_smoother_scan_fold_factory, boundary
+            raise ValueError(
+                "foldEngine='scan' requires a constant-model smoother "
+                "shape with fadingFactor=1 (no control or per-row "
+                "columns) — use the sequential engine for this "
+                "configuration"
+            )
+        if supports_vectorized(c) and supports_vectorized_smoother(c):
+            return vectorized_smoother_fold_factory, boundary
+        return None
 
-        def fn(pdf):
-            if not cell:
-                cell.append(factory(constants))
-            cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
-            pdf = pdf.sort_values(cols, kind="stable", na_position="first")
-            out, _ = cell[0](pdf, None)
-            return out
+    def _foldBoundary(self, c: dict) -> str:
+        return "scalar" if _is_scalar_smoother(c) else "own"
 
-        salted = self._saltedKeys(df, keyed)
-        res = salted.groupBy("__salt__").applyInPandas(fn, self._outSchema())
-        return self._shapeOutput(res)
-
-    def _scalarFold(self) -> bool:
-        c = super()._constants()
-        return (
-            c["stateSize"] == 1
-            and c["measurementSize"] == 1
-            and not c.get("perRowCols")
-            and c.get("control") is None
-        )
-
-    def _outSchema(self):
-        return _FLAT_OUT_SCHEMA if self._scalarFold() else _OUT_SCHEMA
+    def _outSchema(self, boundary: str | None = None):
+        boundary = boundary or self._foldBoundary(self._constants())
+        return _FLAT_OUT_SCHEMA if boundary == "scalar" else _OUT_SCHEMA
 
     def _stateSchema(self):
         return _STATE_SCHEMA
@@ -400,12 +375,8 @@ class LinearKalmanSmoother(KalmanBase):
             "queue": queue,
         }
 
-    def _shapeOutput(self, df):
-        from pyspark.sql import functions as F
-
-        from artan_spark.operators.kalman import _scalar_gaussian
-
-        if self._scalarFold():
+    def _shapeOutput(self, df, boundary: str | None = None):
+        if (boundary or self._foldBoundary(self._constants())) == "scalar":
             df = df.select(
                 STATE_KEY,
                 "stateIndex",

@@ -30,8 +30,6 @@ import pandas as pd
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, empty_pdf
 from artan_spark.types import (
-    VECTOR,
-    ArrayType,
     DoubleType,
     LongType,
     StringType,
@@ -42,27 +40,9 @@ from artan_spark.types import (
 
 _LOG2PI = math.log(2.0 * math.pi)
 
-# array-flat boundary schema (cheap to serialize; structs reassembled JVM-side)
-VFLAT_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-        StructField("mean", VECTOR),
-        StructField("cov", ArrayType(DoubleType())),  # column-major
-        StructField("res", VECTOR, True),
-        StructField("resCov", ArrayType(DoubleType()), True),
-        StructField(EVENT_TIME, TimestampType(), True),
-        StructField("loglikelihood", DoubleType(), True),
-        StructField("mahalanobis", DoubleType(), True),
-        StructField("slidingLikelihood", DoubleType(), True),
-    ]
-)
-
-
-# 1-D flat-primitive boundary schema for the scalar LKF fast path: doubles
-# instead of 1-element arrays kill the per-cell Arrow list overhead (the same
-# trick as the sequential scalar fold's _FLAT_OUT_SCHEMA, kalman.py:84)
+# 1-D flat-primitive boundary schema of every scalar LKF/UKF/CKF fold, the
+# sequential scalar fold included: doubles instead of 1-element arrays kill
+# the per-cell Arrow list overhead
 VFLAT_SCALAR_OUT_SCHEMA = StructType(
     [
         StructField(STATE_KEY, StringType()),
@@ -314,7 +294,7 @@ def cells_not_none(cells) -> np.ndarray:
 
 # -- flat-primitive input projections ---------------------------------------
 #
-# The input-side twin of VFLAT_OUT_SCHEMA / VFLAT_SCALAR_OUT_SCHEMA: an
+# The input-side twin of VFLAT_SCALAR_OUT_SCHEMA / vflat_nd_schema: an
 # array<double> or matrix-struct column crosses Arrow->pandas as one Python
 # object per row (~1-2 us/row to materialize + another ~1 us/row for the fold
 # to read), while the same doubles projected JVM-side into plain double
@@ -623,8 +603,8 @@ def vectorized_rls_fold_factory(c: dict):
     fold (rls.py _scalar_rls_fold_factory) — bit-identical results; n-D
     batches the linalg.rls_update rank-1 recursion with einsum (~ulp).
     Emits the flat scalar columns for 1-D (rls.py _FLAT_OUT_SCHEMA) and
-    (mean, cov) arrays for n-D (rls.py reassembles the GAUSSIAN struct
-    JVM-side)."""
+    (mean, cov) arrays for n-D (rls.py _ND_OUT_SCHEMA); rls.py reassembles
+    the state struct JVM-side."""
     lam = float(c["forgettingFactor"])
     n = c["stateSize"]
     scalar = n == 1
@@ -2123,7 +2103,7 @@ def vectorized_lkf_scan_fold_factory(c: dict):
     (N,n,n) solves/matmuls replace the O(rows-per-key) Python loop;
     covers the per-row-measurementModel OLS regression shape
     (lkf_ols_multikey). Output contract mirrors the time-synchronous
-    general fold (VFLAT_OUT_SCHEMA); parity ~1e-9 relative."""
+    general fold (vflat_nd_schema); parity ~1e-9 relative."""
     n = c["stateSize"]
     mdim = c["measurementSize"]
     F_ = c["processModel"]

@@ -41,6 +41,21 @@ GAUSSIAN = StructType(
     ]
 )
 
+# GAUSSIAN as the estimation operators emit it: the JVM-side reassembly
+# builds the arrays with F.array over nullable double columns, so their
+# elements are nullable; every engine's output carries this exact type.
+_DOUBLES = ArrayType(DoubleType())
+GAUSSIAN_OUT = StructType(
+    [
+        StructField("mean", _DOUBLES, False),
+        StructField(
+            "covariance",
+            StructType(MATRIX.fields[:2] + [StructField("values", _DOUBLES, False)]),
+            False,
+        ),
+    ]
+)
+
 
 def mat_to_np(m) -> np.ndarray:
     """Matrix struct (Row / dict / (r, c, values) tuple) -> 2-D numpy array.
@@ -95,6 +110,7 @@ __all__ = [
     "VECTOR",
     "MATRIX",
     "GAUSSIAN",
+    "GAUSSIAN_OUT",
     "mat_to_np",
     "np_to_mat",
     "vec_to_np",

@@ -520,8 +520,9 @@ def _operator_throughput(spark) -> dict[str, int]:
         if n_keys >= 1000:
             # the many-small-models shape: per-group call overhead dominates
             # at ~100 rows/group; the vectorized multi-key fold amortizes it.
-            # Buckets PINNED to the sweep optimum (base.py:_saltedKeys) so the
-            # recorded number measures the fold, not the auto heuristic. With
+            # Buckets PINNED to the sweep optimum (base.py resolve_engine
+            # sizes them otherwise) so the recorded number measures the
+            # fold, not the auto heuristic. With
             # the scalar 1-D fast path (vectorized.py
             # vectorized_scalar_lkf_fold_factory) the fold is cheap enough
             # that task parallelism wins: sweep (median-of-5, quiet machine)

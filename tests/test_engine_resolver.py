@@ -1,0 +1,275 @@
+"""Spark-free truth table for ``resolve_engine``: which engine, batched flag,
+fold factory and boundary kind every (operator shape, foldEngine,
+vectorizedBatch, batch/stream) case gets, and which cases raise.
+
+The table in ``data/engine_truth_table.json`` was recorded by running each
+case through ``transform()`` on the code before the resolver existed (one
+engine switch per operator). ``tools/capture_engine_table.py`` rebuilds it
+from a live Spark session; the truth-table tests need no JVM. The schema
+test at the end runs each engine's plan on the shared local session."""
+
+import json
+import os
+
+import numpy as np
+import pytest
+
+from artan_spark.operators import (
+    BernoulliMixture,
+    CubatureKalmanFilter,
+    ExtendedKalmanFilter,
+    LeastMeanSquaresFilter,
+    LinearKalmanFilter,
+    LinearKalmanSmoother,
+    MultivariateGaussianMixture,
+    PoissonMixture,
+    RecursiveLeastSquaresFilter,
+    UnscentedKalmanFilter,
+)
+
+TABLE = os.path.join(os.path.dirname(__file__), "data", "engine_truth_table.json")
+
+F2 = np.array([[1.0, 1.0], [0.0, 1.0]])
+H2 = np.array([[1.0, 0.0]])
+
+
+def _batched_fx(m, _model):
+    return m
+
+
+def _batched_hx(m, _model):
+    return m[:, :1]
+
+
+def _kalman(cls, n=1, m=1, **params):
+    op = cls(n, m).setStateKeyCol("stateKey").setEventTimeCol("ts")
+    if n == 2:
+        op.setProcessModel(F2).setMeasurementModel(H2)
+    for k, v in params.items():
+        op._set(k, v)
+    return op
+
+
+def _smoother(n=1, **params):
+    return _kalman(LinearKalmanSmoother, n, 1, fixedLag=3, **params)
+
+
+def _rls(n=1, **params):
+    op = RecursiveLeastSquaresFilter(n).setStateKeyCol("stateKey").setEventTimeCol("ts")
+    for k, v in params.items():
+        op._set(k, v)
+    return op
+
+
+def _lms(init=None, **params):
+    op = LeastMeanSquaresFilter().setStateKeyCol("stateKey").setEventTimeCol("ts")
+    if init is not None:
+        op.setInitialEstimate(np.array(init, dtype=np.float64))
+    for k, v in params.items():
+        op._set(k, v)
+    return op
+
+
+def _gmm(**params):
+    op = (
+        MultivariateGaussianMixture()
+        .setInitialMeans([[0.0], [5.0]])
+        .setInitialCovariances([[1.0], [1.0]])
+        .setStateKeyCol("stateKey")
+        .setEventTimeCol("ts")
+    )
+    for k, v in params.items():
+        op._set(k, v)
+    return op
+
+
+def _scalar_mixture(cls, setter, init):
+    op = getattr(cls(), setter)(init).setSampleCol("sampled")
+    return op.setStateKeyCol("stateKey").setEventTimeCol("ts")
+
+
+# operator shapes; each builds a fresh operator with foldEngine /
+# vectorizedBatch left at their defaults
+CASES = {
+    "lkf1": lambda: _kalman(LinearKalmanFilter),
+    "lkf1_fading": lambda: _kalman(LinearKalmanFilter, fadingFactor=1.1),
+    "lkf1_sll": lambda: _kalman(
+        LinearKalmanFilter, calculateSlidingLikelihood=True, slidingLikelihoodWindow=3
+    ),
+    "lkf1_mmae": lambda: _kalman(
+        LinearKalmanFilter, multipleModelAdaptiveEstimationEnabled=True
+    ),
+    "lkf1_rowH": lambda: _kalman(LinearKalmanFilter, measurementModelCol="H1"),
+    "lkf1_control": lambda: _kalman(
+        LinearKalmanFilter, control=np.array([1.0]), controlFunction=np.eye(1)
+    ),
+    "lkf1_msp": lambda: _kalman(LinearKalmanFilter, multiStepPredict=2),
+    "lkf1_osm": lambda: _kalman(LinearKalmanFilter, outputSystemMatrices=True),
+    "lkf1_initdist": lambda: _kalman(
+        LinearKalmanFilter, initialStateDistributionCol="initState"
+    ),
+    "lkf2": lambda: _kalman(LinearKalmanFilter, 2),
+    "lkf2_rowH": lambda: _kalman(LinearKalmanFilter, 2, measurementModelCol="H2"),
+    "lkf2_fading": lambda: _kalman(LinearKalmanFilter, 2, fadingFactor=1.1),
+    "lkf2_sll": lambda: _kalman(LinearKalmanFilter, 2, calculateSlidingLikelihood=True),
+    "ekf1": lambda: _kalman(ExtendedKalmanFilter),
+    "ekf2_vecfn": lambda: _kalman(
+        ExtendedKalmanFilter, 2, processFunction=_batched_fx, vectorizedFunctions=True
+    ),
+    "ekf2_fn": lambda: _kalman(ExtendedKalmanFilter, 2, processFunction=_batched_fx),
+    "ukf1": lambda: _kalman(UnscentedKalmanFilter),
+    "ukf2": lambda: _kalman(UnscentedKalmanFilter, 2),
+    "ukf1_adaptive": lambda: _kalman(UnscentedKalmanFilter, adaptiveProcessNoise=True),
+    "ukf2_vecfn": lambda: _kalman(
+        UnscentedKalmanFilter,
+        2,
+        measurementFunction=_batched_hx,
+        vectorizedFunctions=True,
+    ),
+    "ckf1": lambda: _kalman(CubatureKalmanFilter),
+    "ckf2": lambda: _kalman(CubatureKalmanFilter, 2),
+    "sm1": lambda: _smoother(),
+    "sm1_fading": lambda: _smoother(fadingFactor=1.1),
+    "sm1_initdist": lambda: _smoother(initialStateDistributionCol="initState"),
+    "sm1_control": lambda: _smoother(control=np.array([1.0]), controlFunction=np.eye(1)),
+    "sm2": lambda: _smoother(2),
+    "sm2_rowH": lambda: _smoother(2, measurementModelCol="H2"),
+    "rls1": lambda: _rls(1),
+    "rls2": lambda: _rls(2),
+    "rls1_initcol": lambda: _rls(1, initialStateMeanCol="initMean"),
+    "lms_unknown": lambda: _lms(),
+    "lms1": lambda: _lms([0.0]),
+    "lms2": lambda: _lms([0.0, 0.0]),
+    "lms1_initcol": lambda: _lms([0.0], initialStateCol="initMean"),
+    "gmm": lambda: _gmm(),
+    "gmm_rowstep": lambda: _gmm(stepSizeCol="stepSize"),
+    "poisson": lambda: _scalar_mixture(PoissonMixture, "setInitialRates", [1.0, 4.0]),
+    "bernoulli": lambda: _scalar_mixture(
+        BernoulliMixture, "setInitialProbabilities", [0.2, 0.8]
+    ),
+}
+
+FOLD_ENGINES = ("auto", "sequential", "scan", "distributedScan")
+
+
+def case_keys():
+    """(case, foldEngine, vectorizedBatch, mode) for every table row; the
+    mixtures have no foldEngine param and get None."""
+    for name, build in CASES.items():
+        engines = FOLD_ENGINES if "foldEngine" in build()._paramMap else (None,)
+        for fe in engines:
+            for vb in (False, True):
+                for mode in ("batch", "stream"):
+                    yield name, fe, vb, mode
+
+
+def configured(name, fe, vb):
+    op = CASES[name]()
+    if fe is not None:
+        op._set("foldEngine", fe)
+    op._set("vectorizedBatch", vb)
+    return op
+
+
+def row_id(name, fe, vb, mode):
+    return f"{name}|{fe}|{int(vb)}|{mode}"
+
+
+def _load_table():
+    with open(TABLE) as f:
+        return json.load(f)
+
+
+def test_table_covers_every_case():
+    assert sorted(_load_table()) == sorted(row_id(*k) for k in case_keys())
+
+
+def transform_constants(op):
+    """The constants transform() resolves against: MMAE forces sliding
+    likelihood on for the duration of the call."""
+    if op._paramMap.get("multipleModelAdaptiveEstimationEnabled"):
+        op._set("calculateSlidingLikelihood", True)
+    return op._constants()
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_resolver_matches_recorded_table(name):
+    from artan_spark.operators.base import resolve_engine
+
+    table = _load_table()
+    for key in case_keys():
+        if key[0] != name:
+            continue
+        want = table[row_id(*key)]
+        op = configured(*key[:3])
+        streaming = key[3] == "stream"
+        if "error" in want:
+            with pytest.raises(ValueError) as exc:
+                resolve_engine(op, transform_constants(op), streaming)
+            assert str(exc.value) == want["error"], row_id(*key)
+            continue
+        plan = resolve_engine(op, transform_constants(op), streaming)
+        got = {
+            "engine": plan.engine,
+            "vectorized": plan.vectorized,
+            "factory": plan.factory.__name__,
+            "boundary": plan.boundary,
+        }
+        assert got == want, row_id(*key)
+        assert plan.reason, row_id(*key)
+
+
+# ---- one public schema per operator, whichever engine ran ----------------
+
+SCHEMA_CASES = (
+    "lkf1", "lkf2", "ekf1", "ukf1", "ukf2", "ckf1", "sm1", "sm2",
+    "rls1", "rls2", "lms1", "lms2", "gmm", "poisson", "bernoulli",
+)
+# distributedScan runs its first pass at transform time. Its scalar,
+# smoother, RLS and LMS transforms reassemble through the operator's own
+# _shapeOutput with the sequential boundary; only the n-D LKF has its own
+# reassembly (distscan._shape_nd_output)
+DIST_CASES = {"lkf2"}
+
+
+@pytest.fixture(scope="module")
+def frame(spark):
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (
+            f"k{i % 3}",
+            t0 + dt.timedelta(seconds=i),
+            [float(i)],
+            float(i),
+            [1.0],
+            [float(i)],
+            float(i % 2),
+        )
+        for i in range(24)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "stateKey string, ts timestamp, measurement array<double>, label double, "
+        "features array<double>, sample array<double>, sampled double",
+    )
+
+
+@pytest.mark.parametrize("name", SCHEMA_CASES)
+def test_every_engine_emits_the_sequential_schema(spark, frame, name):
+    has_fe = "foldEngine" in CASES[name]()._paramMap
+    seq = configured(name, "sequential" if has_fe else None, False)
+    want = seq.transform(frame).schema
+    ran = {(seq._lastFoldEngine, seq._lastFoldVectorized)}
+    engines = ("sequential", "scan") + (("distributedScan",) if name in DIST_CASES else ())
+    for fe in engines if has_fe else (None,):
+        op = configured(name, fe, True)
+        op._set("vectorizedBuckets", 2)  # no bucket-sizing job
+        try:
+            out = op.transform(frame)
+        except ValueError:
+            continue  # the shape has no such engine
+        ran.add((op._lastFoldEngine, op._lastFoldVectorized))
+        assert out.schema == want, (name, fe)
+    assert len(ran) > 1, ran  # at least one batched engine was compared

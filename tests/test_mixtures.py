@@ -224,8 +224,11 @@ def test_vectorized_mixture_matches_sequential(spark, family):
             .setVectorizedBatch(vectorized)
         )
 
-    seq = mk(False).transform(df).collect()
-    vec = mk(True).transform(df).collect()
+    seq_op, vec_op = mk(False), mk(True)
+    seq = seq_op.transform(df).collect()
+    vec = vec_op.transform(df).collect()
+    assert (seq_op._lastFoldEngine, seq_op._lastFoldVectorized) == ("sequential", False)
+    assert (vec_op._lastFoldEngine, vec_op._lastFoldVectorized) == ("sequential", True)
     assert len(seq) == len(vec) > 0
     key_fn = lambda r: (r.stateKey, r.stateIndex)  # noqa: E731
     for rs, rv in zip(sorted(seq, key=key_fn), sorted(vec, key=key_fn)):

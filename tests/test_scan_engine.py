@@ -554,6 +554,7 @@ def test_auto_lms_requires_known_scalar_shape(spark):
     unknown = LeastMeanSquaresFilter().setStateKeyCol("stateKey")
     unknown.transform(df).count()
     assert unknown._lastFoldEngine == "sequential"
+    assert unknown._lastFoldVectorized is False
     known = (
         LeastMeanSquaresFilter()
         .setStateKeyCol("stateKey")
@@ -561,6 +562,7 @@ def test_auto_lms_requires_known_scalar_shape(spark):
     )
     known.transform(df).count()
     assert known._lastFoldEngine == "scan"
+    assert known._lastFoldVectorized is True
 
 
 def test_auto_rls_selects_scan(spark):
@@ -573,6 +575,11 @@ def test_auto_rls_selects_scan(spark):
     rls = RecursiveLeastSquaresFilter(1).setStateKeyCol("stateKey")
     rls.transform(df).count()
     assert rls._lastFoldEngine == "scan"
+    assert rls._lastFoldVectorized is True
+    seq = RecursiveLeastSquaresFilter(1).setStateKeyCol("stateKey")
+    seq._set("foldEngine", "sequential")
+    seq.transform(df).count()
+    assert (seq._lastFoldEngine, seq._lastFoldVectorized) == ("sequential", False)
 
 
 # ---- n-D smoother scan ----------------------------------------------------
