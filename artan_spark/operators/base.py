@@ -19,11 +19,20 @@ Both paths share ONE fold function so batch == streaming bit-for-bit (the
 reference asserts exact Row equality between the two; identical float op
 order requires a shared fold — SURVEY §7.3.2).
 
-Scale notes (100 TB design): the only shuffle is ``groupBy(stateKey)``; state
-is bounded by #keys × state size (README.md:19-25 of the reference). Skewed
-keys are the risk — mitigate upstream by salting the key space; the fold is
-O(rows-in-group) with numpy inner steps, constants are closure-captured so
-per-row Arrow traffic carries only true per-row columns.
+Batch engines (``resolve_engine``): the per-key fold above, or ONE salted
+multi-key bucketed transform (``_bucketedTransform``): ``groupBy(crc32(stateKey)
+% buckets)`` folds many keys per ``applyInPandas`` group time-synchronously
+or by parallel scan (operators/vectorized.py), so wall-clock no longer
+scales with one Python call per key; the distributed scan
+(operators/distscan.py) splits a hot key across tasks by event-time chunk.
+State is bounded by #keys × state size (README.md:19-25 of the reference);
+constants are closure-captured so per-row Arrow traffic carries only true
+per-row columns.
+
+Every engine hands back its operator's one flat boundary frame
+(operators/codec.py: float64 blocks, no array or struct cells), which
+``_shapeOutput`` reassembles into the public schema JVM-side, so every
+engine emits the same public schema.
 """
 
 from __future__ import annotations
@@ -83,10 +92,6 @@ class EnginePlan(NamedTuple):
     vectorized: bool  # a batched fold runs (recorded as _lastFoldVectorized)
     # fold factory; for distributedScan the distributed transform itself
     factory: Callable
-    # layout of the fold's output frame: "scalar" (flat doubles), "nd"
-    # (flat n-D), "mixture" (flat mixture columns) or "own" (the
-    # operator's sequential schema)
-    boundary: str
     reason: str
     buckets: int | None = None  # salt buckets; sized only when keyed is given
 
@@ -133,8 +138,7 @@ def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None
         )
     if requested == "distributedScan":
         return EnginePlan(
-            requested, True, op._distributedTransform(constants), "own",
-            "foldEngine='distributedScan'",
+            requested, True, op._distributedTransform(constants), "foldEngine='distributedScan'"
         )
     engine, reason = requested, f"foldEngine={requested!r}"
     if requested == "auto":
@@ -145,14 +149,12 @@ def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None
         else:
             engine, reason = "sequential", "auto: shape not scan-eligible"
     if not streaming and (engine == "scan" or batched):
-        picked = op._bucketedFold(constants, engine)
-        if picked is not None:
+        factory = op._bucketedFold(constants, engine)
+        if factory is not None:
             buckets = _bucket_count(op, keyed) if keyed is not None else None
-            return EnginePlan(engine, True, *picked, f"{reason}; salted buckets", buckets)
+            return EnginePlan(engine, True, factory, f"{reason}; salted buckets", buckets)
         reason += "; no batched fold for this shape"
-    return EnginePlan(
-        "sequential", False, op._foldFactory(), op._foldBoundary(constants), reason
-    )
+    return EnginePlan("sequential", False, op._foldFactory(), reason)
 
 
 def _bucket_count(op, keyed: DataFrame) -> int:
@@ -232,14 +234,11 @@ class StatefulTransformer(HasParams):
         return False
 
     def _bucketedFold(self, c: dict, engine: str):
-        """(fold factory, boundary kind) of the salted multi-key fold for
-        ``engine`` ("scan" or "sequential"), or None when the shape has
-        none; raises ValueError for a forced scan it cannot run."""
+        """Fold factory of the salted multi-key fold for ``engine``
+        ("scan" or "sequential"), or None when the shape has none; raises
+        ValueError for a forced scan it cannot run. It emits the same
+        frame as the sequential fold."""
         return None
-
-    def _foldBoundary(self, c: dict) -> str:
-        """Boundary kind of the sequential fold's output frame."""
-        return "own"
 
     # -- shared plumbing ----------------------------------------------------
 
@@ -387,8 +386,7 @@ class StatefulTransformer(HasParams):
         keys hash into ``plan.buckets`` groups, so ONE ``applyInPandas``
         call folds many keys time-synchronously (operators/vectorized.py);
         each bucket is stably sorted by (key, event time) before the fold,
-        and the operator's reassembly turns the ``plan.boundary`` frame
-        into its public schema."""
+        which emits the operator's one boundary frame."""
         salted = self._bucketInput(keyed).withColumn(
             "__salt__", F.pmod(F.crc32(F.col(STATE_KEY).cast("binary")), F.lit(plan.buckets))
         )
@@ -402,8 +400,8 @@ class StatefulTransformer(HasParams):
             out, _ = cell[0](pdf, None)
             return out
 
-        res = salted.groupBy("__salt__").applyInPandas(fn, self._outSchema(plan.boundary))
-        return self._shapeOutput(res, plan.boundary)
+        res = salted.groupBy("__salt__").applyInPandas(fn, self._outSchema())
+        return self._shapeOutput(res)
 
     def _bucketInput(self, keyed: DataFrame) -> DataFrame:
         """Projection of the keyed frame the bucketed folds read."""
@@ -552,7 +550,6 @@ class StatefulTransformer(HasParams):
             eventTimeColumnName=ev_out,
         )
 
-    def _shapeOutput(self, df: DataFrame, boundary: str | None = None) -> DataFrame:
-        """Reassemble a fold's output frame of the given boundary kind
-        (default: the sequential fold's) into the public schema."""
+    def _shapeOutput(self, df: DataFrame) -> DataFrame:
+        """Reassemble the fold's output frame into the public schema."""
         return df

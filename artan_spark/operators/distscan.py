@@ -64,12 +64,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, empty_pdf
+from artan_spark.operators.codec import kalman_layout, rls_layout, smoother_layout
 from artan_spark.operators.vectorized import (
-    VFLAT_SCALAR_OUT_SCHEMA,
+    LMS_COLUMNS,
     _scalar_combine,
     _scalar_generic_elements,
     _scalar_scan_emit,
     _scalar_scan_forward,
+    _lms_frame,
     _scalar_segmented_scan,
     extract_scalar_measurements,
     supports_scan,
@@ -186,7 +188,7 @@ def distributed_scan_transform(op, df: DataFrame) -> DataFrame:
     p0 = float(c["initialStateCovariance"][0, 0])
     compute_ll = bool(c["calculateLoglikelihood"])
     compute_maha = bool(c["calculateMahalanobis"])
-    names = [fld.name for fld in VFLAT_SCALAR_OUT_SCHEMA.fields]
+    layout = kalman_layout(c)
 
     chunked = _chunked_frame(op, df)
 
@@ -217,7 +219,7 @@ def distributed_scan_transform(op, df: DataFrame) -> DataFrame:
     def scan_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names)
+            return layout.frame(0)
         m_in, p_in, off = seeds_bc.value[
             (pdf[STATE_KEY].values[0], int(pdf[CHUNK].values[0]))
         ]
@@ -229,10 +231,10 @@ def distributed_scan_transform(op, df: DataFrame) -> DataFrame:
         return _scalar_scan_emit(
             fwd, N, f, q, h, rr,
             compute_ll=compute_ll, compute_maha=compute_maha,
-            compute_sll=False, ll_window=1, names=names, idx_offset=off,
+            compute_sll=False, ll_window=1, layout=layout, idx_offset=off,
         )
 
-    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, VFLAT_SCALAR_OUT_SCHEMA)
+    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, layout.schema)
     return op._shapeOutput(res)
 
 
@@ -383,15 +385,12 @@ def distributed_rls_transform(op, df: DataFrame) -> DataFrame:
             )
             off += r["n"]
     seeds_bc = df.sparkSession.sparkContext.broadcast(seeds)
-
-    from artan_spark.operators.rls import _FLAT_OUT_SCHEMA as RLS_FLAT
-
-    names = [fld.name for fld in RLS_FLAT.fields]
+    layout = rls_layout(c)
 
     def scan_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names)
+            return layout.frame(0)
         S_in, aI_in, aB_in, off = seeds_bc.value[
             (pdf[STATE_KEY].values[0], int(pdf[CHUNK].values[0]))
         ]
@@ -408,19 +407,16 @@ def distributed_rls_transform(op, df: DataFrame) -> DataFrame:
         aB_t = S * aB_in + aB
         info = S_t * (1.0 / p0) + aI_t
         beta = S_t * (m0 / p0) + aB_t
-        ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-        return pd.DataFrame(
-            {
-                STATE_KEY: pdf[STATE_KEY].to_numpy(),
-                "stateIndex": np.arange(1, N + 1, dtype=np.int64) + off,
-                "mean": beta / info,
-                "cov": 1.0 / info,
-                EVENT_TIME: ev if ev is not None else [None] * N,
-            },
-            columns=names,
+        return layout.frame(
+            N,
+            stateKey=pdf[STATE_KEY].to_numpy(),
+            stateIndex=np.arange(1, N + 1, dtype=np.int64) + off,
+            m=beta / info,
+            c=1.0 / info,
+            eventTime=pdf[EVENT_TIME].values,
         )
 
-    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, RLS_FLAT)
+    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, layout.schema)
     return op._shapeOutput(res)
 
 
@@ -481,14 +477,10 @@ def distributed_lms_transform(op, df: DataFrame) -> DataFrame:
             off += r["n"]
     seeds_bc = df.sparkSession.sparkContext.broadcast(seeds)
 
-    from artan_spark.operators.lms import _OUT_SCHEMA as LMS_OUT
-
-    names = [fld.name for fld in LMS_OUT.fields]
-
     def scan_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names)
+            return empty_pdf(LMS_COLUMNS)
         S_in, a_in, off = seeds_bc.value[
             (pdf[STATE_KEY].values[0], int(pdf[CHUNK].values[0]))
         ]
@@ -498,20 +490,15 @@ def distributed_lms_transform(op, df: DataFrame) -> DataFrame:
         S_t = S * S_in
         a_t = S * a_in + a
         state = S_t * m0 + a_t
-        ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-        return pd.DataFrame(
-            {
-                STATE_KEY: pdf[STATE_KEY].to_numpy(),
-                "stateIndex": np.arange(1, N + 1, dtype=np.int64) + off,
-                # 1-element vector cells for the public (state VECTOR) schema
-                "state": list(state[:, None]),
-                EVENT_TIME: ev if ev is not None else [None] * N,
-            },
-            columns=names,
+        return _lms_frame(
+            pdf[STATE_KEY].to_numpy(),
+            np.arange(1, N + 1, dtype=np.int64) + off,
+            state[:, None],
+            pdf[EVENT_TIME].values,
         )
 
-    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, LMS_OUT)
-    return res if op.get("eventTimeCol") else res.drop(EVENT_TIME)
+    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, op._outSchema())
+    return op._shapeOutput(res)
 
 
 # ---------------------------------------------------------------------------
@@ -581,8 +568,6 @@ def distributed_nd_scan_transform(op, df: DataFrame) -> DataFrame:
         _nd_generic_elements,
         _nd_scan_emit,
         _nd_scan_forward,
-        vflat_nd_fields,
-        vflat_nd_schema,
     )
     from artan_spark.types import ArrayType, mat_to_np
 
@@ -687,13 +672,12 @@ def distributed_nd_scan_transform(op, df: DataFrame) -> DataFrame:
             m, p = comb[1][0], comb[2][0]
             off += r["n"]
     seeds_bc = df.sparkSession.sparkContext.broadcast(seeds)
-
-    names = vflat_nd_fields(n, mdim)
+    layout = kalman_layout(c)
 
     def scan_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names)
+            return layout.frame(0)
         m_in, p_in, off = seeds_bc.value[
             (pdf[STATE_KEY].values[0], int(pdf[CHUNK].values[0]))
         ]
@@ -704,22 +688,11 @@ def distributed_nd_scan_transform(op, df: DataFrame) -> DataFrame:
         )
         return _nd_scan_emit(
             fwd, N, n, mdim, F_, Q, R, H_const,
-            compute_ll=compute_ll, compute_maha=compute_maha, idx_offset=off,
+            compute_ll=compute_ll, compute_maha=compute_maha, layout=layout, idx_offset=off,
         )
 
-    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, vflat_nd_schema(n, mdim))
-    return _shape_nd_output(op, res)
-
-
-def _shape_nd_output(op, res: DataFrame) -> DataFrame:
-    """Flat n-D boundary frame (vflat_nd_fields) -> public struct schema
-    (same JVM-side projection as the n-D branch of
-    KalmanBase._shapeOutput)."""
-    from artan_spark.operators.vectorized import nd_flat_select_exprs
-
-    n, mdim = int(op.get("stateSize")), int(op.get("measurementSize"))
-    shaped = res.select(*nd_flat_select_exprs(n, mdim))
-    return op._dropDisabled(shaped)
+    res = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(scan_fn, layout.schema)
+    return op._shapeOutput(res)
 
 
 # ---------------------------------------------------------------------------
@@ -864,15 +837,12 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
         return pd.concat(frames, ignore_index=True)
 
     filtered = chunked.groupBy(STATE_KEY, CHUNK).applyInPandas(filter_fn, pass2_schema)
-
-    from artan_spark.operators.smoother import _FLAT_OUT_SCHEMA as SM_FLAT
-
-    names = [fld.name for fld in SM_FLAT.fields]
+    layout = smoother_layout(c)
 
     def backward_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names)
+            return layout.frame(0)
         pdf = pdf.sort_values("stateIndex", kind="stable")
         idx = pdf["stateIndex"].to_numpy(dtype=np.int64)
         filt_m = pdf["fm"].to_numpy(dtype=np.float64)
@@ -889,7 +859,7 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
         anchors = np.nonzero(own & (idx >= lag))[0]
         M = len(anchors)
         if M == 0:
-            return empty_pdf(names)
+            return layout.frame(0)
         total = M * lag
         o_row = np.empty(total, dtype=np.int64)
         o_step = np.empty(total, dtype=np.int64)
@@ -914,18 +884,10 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
             o_mean[w : w + M] = sm_m
             o_cov[w : w + M] = sm_p
             o_gain[w : w + M] = gj
-        return pd.DataFrame(
-            {
-                STATE_KEY: keys_arr[o_row],
-                "stateIndex": idx[o_row],
-                "stepIndex": o_step,
-                "mean": o_mean,
-                "cov": o_cov,
-                "gain": o_gain,
-                EVENT_TIME: ev[o_row],
-            },
-            columns=names,
+        return layout.frame(
+            total, stateKey=keys_arr[o_row], stateIndex=idx[o_row], stepIndex=o_step,
+            m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row],
         )
 
-    res = filtered.groupBy(STATE_KEY, "tchunk").applyInPandas(backward_fn, SM_FLAT)
+    res = filtered.groupBy(STATE_KEY, "tchunk").applyInPandas(backward_fn, layout.schema)
     return op._shapeOutput(res)

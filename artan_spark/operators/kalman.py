@@ -29,10 +29,9 @@ from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
+from artan_spark.operators.codec import kalman_layout
 from artan_spark.operators.vectorized import (
-    VFLAT_SCALAR_OUT_SCHEMA,
     flat_input_projection,
-    nd_flat_select_exprs,
     supports_scalar_sigma,
     supports_scalar_vectorized,
     supports_scan,
@@ -45,50 +44,16 @@ from artan_spark.operators.vectorized import (
     vectorized_scalar_lkf_scan_fold_factory,
     vectorized_scalar_sigma_fold_factory,
     vectorized_sigma_fold_factory,
-    vflat_nd_schema,
 )
 from artan_spark.types import (
-    GAUSSIAN,
-    MATRIX,
     VECTOR,
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
     mat_to_np,
-    np_to_gaussian,
-    np_to_mat,
     vec_to_np,
-)
-
-# general fold boundary: ARRAYS, not structs — per-row dict/struct
-# serialization from the Python worker costs multiples of the fold itself;
-# the public struct schema (state/residual GAUSSIAN, MATRIX sysmat) is
-# reassembled JVM-side in _shapeOutput from these flat arrays.
-_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-        # element nullability as nd_flat_select_exprs builds it from flat
-        # doubles, so both boundaries reassemble to the same public type
-        StructField("mean", ArrayType(DoubleType()), False),
-        StructField("cov", ArrayType(DoubleType()), False),  # column-major
-        StructField("res", ArrayType(DoubleType()), True),
-        StructField("resCov", ArrayType(DoubleType()), True),
-        StructField(EVENT_TIME, TimestampType(), True),
-        StructField("loglikelihood", DoubleType(), True),
-        StructField("mahalanobis", DoubleType(), True),
-        StructField("slidingLikelihood", DoubleType(), True),
-        # resolved per-row system matrices (KalmanBase.scala:403-418);
-        # pruned unless outputSystemMatrices is set (column-major values)
-        StructField("pmVals", ArrayType(DoubleType()), True),
-        StructField("pnVals", ArrayType(DoubleType()), True),
-        StructField("mmVals", ArrayType(DoubleType()), True),
-    ]
 )
 
 _STATE_SCHEMA = StructType(
@@ -100,16 +65,6 @@ _STATE_SCHEMA = StructType(
         StructField("adaptiveNoise", ArrayType(DoubleType()), True),
     ]
 )
-
-def _scalar_gaussian(mean_col: str, cov_col: str):
-    return F.struct(
-        F.array(F.col(mean_col)).alias("mean"),
-        F.struct(
-            F.lit(1).alias("numRows"),
-            F.lit(1).alias("numCols"),
-            F.array(F.col(cov_col)).alias("values"),
-        ).alias("covariance"),
-    )
 
 # per-row column params and their matching constant params
 _COL_PARAMS = {
@@ -165,6 +120,7 @@ def _scalar_lkf_fold_factory(c: dict):
     compute_ll = c["calculateLoglikelihood"] or c["calculateSlidingLikelihood"]
     compute_maha = c["calculateMahalanobis"]
     LOG2PI = math.log(2.0 * math.pi)
+    layout = kalman_layout(c)
 
     def fold(pdf: pd.DataFrame, state):
         nrows = len(pdf)
@@ -228,21 +184,19 @@ def _scalar_lkf_fold_factory(c: dict):
             o_mean[i] = m
             o_cov[i] = P
 
-        out = pd.DataFrame(
-            {
-                STATE_KEY: key,
-                "stateIndex": o_idx,
-                "stepIndex": 0,
-                "mean": o_mean,
-                "cov": o_cov,
-                "res": o_res,
-                "resCov": o_rescov,
-                EVENT_TIME: ev if ev is not None else None,
-                "loglikelihood": o_ll,
-                "mahalanobis": o_maha,
-                "slidingLikelihood": o_sll,
-            },
-            columns=[fld.name for fld in VFLAT_SCALAR_OUT_SCHEMA.fields],
+        out = layout.frame(
+            nrows,
+            stateKey=key,
+            stateIndex=o_idx,
+            stepIndex=0,
+            m=o_mean,
+            c=o_cov,
+            r=o_res,
+            rc=o_rescov,
+            eventTime=ev,
+            loglikelihood=o_ll,
+            mahalanobis=o_maha,
+            slidingLikelihood=o_sll,
         )
         state = {
             "idx": int(idx),
@@ -295,6 +249,9 @@ def _kalman_fold_factory(c: dict):
     ll_window = c["slidingLikelihoodWindow"]
     compute_ll = c["calculateLoglikelihood"] or c["calculateSlidingLikelihood"]
     compute_maha = c["calculateMahalanobis"]
+    mdim = c["measurementSize"]
+    emit_sysmat = c.get("outputSystemMatrices")
+    layout = kalman_layout(c)
 
     def predict(m, P, Fm, Q, B, u):
         if kind == "lkf":
@@ -366,26 +323,34 @@ def _kalman_fold_factory(c: dict):
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
         key = pdf[STATE_KEY].iloc[0] if nrows else ""
 
-        out = {f.name: [] for f in _OUT_SCHEMA.fields}
+        # one output row per input row and forecast step
+        rows = nrows * (1 + multi_step)
+        o_row = np.empty(rows, dtype=np.int64)
+        o_idx = np.empty(rows, dtype=np.int64)
+        o_step = np.empty(rows, dtype=np.int64)
+        o_mean = np.empty((rows, n_state))
+        o_cov = np.empty((rows, n_state, n_state))
+        o_res = np.full((rows, mdim), np.nan)
+        o_rescov = np.full((rows, mdim, mdim), np.nan)
+        o_ll = np.full(rows, np.nan)
+        o_maha = np.full(rows, np.nan)
+        o_sll = np.full(rows, np.nan)
+        # resolved per-row F, Q, H (KalmanBase.scala:403-418)
+        sysmats = (
+            tuple(np.empty((rows, r, n_state)) for r in (n_state, n_state, mdim))
+            if emit_sysmat
+            else None
+        )
+        w = 0
 
-        emit_sysmat = c.get("outputSystemMatrices")
-
-        def emit(idx, step, m, P, resid, ev_i, ll, maha, sll, sysmat=None):
-            out[STATE_KEY].append(key)
-            out["stateIndex"].append(idx)
-            out["stepIndex"].append(step)
-            out["mean"].append(m)
-            out["cov"].append(np.asarray(P).T.ravel())
-            out["res"].append(None if resid is None else np.asarray(resid[0]).ravel())
-            out["resCov"].append(None if resid is None else np.asarray(resid[1]).T.ravel())
-            out[EVENT_TIME].append(ev_i)
-            out["loglikelihood"].append(ll)
-            out["mahalanobis"].append(maha)
-            out["slidingLikelihood"].append(sll)
-            fm, qm, hm = sysmat if sysmat else (None, None, None)
-            out["pmVals"].append(None if fm is None else np.asarray(fm).T.ravel())
-            out["pnVals"].append(None if qm is None else np.asarray(qm).T.ravel())
-            out["mmVals"].append(None if hm is None else np.asarray(hm).T.ravel())
+        def emit(i, step, m, P, sysmat):
+            nonlocal w
+            o_row[w], o_idx[w], o_step[w] = i, state["idx"], step
+            o_mean[w], o_cov[w] = m, P
+            if sysmat:
+                for o, v in zip(sysmats, sysmat):
+                    o[w] = v
+            w += 1
 
         for i in range(nrows):
             if state is None:
@@ -415,7 +380,6 @@ def _kalman_fold_factory(c: dict):
             B = _row_mat(cols["controlFunction"], i, c["controlFunction"])
             u = _row_vec(cols["control"], i, c["control"])
             z = _row_vec(cols["measurement"], i, None)
-            ev_i = ev[i] if ev is not None else None
 
             # adaptive process noise (RAUKF) overrides the configured Q once
             # triggered (UnscentedKalmanFilter.scala:238-267)
@@ -448,14 +412,38 @@ def _kalman_fold_factory(c: dict):
             state["mean"], state["cov"] = m1, P1
 
             sysmat = (Fm, Q_eff, H) if emit_sysmat else None
-            emit(state["idx"], 0, m1, P1, resid, ev_i, ll, maha, sll, sysmat)
+            if resid is not None:
+                o_res[w], o_rescov[w] = resid
+            if ll is not None:
+                o_ll[w], o_sll[w] = ll, sll
+            if maha is not None:
+                o_maha[w] = maha
+            emit(i, 0, m1, P1, sysmat)
             # multi-step forecast: extra predicts, state untouched
             fm, fP = m1, P1
             for step in range(1, multi_step + 1):
                 fm, fP = predict(fm, fP, Fm, Q_eff, B, u)
-                emit(state["idx"], step, fm, fP, None, ev_i, None, None, None, sysmat)
+                emit(i, step, fm, fP, sysmat)
 
-        return pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields]), state
+        pm, pn, mm = sysmats or (None, None, None)
+        out = layout.frame(
+            rows,
+            stateKey=key,
+            stateIndex=o_idx,
+            stepIndex=o_step,
+            m=o_mean,
+            c=o_cov,
+            r=o_res,
+            rc=o_rescov,
+            pm=pm,
+            pn=pn,
+            mm=mm,
+            eventTime=ev[o_row] if ev is not None else None,
+            loglikelihood=o_ll,
+            mahalanobis=o_maha,
+            slidingLikelihood=o_sll,
+        )
+        return out, state
 
     return fold
 
@@ -674,16 +662,8 @@ class KalmanBase(StatefulTransformer):
                 cols.append((name, auto_array(df, cp)))
         return cols
 
-    def _foldBoundary(self, c: dict) -> str:
-        return "scalar" if _is_scalar_lkf(c) else "own"
-
-    def _outSchema(self, boundary: str | None = None):
-        boundary = boundary or self._foldBoundary(self._constants())
-        if boundary == "scalar":
-            return VFLAT_SCALAR_OUT_SCHEMA
-        if boundary == "nd":
-            return vflat_nd_schema(int(self.get("stateSize")), int(self.get("measurementSize")))
-        return _OUT_SCHEMA
+    def _outSchema(self):
+        return kalman_layout(self._constants()).schema
 
     def _stateSchema(self):
         return _STATE_SCHEMA
@@ -731,11 +711,11 @@ class KalmanBase(StatefulTransformer):
     def _bucketedFold(self, c: dict, engine: str):
         if engine == "scan":
             if supports_scan(c):
-                return vectorized_scalar_lkf_scan_fold_factory, "scalar"
+                return vectorized_scalar_lkf_scan_fold_factory
             if supports_scan_general(c):
                 # n-D matrix-element scan (incl. per-row measurementModel —
                 # the OLS regression shape)
-                return vectorized_lkf_scan_fold_factory, "nd"
+                return vectorized_lkf_scan_fold_factory
             raise ValueError(
                 "foldEngine='scan' requires a constant-model LKF shape "
                 "with fadingFactor=1 (no EKF callables, control, "
@@ -745,14 +725,13 @@ class KalmanBase(StatefulTransformer):
         if not supports_vectorized(c):
             return None
         if supports_scalar_vectorized(c):
-            return vectorized_scalar_lkf_fold_factory, "scalar"
+            return vectorized_scalar_lkf_fold_factory
         if supports_scalar_sigma(c):
-            return vectorized_scalar_sigma_fold_factory, "scalar"
-        factory = {
+            return vectorized_scalar_sigma_fold_factory
+        return {
             "lkf": vectorized_lkf_fold_factory,
             "ekf": vectorized_ekf_fold_factory,
         }.get(c["kind"], vectorized_sigma_fold_factory)
-        return factory, "nd"
 
     def _distributedTransform(self, c: dict):
         from artan_spark.operators import distscan
@@ -770,83 +749,38 @@ class KalmanBase(StatefulTransformer):
         # buffers cost ~ nothing (vectorized.flat_input_projection)
         return flat_input_projection(keyed, self.get("measurementSize"), self.get("stateSize"))
 
-    def _shapeOutput(self, df: DataFrame, boundary: str | None = None) -> DataFrame:
+    def _shapeOutput(self, df: DataFrame) -> DataFrame:
         # reassemble the public struct schema JVM-side (cheap Catalyst
-        # projection vs expensive Python-side struct serialization)
-        boundary = boundary or self._foldBoundary(self._constants())
+        # projection vs expensive Python-side struct serialization); the
+        # disabled outputs are left out
+        layout = kalman_layout(self._constants())
         n, mdim = int(self.get("stateSize")), int(self.get("measurementSize"))
-        if boundary == "scalar":
-            df = df.select(
-                STATE_KEY,
-                "stateIndex",
-                "stepIndex",
-                _scalar_gaussian("mean", "cov").alias("state"),
-                # NaN crosses the Arrow boundary as null, and Spark's
-                # isnan(NULL) is false — guard both so missing-measurement
-                # rows get a null residual, matching the general path
-                F.when(
-                    F.col("resCov").isNotNull() & ~F.isnan(F.col("resCov")),
-                    _scalar_gaussian("res", "resCov"),
-                ).alias("residual"),
-                EVENT_TIME,
-                F.when(~F.isnan(F.col("loglikelihood")), F.col("loglikelihood")).alias("loglikelihood"),
-                F.when(~F.isnan(F.col("mahalanobis")), F.col("mahalanobis")).alias("mahalanobis"),
-                F.when(~F.isnan(F.col("slidingLikelihood")), F.col("slidingLikelihood")).alias(
-                    "slidingLikelihood"
-                ),
-            )
-        elif boundary == "nd":
-            df = df.select(*nd_flat_select_exprs(n, mdim))
-        else:
-
-            def mat(values, rows, cols_):
-                return F.struct(
-                    F.lit(rows).alias("numRows"),
-                    F.lit(cols_).alias("numCols"),
-                    values.alias("values"),
+        on = self.get
+        cols = [STATE_KEY, "stateIndex"]
+        if on("multiStepPredict"):
+            cols.append("stepIndex")
+        cols.append(layout.gauss("m", "c").alias("state"))
+        if on("outputResiduals"):
+            cols.append(F.when(layout.present("rc"), layout.gauss("r", "rc")).alias("residual"))
+        if on("eventTimeCol"):
+            cols.append(EVENT_TIME)
+        for name, flag in (
+            ("loglikelihood", "calculateLoglikelihood"),
+            ("mahalanobis", "calculateMahalanobis"),
+            ("slidingLikelihood", "calculateSlidingLikelihood"),
+        ):
+            if on(flag):
+                cols.append(name)
+        if on("outputSystemMatrices"):
+            cols += [
+                F.when(layout.present(block), layout.mat(block, rows, n, nullable=True)).alias(name)
+                for block, name, rows in (
+                    ("pm", "processModel", n),
+                    ("pn", "processNoise", n),
+                    ("mm", "measurementModel", mdim),
                 )
-
-            def gauss(mean, cov, dim):
-                return F.struct(mean.alias("mean"), mat(cov, dim, dim).alias("covariance"))
-
-            # the residual is null exactly when res is; coalesce only tells
-            # Catalyst that its fields are not (the type the flat
-            # boundaries reassemble to)
-            none = F.array().cast(ArrayType(DoubleType()))
-            residual = gauss(F.coalesce("res", none), F.coalesce("resCov", none), mdim)
-            df = df.select(
-                STATE_KEY,
-                "stateIndex",
-                "stepIndex",
-                gauss(F.col("mean"), F.col("cov"), n).alias("state"),
-                F.when(F.col("res").isNotNull(), residual).alias("residual"),
-                EVENT_TIME,
-                "loglikelihood",
-                "mahalanobis",
-                "slidingLikelihood",
-                F.when(F.col("pmVals").isNotNull(), mat(F.col("pmVals"), n, n)).alias("processModel"),
-                F.when(F.col("pnVals").isNotNull(), mat(F.col("pnVals"), n, n)).alias("processNoise"),
-                F.when(F.col("mmVals").isNotNull(), mat(F.col("mmVals"), mdim, n)).alias("measurementModel"),
-            )
-        return self._dropDisabled(df)
-
-    def _dropDisabled(self, df: DataFrame) -> DataFrame:
-        drop = []
-        if not self.get("calculateLoglikelihood"):
-            drop.append("loglikelihood")
-        if not self.get("calculateMahalanobis"):
-            drop.append("mahalanobis")
-        if not self.get("calculateSlidingLikelihood"):
-            drop.append("slidingLikelihood")
-        if not self.get("outputResiduals"):
-            drop.append("residual")
-        if self.get("multiStepPredict") == 0:
-            drop.append("stepIndex")
-        if not self.get("eventTimeCol"):
-            drop.append(EVENT_TIME)
-        if not self.get("outputSystemMatrices"):
-            drop += [c for c in ("processModel", "processNoise", "measurementModel") if c in df.columns]
-        return df.drop(*drop) if drop else df
+            ]
+        return df.select(*cols)
 
 
 class LinearKalmanFilter(KalmanBase):

@@ -14,11 +14,14 @@ from pyspark.sql import functions as F
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
 from artan_spark.operators.vectorized import (
+    _lms_frame,
     vectorized_lms_fold_factory,
     vectorized_scalar_lms_scan_fold_factory,
 )
 from artan_spark.types import (
     VECTOR,
+    ArrayType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -32,7 +35,8 @@ _OUT_SCHEMA = StructType(
     [
         StructField(STATE_KEY, StringType()),
         StructField("stateIndex", LongType()),
-        StructField("state", VECTOR),
+        # NaN arrives from Arrow as NULL, so the elements are nullable
+        StructField("state", ArrayType(DoubleType())),
         StructField(EVENT_TIME, TimestampType(), True),
     ]
 )
@@ -55,7 +59,7 @@ def _lms_fold_factory(c: dict):
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
         init_col = pdf["initialState"].values if "initialState" in pdf.columns else None
 
-        out = {f.name: [] for f in _OUT_SCHEMA.fields}
+        o_idx, o_state = [], []
         for i in range(len(pdf)):
             if state is None:
                 mean = c["initialState"]
@@ -67,11 +71,9 @@ def _lms_fold_factory(c: dict):
             x = vec_to_np(feats[i])
             state["mean"] = linalg.lms_update(state["mean"], float(labels[i]), x, lr, reg)
             state["idx"] += 1
-            out[STATE_KEY].append(key)
-            out["stateIndex"].append(state["idx"])
-            out["state"].append(np_to_vec(state["mean"]))
-            out[EVENT_TIME].append(ev[i] if ev is not None else None)
-        return pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields]), state
+            o_idx.append(state["idx"])
+            o_state.append(np_to_vec(state["mean"]))
+        return _lms_frame(key, o_idx, o_state, ev), state
 
     return fold
 
@@ -107,19 +109,20 @@ class LeastMeanSquaresFilter(StatefulTransformer):
 
     def _bucketedFold(self, c: dict, engine: str):
         """Salted multi-key folds, time-synchronous across keys
-        (operators/vectorized.py). They emit the public (state VECTOR)
-        schema, so no JVM-side reassembly is needed."""
+        (operators/vectorized.py). Every LMS engine emits the public
+        schema itself: the state width is unknown before the data when
+        initialState is None, so the state crosses as one array cell."""
         if self.get("initialStateCol"):
             return None
         if engine != "scan":
-            return vectorized_lms_fold_factory, "own"
+            return vectorized_lms_fold_factory
         init = c["initialState"]
         if init is not None and len(init) != 1:
             raise ValueError(
                 "foldEngine='scan' supports the 1-D LMS shape only — "
                 "use the sequential engine for n-D feature vectors"
             )
-        return vectorized_scalar_lms_scan_fold_factory, "own"
+        return vectorized_scalar_lms_scan_fold_factory
 
     def _distributedTransform(self, c: dict):
         from artan_spark.operators import distscan
@@ -145,7 +148,7 @@ class LeastMeanSquaresFilter(StatefulTransformer):
             cols.append(("initialState", auto_array(df, self.get("initialStateCol"))))
         return cols
 
-    def _outSchema(self, boundary: str | None = None):
+    def _outSchema(self):
         return _OUT_SCHEMA
 
     def _stateSchema(self):
@@ -163,5 +166,5 @@ class LeastMeanSquaresFilter(StatefulTransformer):
         idx, mean = packed
         return {"idx": int(idx), "mean": np.asarray(mean, dtype=np.float64)}
 
-    def _shapeOutput(self, df, boundary: str | None = None):
+    def _shapeOutput(self, df):
         return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)

@@ -28,10 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from artan_spark import linalg
-from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer, empty_pdf
+from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
+from artan_spark.operators.codec import gaussian, mixture_layout
 from artan_spark.operators.vectorized import (
-    mixture_flat_fields,
-    mixture_param_width,
     supports_vectorized_mixture,
     vectorized_mixture_fold_factory,
 )
@@ -40,12 +39,9 @@ from artan_spark.types import (
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
     mat_to_np,
-    np_to_mat,
     vec_to_np,
 )
 
@@ -94,14 +90,11 @@ class _Gaussian:
         return {"means": model["means"] / w[:, None], "covs": model["covs"] / w[:, None, None]}
 
     @staticmethod
-    def to_struct(weights, params):
-        return {
-            "weights": weights.tolist(),
-            "distributions": [
-                {"mean": params["means"][j].tolist(), "covariance": np_to_mat(params["covs"][j])}
-                for j in range(len(weights))
-            ],
-        }
+    def flat(params):
+        # per component: the mean, then the covariance column-major
+        return np.concatenate(
+            [np.concatenate([m, cv.T.ravel()]) for m, cv in zip(params["means"], params["covs"])]
+        )
 
     @staticmethod
     def from_struct(s):
@@ -156,8 +149,8 @@ class _Poisson:
         return {"rates": model["rates"] / w}
 
     @staticmethod
-    def to_struct(weights, params):
-        return {"weights": weights.tolist(), "distributions": [{"rate": float(r)} for r in params["rates"]]}
+    def flat(params):
+        return params["rates"]
 
     @staticmethod
     def from_struct(s):
@@ -203,11 +196,8 @@ class _Bernoulli:
         return {"probabilities": model["probabilities"] / w}
 
     @staticmethod
-    def to_struct(weights, params):
-        return {
-            "weights": weights.tolist(),
-            "distributions": [{"probability": float(p)} for p in params["probabilities"]],
-        }
+    def flat(params):
+        return params["probabilities"]
 
     @staticmethod
     def from_struct(s):
@@ -234,7 +224,7 @@ _FAMILIES = {"gaussian": _Gaussian, "poisson": _Poisson, "bernoulli": _Bernoulli
 
 def _mixture_fold_factory(c: dict):
     fam = _FAMILIES[c["family"]]
-    out_fields = list(c["outFields"])
+    layout = mixture_layout(c)
 
     def new_state(i, init_col):
         if init_col is not None and init_col[i] is not None:
@@ -263,7 +253,7 @@ def _mixture_fold_factory(c: dict):
         uh_col = pdf["updateHoldout"].values if "updateHoldout" in pdf.columns else None
         init_col = pdf["initialMixtureModel"].values if "initialMixtureModel" in pdf.columns else None
 
-        out = {f: [] for f in out_fields}
+        out = ([], [], [], [], [])  # stateIndex, w, p, eventTime, loglikelihood
         for i in range(nrows):
             if state is None:
                 state = new_state(i, init_col)
@@ -300,17 +290,28 @@ def _mixture_fold_factory(c: dict):
             state["idx"] += 1
             state["samples"] = []
 
-            out[STATE_KEY].append(key)
-            out["stateIndex"].append(state["idx"])
-            out["mixtureModel"].append(fam.to_struct(state["weights"], state["params"]))
-            out[EVENT_TIME].append(ev[i] if ev is not None else None)
-            out["loglikelihood"].append(state["ll"])
+            emitted = (
+                state["idx"],
+                state["weights"],
+                fam.flat(state["params"]),
+                ev[i] if ev is not None else None,
+                state["ll"],
+            )
+            for o, v in zip(out, emitted):
+                o.append(v)
 
-        if not out[STATE_KEY]:
-            # zero emissions (e.g. group smaller than one minibatch) must not
-            # reach Arrow as a float64-typed empty frame
-            return empty_pdf(out_fields), state
-        return pd.DataFrame(out, columns=out_fields), state
+        o_idx, o_w, o_p, o_ev, o_ll = out
+        rows = len(o_idx)
+        frame = layout.frame(
+            rows,
+            stateKey=key,
+            stateIndex=np.array(o_idx, dtype=np.int64),
+            w=np.reshape(o_w, (rows, layout.blocks["w"])),
+            p=np.reshape(o_p, (rows, layout.blocks["p"])),
+            eventTime=o_ev,
+            loglikelihood=np.array(o_ll, dtype=np.float64),
+        )
+        return frame, state
 
     return fold
 
@@ -393,7 +394,6 @@ class FiniteMixtureBase(StatefulTransformer):
             "decayRate": None if self.get("decayRate") is None else float(self.get("decayRate")),
             "minibatchSize": int(self.get("minibatchSize")),
             "updateHoldout": int(self.get("updateHoldout")),
-            "outFields": [f.name for f in self._outSchema().fields],
             "hasPerRowCols": any(
                 self.get(p)
                 for p in ("stepSizeCol", "minibatchSizeCol", "updateHoldoutCol", "initialMixtureModelCol")
@@ -461,87 +461,33 @@ class FiniteMixtureBase(StatefulTransformer):
 
     def _bucketedFold(self, c: dict, engine: str):
         """Salted multi-key batched stochastic-EM fold (vectorized.py)."""
-        if supports_vectorized_mixture(c):
-            return vectorized_mixture_fold_factory, "mixture"
-        return None
+        return vectorized_mixture_fold_factory if supports_vectorized_mixture(c) else None
 
-    def _outSchema(self, boundary: str | None = None):
-        if boundary != "mixture":
-            return StructType(
-                [
-                    StructField(STATE_KEY, StringType()),
-                    StructField("stateIndex", LongType()),
-                    StructField("mixtureModel", _model_struct_schema(self._family), False),
-                    StructField(EVENT_TIME, TimestampType(), True),
-                    StructField("loglikelihood", DoubleType(), True),
-                ]
-            )
+    def _outSchema(self):
+        return mixture_layout(self._constants()).schema
+
+    def _shapeOutput(self, df: DataFrame) -> DataFrame:
+        """Reassemble the public mixtureModel struct JVM-side from the flat
+        weight and parameter blocks (a Catalyst projection instead of
+        per-row Python structs, which at minibatch 1 — one model row per
+        input row — dominated the query wall)."""
         c = self._constants()
-        kc = len(c["initialWeights"])
-        fields = []
-        for name in mixture_flat_fields(kc, mixture_param_width(c)):
-            if name == STATE_KEY:
-                fields.append(StructField(STATE_KEY, StringType()))
-            elif name == "stateIndex":
-                fields.append(StructField("stateIndex", LongType()))
-            elif name == EVENT_TIME:
-                fields.append(StructField(EVENT_TIME, TimestampType(), True))
-            else:  # w*/p* and loglikelihood: primitive doubles
-                fields.append(StructField(name, DoubleType(), True))
-        return StructType(fields)
-
-    def _shapeOutput(self, df: DataFrame, boundary: str | None = None) -> DataFrame:
-        if boundary == "mixture":
-            df = self._shapeMixtureOutput(df)
-        return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)
-
-    def _shapeMixtureOutput(self, df: DataFrame) -> DataFrame:
-        """Reassemble the public mixtureModel struct JVM-side from the FLAT
-        primitive double columns the vectorized fold emits (w0..wk, p0..pM)
-        — Catalyst projection instead of the Python struct-serialization
-        cliff; primitive Arrow columns transport ~4x cheaper than
-        per-row list cells, which at minibatch 1 (one model row per input
-        row) dominated the query wall."""
-        k = len(self._constants()["initialWeights"])
-        fam = self._family
-        if fam == "gaussian":
-            d = int(np.asarray(self._initialParams()["means"]).shape[1])
+        layout = mixture_layout(c)
+        k = len(c["initialWeights"])
+        p = layout.cols("p")
+        if self._family == "gaussian":
+            d = int(np.asarray(c["initialParams"]["means"]).shape[1])
             span = d + d * d
-
-            def dist(j):
-                base = j * span
-                return F.struct(
-                    F.array(*[F.col(f"p{base + i}") for i in range(d)]).alias("mean"),
-                    F.struct(
-                        F.lit(d).alias("numRows"),
-                        F.lit(d).alias("numCols"),
-                        F.array(*[F.col(f"p{base + d + i}") for i in range(d * d)]).alias(
-                            "values"
-                        ),
-                    ).alias("covariance"),
-                )
-
-        elif fam == "poisson":
-
-            def dist(j):
-                return F.struct(F.col(f"p{j}").alias("rate"))
-
+            dists = [
+                gaussian(F.array(*p[j * span : j * span + d]), F.array(*p[j * span + d : (j + 1) * span]), d)
+                for j in range(k)
+            ]
         else:
-
-            def dist(j):
-                return F.struct(F.col(f"p{j}").alias("probability"))
-
-        model = F.struct(
-            F.array(*[F.col(f"w{j}") for j in range(k)]).alias("weights"),
-            F.array(*[dist(j) for j in range(k)]).alias("distributions"),
-        )
-        return df.select(
-            STATE_KEY,
-            "stateIndex",
-            model.alias("mixtureModel"),
-            EVENT_TIME,
-            "loglikelihood",
-        )
+            field = "rate" if self._family == "poisson" else "probability"
+            dists = [F.struct(p[j].alias(field)) for j in range(k)]
+        model = F.struct(layout.vec("w").alias("weights"), F.array(*dists).alias("distributions"))
+        df = df.select(STATE_KEY, "stateIndex", model.alias("mixtureModel"), EVENT_TIME, "loglikelihood")
+        return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)
 
     def _batchEM(self, df: DataFrame) -> DataFrame:
         """Driver-side EM loop (MixtureBase.scala:257-316): minibatch = per-key

@@ -13,33 +13,21 @@ from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
+from artan_spark.operators.codec import rls_layout
 from artan_spark.operators.vectorized import (
     vectorized_nd_rls_scan_fold_factory,
     vectorized_rls_fold_factory,
     vectorized_scalar_rls_scan_fold_factory,
 )
 from artan_spark.types import (
-    GAUSSIAN_OUT,
     VECTOR,
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
     mat_to_np,
-    np_to_gaussian,
     vec_to_np,
-)
-
-_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("state", GAUSSIAN_OUT, False),
-        StructField(EVENT_TIME, TimestampType(), True),
-    ]
 )
 
 _STATE_SCHEMA = StructType(
@@ -51,31 +39,14 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _flat_schema(value_type, nullable: bool = True) -> StructType:
-    """Boundary schema of the batched folds: state mean and covariance
-    values as flat doubles (1-D) or as array cells (n-D)."""
-    return StructType(
-        [
-            StructField(STATE_KEY, StringType()),
-            StructField("stateIndex", LongType()),
-            StructField("mean", value_type, nullable),
-            StructField("cov", value_type, nullable),
-            StructField(EVENT_TIME, TimestampType(), True),
-        ]
-    )
-
-
-_FLAT_OUT_SCHEMA = _flat_schema(DoubleType())
-_ND_OUT_SCHEMA = _flat_schema(ArrayType(DoubleType()), nullable=False)
-
-
 def _scalar_rls_fold_factory(c: dict):
-    """1-D fast path: pure-scalar recursion, flat boundary columns.
+    """1-D fast path: pure-scalar recursion.
     Same op order as the numpy path (bit-identical; the recursive-CTE
     oracle in plans/estimation.py verifies this at sf0.01)."""
     lam = c["forgettingFactor"]
     m0 = 0.0 if c["initialStateMean"] is None else float(np.ravel(c["initialStateMean"])[0])
     p0 = 1.0 if c["regularizationMatrix"] is None else float(np.ravel(c["regularizationMatrix"])[0])
+    layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, state):
         nrows = len(pdf)
@@ -106,16 +77,7 @@ def _scalar_rls_fold_factory(c: dict):
             o_mean[i] = m
             o_cov[i] = P
 
-        out = pd.DataFrame(
-            {
-                STATE_KEY: key,
-                "stateIndex": o_idx,
-                "mean": o_mean,
-                "cov": o_cov,
-                EVENT_TIME: ev if ev is not None else None,
-            },
-            columns=[f.name for f in _FLAT_OUT_SCHEMA.fields],
-        )
+        out = layout.frame(nrows, stateKey=key, stateIndex=o_idx, m=o_mean, c=o_cov, eventTime=ev)
         return out, {"idx": int(idx), "mean": np.array([m]), "cov": np.array([[P]])}
 
     return fold
@@ -130,6 +92,7 @@ def _rls_fold_factory(c: dict):
         return _scalar_rls_fold_factory(c)
     lam = c["forgettingFactor"]
     n_state = c["stateSize"]
+    layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, state):
         key = pdf[STATE_KEY].iloc[0] if len(pdf) else ""
@@ -139,8 +102,11 @@ def _rls_fold_factory(c: dict):
         init_mean_col = pdf["initialStateMean"].values if "initialStateMean" in pdf.columns else None
         reg_col = pdf["regularizationMatrix"].values if "regularizationMatrix" in pdf.columns else None
 
-        out = {f.name: [] for f in _OUT_SCHEMA.fields}
-        for i in range(len(pdf)):
+        nrows = len(pdf)
+        o_idx = np.empty(nrows, dtype=np.int64)
+        o_mean = np.empty((nrows, n_state))
+        o_cov = np.empty((nrows, n_state, n_state))
+        for i in range(nrows):
             if state is None:
                 mean = c["initialStateMean"]
                 if init_mean_col is not None and init_mean_col[i] is not None:
@@ -157,11 +123,9 @@ def _rls_fold_factory(c: dict):
             m1, P1, _gain = linalg.rls_update(state["mean"], state["cov"], float(labels[i]), x, lam)
             state["idx"] += 1
             state["mean"], state["cov"] = m1, P1
-            out[STATE_KEY].append(key)
-            out["stateIndex"].append(state["idx"])
-            out["state"].append(np_to_gaussian(m1, P1))
-            out[EVENT_TIME].append(ev[i] if ev is not None else None)
-        return pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields]), state
+            o_idx[i], o_mean[i], o_cov[i] = state["idx"], m1, P1
+        out = layout.frame(nrows, stateKey=key, stateIndex=o_idx, m=o_mean, c=o_cov, eventTime=ev)
+        return out, state
 
     return fold
 
@@ -201,20 +165,16 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
         (operators/vectorized.py); param (not per-row) priors only."""
         if c["hasPerRowCols"] or not c["stateSize"]:
             return None
-        boundary = "scalar" if int(c["stateSize"]) == 1 else "nd"
         if engine != "scan":
-            return vectorized_rls_fold_factory, boundary
-        if boundary == "scalar":
-            return vectorized_scalar_rls_scan_fold_factory, boundary
-        return vectorized_nd_rls_scan_fold_factory, boundary
+            return vectorized_rls_fold_factory
+        if int(c["stateSize"]) == 1:
+            return vectorized_scalar_rls_scan_fold_factory
+        return vectorized_nd_rls_scan_fold_factory
 
     def _distributedTransform(self, c: dict):
         from artan_spark.operators import distscan
 
         return distscan.distributed_rls_transform
-
-    def _foldBoundary(self, c: dict) -> str:
-        return "scalar" if _is_scalar_rls(c) else "own"
 
     def __init__(self, stateSize: int | None = None, **kwargs):
         super().__init__(**kwargs)
@@ -258,9 +218,8 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
             cols.append(("regularizationMatrix", auto_array(df, self.get("regularizationMatrixCol"))))
         return cols
 
-    def _outSchema(self, boundary: str | None = None):
-        boundary = boundary or self._foldBoundary(self._constants())
-        return {"scalar": _FLAT_OUT_SCHEMA, "nd": _ND_OUT_SCHEMA}.get(boundary, _OUT_SCHEMA)
+    def _outSchema(self):
+        return rls_layout(self._constants()).schema
 
     def _stateSchema(self):
         return _STATE_SCHEMA
@@ -279,23 +238,7 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
         n = len(mean)
         return {"idx": int(idx), "mean": mean, "cov": np.asarray(cov, dtype=np.float64).reshape(n, n)}
 
-    def _shapeOutput(self, df, boundary: str | None = None):
-        boundary = boundary or self._foldBoundary(self._constants())
-        if boundary == "scalar":
-            from artan_spark.operators.kalman import _scalar_gaussian
-
-            state = _scalar_gaussian("mean", "cov")
-        elif boundary == "nd":
-            n = int(self.get("stateSize"))
-            state = F.struct(
-                F.col("mean").alias("mean"),
-                F.struct(
-                    F.lit(n).alias("numRows"),
-                    F.lit(n).alias("numCols"),
-                    F.col("cov").alias("values"),
-                ).alias("covariance"),
-            )
-        else:
-            state = F.col("state")
-        df = df.select(STATE_KEY, "stateIndex", state.alias("state"), EVENT_TIME)
+    def _shapeOutput(self, df):
+        layout = rls_layout(self._constants())
+        df = df.select(STATE_KEY, "stateIndex", layout.gauss("m", "c").alias("state"), EVENT_TIME)
         return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)

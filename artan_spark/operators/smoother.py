@@ -17,17 +17,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY
-from artan_spark.operators.kalman import (
-    _COL_PARAMS,
-    KalmanBase,
-    _row_mat,
-    _row_vec,
-    _scalar_gaussian,
-)
+from artan_spark.operators.codec import smoother_layout
+from artan_spark.operators.kalman import _COL_PARAMS, KalmanBase, _row_mat, _row_vec
 from artan_spark.operators.vectorized import (
     supports_scan,
     supports_scan_smoother,
@@ -38,33 +32,12 @@ from artan_spark.operators.vectorized import (
     vectorized_smoother_fold_factory,
 )
 from artan_spark.types import (
-    GAUSSIAN,
-    MATRIX,
     VECTOR,
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
-    np_to_gaussian,
-    np_to_mat,
-    vec_to_np,
-)
-
-# array-flat boundary for the general n-D fold (structs reassembled
-# JVM-side in _shapeOutput, same rationale as kalman._OUT_SCHEMA)
-_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-        StructField("mean", VECTOR),
-        StructField("cov", ArrayType(DoubleType())),  # column-major
-        StructField("gainVals", ArrayType(DoubleType())),  # column-major
-        StructField(EVENT_TIME, TimestampType(), True),
-    ]
 )
 
 _STATE_SCHEMA = StructType(
@@ -81,20 +54,6 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
-# flat boundary schema for the scalar fast path (see
-# vectorized.VFLAT_SCALAR_OUT_SCHEMA)
-_FLAT_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-        StructField("mean", DoubleType()),
-        StructField("cov", DoubleType()),
-        StructField("gain", DoubleType()),
-        StructField(EVENT_TIME, TimestampType(), True),
-    ]
-)
-
 
 def _scalar_smoother_fold_factory(c: dict):
     """Scalar fast path: 1-D constant-model LKF + RTS queue recursion
@@ -107,6 +66,7 @@ def _scalar_smoother_fold_factory(c: dict):
     m0 = float(c["initialStateMean"][0])
     p0 = float(c["initialStateCovariance"][0, 0])
     fad2 = float(c["fadingFactor"]) ** 2
+    layout = smoother_layout(c)
 
     def fold(pdf: pd.DataFrame, state):
         nrows = len(pdf)
@@ -122,7 +82,7 @@ def _scalar_smoother_fold_factory(c: dict):
             # queue entries -> scalar tuples
             queue = [(e[0], float(e[1][0]), float(e[2][0, 0]), e[5]) for e in state["queue"]]
 
-        o_key, o_idx, o_step, o_state, o_gain, o_ev, o_cov = [], [], [], [], [], [], []
+        o_idx, o_step, o_state, o_gain, o_ev, o_cov = [], [], [], [], [], []
         for i in range(nrows):
             m = f * m
             P = fad2 * ((f * P) * f) + q
@@ -154,7 +114,6 @@ def _scalar_smoother_fold_factory(c: dict):
                 sm_p = P_j + (g * (sm_p - nc)) * g
                 rows.append((idx_j, step, sm_m, sm_p, g, ev_j))
             for idx_j, step, mm, pp, g, ev_j in reversed(rows):
-                o_key.append(key)
                 o_idx.append(idx_j)
                 o_step.append(step)
                 o_state.append(mm)
@@ -162,17 +121,15 @@ def _scalar_smoother_fold_factory(c: dict):
                 o_ev.append(ev_j)
                 o_cov.append(pp)
 
-        out = pd.DataFrame(
-            {
-                STATE_KEY: o_key,
-                "stateIndex": o_idx,
-                "stepIndex": o_step,
-                "mean": o_state,
-                "cov": o_cov,
-                "gain": o_gain,
-                EVENT_TIME: o_ev,
-            },
-            columns=[fld.name for fld in _FLAT_OUT_SCHEMA.fields],
+        out = layout.frame(
+            len(o_idx),
+            stateKey=key,
+            stateIndex=np.array(o_idx, dtype=np.int64),
+            stepIndex=np.array(o_step, dtype=np.int64),
+            m=o_state,
+            c=o_cov,
+            g=o_gain,
+            eventTime=o_ev,
         )
         state = {
             "idx": int(idx),
@@ -203,6 +160,7 @@ def _smoother_fold_factory(c: dict):
     lag = c["fixedLag"]
     n_state = c["stateSize"]
     fading = c["fadingFactor"]
+    layout = smoother_layout(c)
 
     def fold(pdf: pd.DataFrame, state):
         nrows = len(pdf)
@@ -210,7 +168,7 @@ def _smoother_fold_factory(c: dict):
         cols = {name: (pdf[name].values if name in pdf.columns else None) for name in _COL_PARAMS}
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
 
-        out = {f.name: [] for f in _OUT_SCHEMA.fields}
+        out = ([], [], [], [], [], [])  # stateIndex, stepIndex, m, c, g, eventTime
 
         for i in range(nrows):
             if state is None:
@@ -258,16 +216,22 @@ def _smoother_fold_factory(c: dict):
                 sm_mean = m_j + gain @ (sm_mean - next_mean)
                 sm_cov = P_j + gain @ (sm_cov - next_cov) @ gain.T
                 rows.append((idx_j, step, sm_mean, sm_cov, gain, ev_j))
-            for idx_j, step, m, P, g, ev_j in reversed(rows):
-                out[STATE_KEY].append(key)
-                out["stateIndex"].append(idx_j)
-                out["stepIndex"].append(step)
-                out["mean"].append(np.asarray(m).ravel())
-                out["cov"].append(np.asarray(P).T.ravel())
-                out["gainVals"].append(np.asarray(g).T.ravel())
-                out[EVENT_TIME].append(ev_j)
+            for row in reversed(rows):
+                for o, v in zip(out, row):
+                    o.append(v)
 
-        return pd.DataFrame(out, columns=[f.name for f in _OUT_SCHEMA.fields]), state
+        o_idx, o_step, o_mean, o_cov, o_gain, o_ev = out
+        frame = layout.frame(
+            len(o_idx),
+            stateKey=key,
+            stateIndex=np.array(o_idx, dtype=np.int64),
+            stepIndex=np.array(o_step, dtype=np.int64),
+            m=np.reshape(o_mean, (-1, n_state)),
+            c=np.reshape(o_cov, (-1, n_state, n_state)),
+            g=np.reshape(o_gain, (-1, n_state, n_state)),
+            eventTime=o_ev,
+        )
+        return frame, state
 
     return fold
 
@@ -304,16 +268,15 @@ class LinearKalmanSmoother(KalmanBase):
         return supports_scan(c) and _is_scalar_smoother(c)
 
     def _bucketedFold(self, c: dict, engine: str):
-        """Salted multi-key smoother folds (vectorized.py) emit the same
-        boundary as the sequential smoother. The scan engine swaps in the
+        """Salted multi-key smoother folds (vectorized.py) emit the
+        sequential smoother's layout. The scan engine swaps in the
         parallel-scan forward pass + anchor-vectorized backward window
         (~1e-12 relative parity, tests/test_scan_engine.py)."""
-        boundary = self._foldBoundary(c)
         if engine == "scan":
-            if supports_scan(c) and boundary == "scalar":
-                return vectorized_scalar_smoother_scan_fold_factory, boundary
+            if supports_scan(c) and _is_scalar_smoother(c):
+                return vectorized_scalar_smoother_scan_fold_factory
             if supports_scan_smoother(c):
-                return vectorized_nd_smoother_scan_fold_factory, boundary
+                return vectorized_nd_smoother_scan_fold_factory
             raise ValueError(
                 "foldEngine='scan' requires a constant-model smoother "
                 "shape with fadingFactor=1 (no control or per-row "
@@ -321,15 +284,11 @@ class LinearKalmanSmoother(KalmanBase):
                 "configuration"
             )
         if supports_vectorized(c) and supports_vectorized_smoother(c):
-            return vectorized_smoother_fold_factory, boundary
+            return vectorized_smoother_fold_factory
         return None
 
-    def _foldBoundary(self, c: dict) -> str:
-        return "scalar" if _is_scalar_smoother(c) else "own"
-
-    def _outSchema(self, boundary: str | None = None):
-        boundary = boundary or self._foldBoundary(self._constants())
-        return _FLAT_OUT_SCHEMA if boundary == "scalar" else _OUT_SCHEMA
+    def _outSchema(self):
+        return smoother_layout(self._constants()).schema
 
     def _stateSchema(self):
         return _STATE_SCHEMA
@@ -375,37 +334,18 @@ class LinearKalmanSmoother(KalmanBase):
             "queue": queue,
         }
 
-    def _shapeOutput(self, df, boundary: str | None = None):
-        if (boundary or self._foldBoundary(self._constants())) == "scalar":
-            df = df.select(
-                STATE_KEY,
-                "stateIndex",
-                "stepIndex",
-                _scalar_gaussian("mean", "cov").alias("state"),
-                F.struct(
-                    F.lit(1).alias("numRows"),
-                    F.lit(1).alias("numCols"),
-                    F.array(F.col("gain")).alias("values"),
-                ).alias("rtsGain"),
-                EVENT_TIME,
-            )
-        else:
-            n = int(self.get("stateSize"))
-
-            def mat(col_name):
-                return F.struct(
-                    F.lit(n).alias("numRows"), F.lit(n).alias("numCols"), F.col(col_name).alias("values")
-                )
-
-            df = df.select(
-                STATE_KEY,
-                "stateIndex",
-                "stepIndex",
-                F.struct(F.col("mean").alias("mean"), mat("cov").alias("covariance")).alias("state"),
-                mat("gainVals").alias("rtsGain"),
-                EVENT_TIME,
-            )
-        drop = []
-        if not self.get("eventTimeCol"):
-            drop.append(EVENT_TIME)
-        return df.drop(*drop) if drop else df
+    def _shapeOutput(self, df):
+        c = self._constants()
+        layout = smoother_layout(c)
+        n = int(c["stateSize"])
+        # the public type declares the fields of the general shapes nullable
+        general = not _is_scalar_smoother(c)
+        df = df.select(
+            STATE_KEY,
+            "stateIndex",
+            "stepIndex",
+            layout.gauss("m", "c", nullable=general).alias("state"),
+            layout.mat("g", n, n, nullable=general).alias("rtsGain"),
+            EVENT_TIME,
+        )
+        return df if self.get("eventTimeCol") else df.drop(EVENT_TIME)

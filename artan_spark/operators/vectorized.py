@@ -1,23 +1,26 @@
-"""Vectorized multi-key batch fold for the linear Kalman filter.
+"""Multi-key batch folds of the estimation operators.
 
 The sequential per-group fold is O(rows) Python-loop iterations per key —
-fine for 1-D (scalar fast path) but the weak spot for n-D states with many
-keys. This path restructures the computation: keys are salted into
-``groupBy(crc32(stateKey) % P)`` buckets so ONE ``applyInPandas`` group holds
-MANY keys, and the fold steps **time-synchronously across keys** — step t
-updates every key's t-th row in one batched numpy/einsum call (batched gemm,
-batched pinv, Joseph form). Per-row Python overhead drops from O(rows) to
-O(max rows per key).
+fine for 1-D (scalar fast paths) but the weak spot for n-D states with many
+keys. These folds restructure the computation: keys are salted into
+``groupBy(crc32(stateKey) % P)`` buckets (``base.resolve_engine`` and the
+one bucketed transform ``StatefulTransformer._bucketedTransform``) so ONE
+``applyInPandas`` group holds MANY keys, and the fold steps
+**time-synchronously across keys** — step t updates every key's t-th row in
+one batched numpy/einsum call (batched gemm, batched pinv, Joseph form).
+Per-row Python overhead drops from O(rows) to O(max rows per key). The
+parallel-scan folds go further: an associative element per row and
+log2(N) full-width passes, so wall-clock no longer scales with rows per key.
 
-Semantics identical to the sequential fold (same formulas; float results
-equal to ~1 ulp since batched einsum reassociates). Batch mode only —
-streaming keeps the per-key state-store fold. Opt in with
-``setVectorizedBatch(True)``; scope: LKF/EKF/UKF/CKF, constant F/Q/R
-(per-row H and per-row ``initialStateDistributionCol`` allowed), no
-control/multi-step/sliding-likelihood; EKF/UKF/CKF callables must follow the
-batched ``vectorizedFunctions`` contract ((N, n) state matrix in, (N, out)
-values / (N, rows, cols) Jacobian stacks out). Falls back to the sequential
-path outside that scope.
+Families: LKF/EKF/UKF/CKF, the fixed-lag smoother, RLS, LMS and the
+mixtures. The scalar elementwise folds repeat the sequential op order and
+are bit-identical to it; the batched n-D folds reassociate (~ulp); the
+scans differ in op order (~1e-12 relative on the scalar shapes, ~1e-9 on
+the n-D ones). The resolver runs them on batch input — ``foldEngine``
+"auto" picks the scalar scans by itself, the others need
+``setVectorizedBatch(True)`` — and streaming keeps the per-key state-store
+fold. Every fold emits its operator's one flat frame layout
+(operators/codec.py), so the output is the same whichever engine ran.
 """
 
 from __future__ import annotations
@@ -27,136 +30,10 @@ import math
 import numpy as np
 import pandas as pd
 
-from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, empty_pdf
-from artan_spark.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from artan_spark.operators.codec import kalman_layout, mixture_layout, rls_layout, smoother_layout
 
 _LOG2PI = math.log(2.0 * math.pi)
-
-# 1-D flat-primitive boundary schema of every scalar LKF/UKF/CKF fold, the
-# sequential scalar fold included: doubles instead of 1-element arrays kill
-# the per-cell Arrow list overhead
-VFLAT_SCALAR_OUT_SCHEMA = StructType(
-    [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-        StructField("mean", DoubleType()),
-        StructField("cov", DoubleType()),
-        StructField("res", DoubleType(), True),
-        StructField("resCov", DoubleType(), True),
-        StructField(EVENT_TIME, TimestampType(), True),
-        StructField("loglikelihood", DoubleType(), True),
-        StructField("mahalanobis", DoubleType(), True),
-        StructField("slidingLikelihood", DoubleType(), True),
-    ]
-)
-
-
-def vflat_nd_fields(n: int, mdim: int) -> list:
-    """Column names of the width-(n, mdim) FLAT n-D boundary schema: the
-    n-D twin of VFLAT_SCALAR_OUT_SCHEMA. mean/cov/res/resCov cross the
-    Arrow boundary as plain double columns (m0.., c0.. column-major,
-    r0.., rc0.. column-major) instead of one array cell per row — an
-    array cell costs a Python object per row on BOTH sides of the
-    boundary (list() materialization in the fold, object decode in the
-    JVM reassembly feed), flat float64 buffers cost ~nothing. A missing
-    measurement is marked by NaN in rc0 (the same isnan convention the
-    array layout's emitters used internally)."""
-    return (
-        [STATE_KEY, "stateIndex", "stepIndex"]
-        + [f"m{i}" for i in range(n)]
-        + [f"c{i}" for i in range(n * n)]
-        + [f"r{i}" for i in range(mdim)]
-        + [f"rc{i}" for i in range(mdim * mdim)]
-        + [EVENT_TIME, "loglikelihood", "mahalanobis", "slidingLikelihood"]
-    )
-
-
-def vflat_nd_schema(n: int, mdim: int) -> StructType:
-    fields = [
-        StructField(STATE_KEY, StringType()),
-        StructField("stateIndex", LongType()),
-        StructField("stepIndex", LongType()),
-    ]
-    for name in vflat_nd_fields(n, mdim)[3 : 3 + n + n * n + mdim + mdim * mdim]:
-        fields.append(StructField(name, DoubleType(), True))
-    fields += [
-        StructField(EVENT_TIME, TimestampType(), True),
-        StructField("loglikelihood", DoubleType(), True),
-        StructField("mahalanobis", DoubleType(), True),
-        StructField("slidingLikelihood", DoubleType(), True),
-    ]
-    return StructType(fields)
-
-
-def nd_flat_select_exprs(n: int, mdim: int) -> list:
-    """JVM-side reassembly of the flat n-D boundary frame (vflat_nd_fields)
-    into the public struct schema: F.array over the flat double columns is a
-    cheap Catalyst projection, vs one Python object per row per array cell on
-    the worker side. Missing-measurement rows carry NaN in rc0, which crosses
-    Arrow as null — guard both, like the scalar shaped select."""
-    from pyspark.sql import functions as F
-
-    mean = F.array(*[F.col(f"m{i}") for i in range(n)])
-    cov = F.array(*[F.col(f"c{i}") for i in range(n * n)])
-    res_a = F.array(*[F.col(f"r{i}") for i in range(mdim)])
-    rescov = F.array(*[F.col(f"rc{i}") for i in range(mdim * mdim)])
-
-    def gauss(mean_col, cov_col, dim):
-        return F.struct(
-            mean_col.alias("mean"),
-            F.struct(
-                F.lit(dim).alias("numRows"), F.lit(dim).alias("numCols"), cov_col.alias("values")
-            ).alias("covariance"),
-        )
-
-    has_res = F.col("rc0").isNotNull() & ~F.isnan(F.col("rc0"))
-    return [
-        F.col(STATE_KEY),
-        F.col("stateIndex"),
-        F.col("stepIndex"),
-        gauss(mean, cov, n).alias("state"),
-        F.when(has_res, gauss(res_a, rescov, mdim)).alias("residual"),
-        F.col(EVENT_TIME),
-        F.when(~F.isnan("loglikelihood"), F.col("loglikelihood")).alias("loglikelihood"),
-        F.when(~F.isnan("mahalanobis"), F.col("mahalanobis")).alias("mahalanobis"),
-        F.when(~F.isnan("slidingLikelihood"), F.col("slidingLikelihood")).alias(
-            "slidingLikelihood"
-        ),
-    ]
-
-
-def emit_nd_flat(
-    keys_arr, idx, out_mean, out_cov, out_res, out_rescov, ev, out_ll, out_maha, n, mdim
-) -> pd.DataFrame:
-    """Shared emitter for the n-D folds' flat boundary frame (see
-    vflat_nd_fields). out_res/out_rescov carry NaN on missing-measurement
-    rows (every fold initializes them with np.full(..., nan))."""
-    N = len(keys_arr)
-    cols = {STATE_KEY: keys_arr, "stateIndex": idx, "stepIndex": 0}
-    for i in range(n):
-        cols[f"m{i}"] = out_mean[:, i]
-    covT = out_cov.transpose(0, 2, 1).reshape(N, -1)
-    for i in range(n * n):
-        cols[f"c{i}"] = covT[:, i]
-    for i in range(mdim):
-        cols[f"r{i}"] = out_res[:, i]
-    rcT = out_rescov.transpose(0, 2, 1).reshape(N, -1)
-    for i in range(mdim * mdim):
-        cols[f"rc{i}"] = rcT[:, i]
-    cols[EVENT_TIME] = ev if ev is not None else None
-    cols["loglikelihood"] = out_ll
-    cols["mahalanobis"] = out_maha
-    cols["slidingLikelihood"] = np.nan
-    return pd.DataFrame(cols, columns=vflat_nd_fields(n, mdim))
 
 
 def supports_scalar_vectorized(c: dict) -> bool:
@@ -294,7 +171,7 @@ def cells_not_none(cells) -> np.ndarray:
 
 # -- flat-primitive input projections ---------------------------------------
 #
-# The input-side twin of VFLAT_SCALAR_OUT_SCHEMA / vflat_nd_schema: an
+# The input-side twin of the flat output layouts (operators/codec.py): an
 # array<double> or matrix-struct column crosses Arrow->pandas as one Python
 # object per row (~1-2 us/row to materialize + another ~1 us/row for the fold
 # to read), while the same doubles projected JVM-side into plain double
@@ -390,29 +267,6 @@ def read_measurement_models(pdf: pd.DataFrame, mdim: int, n: int, H_const):
     return None
 
 
-def cols_to_pdf(cols: dict, n: int, names) -> pd.DataFrame:
-    """Block-consolidation-free frame construction for fold outputs.
-
-    ``pd.DataFrame(dict-of-arrays)`` consolidates same-dtype columns into
-    one block with an O(data) vstack — measured 12 s at 1M rows vs 0.02 s
-    this way — and Arrow serialization reads columns independently, so
-    the consolidation buys nothing. Scalars broadcast; None becomes an
-    object column of Nones (the eventTime-absent case)."""
-    data = {}
-    for k in names:
-        v = cols[k]
-        if v is None:
-            data[k] = pd.Series(np.full(n, None, dtype=object), copy=False)
-        elif isinstance(v, np.ndarray):
-            data[k] = pd.Series(v, copy=False)
-        elif isinstance(v, list):
-            # per-row array cells (vector/matrix columns): object dtype
-            data[k] = pd.Series(v, dtype=object, copy=False)
-        else:
-            data[k] = pd.Series(np.full(n, v), copy=False)
-    return pd.concat(data, axis=1, copy=False)
-
-
 def multi_key_layout(pdf: pd.DataFrame):
     """Shared step-major layout for the time-synchronous folds: returns
     (keys_arr, key_idx, K, counts, first, order) where ``order`` walks all
@@ -463,12 +317,12 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
     )
     I0 = np.linalg.inv(P0m)
     beta0 = I0 @ m0v
-    names = [STATE_KEY, "stateIndex", "mean", "cov", EVENT_TIME]
+    layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         keys_arr = pdf[STATE_KEY].to_numpy()
         new_key = np.ones(N, dtype=bool)
         new_key[1:] = keys_arr[1:] != keys_arr[:-1]
@@ -504,17 +358,7 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
         mean = np.linalg.solve(Imat, beta[..., None])[..., 0]
         P = np.linalg.inv(Imat)
         P = (P + np.swapaxes(P, 1, 2)) * 0.5
-        out = cols_to_pdf(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": pos + 1,
-                "mean": list(mean),
-                "cov": list(P.transpose(0, 2, 1).reshape(N, -1)),
-                EVENT_TIME: ev if ev is not None else None,
-            },
-            N,
-            names,
-        )
+        out = layout.frame(N, stateKey=keys_arr, stateIndex=pos + 1, m=mean, c=P, eventTime=ev)
         return out, None
 
     return fold
@@ -544,12 +388,12 @@ def vectorized_scalar_rls_scan_fold_factory(c: dict):
         if c["regularizationMatrix"] is None
         else float(np.ravel(c["regularizationMatrix"])[0])
     )
-    names = [STATE_KEY, "stateIndex", "mean", "cov", EVENT_TIME]
+    layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         # rows arrive sorted (key, eventTime): keys are contiguous runs
         keys_arr = pdf[STATE_KEY].to_numpy()
         new_key = np.ones(N, dtype=bool)
@@ -581,17 +425,7 @@ def vectorized_scalar_rls_scan_fold_factory(c: dict):
 
         I = S * (1.0 / p0) + aI
         beta = S * (m0 / p0) + aB
-        out = cols_to_pdf(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": pos + 1,
-                "mean": beta / I,
-                "cov": 1.0 / I,
-                EVENT_TIME: ev if ev is not None else None,
-            },
-            N,
-            names,
-        )
+        out = layout.frame(N, stateKey=keys_arr, stateIndex=pos + 1, m=beta / I, c=1.0 / I, eventTime=ev)
         return out, None
 
     return fold
@@ -601,10 +435,7 @@ def vectorized_rls_fold_factory(c: dict):
     """Time-synchronous multi-key RLS fold. The 1-D shape runs pure
     elementwise arithmetic in the EXACT op order of the sequential scalar
     fold (rls.py _scalar_rls_fold_factory) — bit-identical results; n-D
-    batches the linalg.rls_update rank-1 recursion with einsum (~ulp).
-    Emits the flat scalar columns for 1-D (rls.py _FLAT_OUT_SCHEMA) and
-    (mean, cov) arrays for n-D (rls.py _ND_OUT_SCHEMA); rls.py reassembles
-    the state struct JVM-side."""
+    batches the linalg.rls_update rank-1 recursion with einsum (~ulp)."""
     lam = float(c["forgettingFactor"])
     n = c["stateSize"]
     scalar = n == 1
@@ -626,12 +457,12 @@ def vectorized_rls_fold_factory(c: dict):
             if c["regularizationMatrix"] is None
             else np.asarray(c["regularizationMatrix"], dtype=np.float64)
         )
-    names = [STATE_KEY, "stateIndex", "mean", "cov", EVENT_TIME]
+    layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
         y = pdf["label"].to_numpy(dtype=np.float64)
         feats = pdf["features"].values
@@ -664,7 +495,6 @@ def vectorized_rls_fold_factory(c: dict):
                 out_idx[block] = t + 1
                 out_mean[block] = m[ki]
                 out_cov[block] = P[ki]
-            mean_col, cov_col = out_mean, out_cov
         else:
             X = vec_cells_to_2d(feats, n)
             m = np.tile(m0v, (K, 1))
@@ -689,22 +519,23 @@ def vectorized_rls_fold_factory(c: dict):
                 out_idx[block] = t + 1
                 out_mean[block] = m[ki]
                 out_cov[block] = P[ki]
-            mean_col = list(out_mean)
-            cov_col = [cv.T.ravel() for cv in out_cov]
 
-        out = pd.DataFrame(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": out_idx,
-                "mean": mean_col,
-                "cov": cov_col,
-                EVENT_TIME: ev if ev is not None else None,
-            },
-            columns=names,
-        )
+        out = layout.frame(N, stateKey=keys_arr, stateIndex=out_idx, m=out_mean, c=out_cov, eventTime=ev)
         return out, None
 
     return fold
+
+
+LMS_COLUMNS = [STATE_KEY, "stateIndex", "state", EVENT_TIME]
+
+
+def _lms_frame(keys, idx, states, ev) -> pd.DataFrame:
+    """The LMS output frame: the state crosses as one array cell per row
+    (its width is unknown before the data when initialState is None)."""
+    return pd.DataFrame(
+        {STATE_KEY: keys, "stateIndex": idx, "state": list(states), EVENT_TIME: ev},
+        columns=LMS_COLUMNS,
+    )
 
 
 def vectorized_lms_fold_factory(c: dict):
@@ -715,12 +546,11 @@ def vectorized_lms_fold_factory(c: dict):
     lr = float(c["learningRate"])
     reg = float(c["regularizationConstant"])
     init = c["initialState"]
-    names = [STATE_KEY, "stateIndex", "state", EVENT_TIME]
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return empty_pdf(LMS_COLUMNS), None
         keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
         y = pdf["label"].to_numpy(dtype=np.float64)
         feats = pdf["features"].values
@@ -745,16 +575,7 @@ def vectorized_lms_fold_factory(c: dict):
             m[ki] = m[ki] + (lr * err / denom)[:, None] * x
             out_idx[block] = t + 1
             out_state[block] = m[ki]
-        out = pd.DataFrame(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": out_idx,
-                "state": list(out_state),
-                EVENT_TIME: ev if ev is not None else None,
-            },
-            columns=names,
-        )
-        return out, None
+        return _lms_frame(keys_arr, out_idx, out_state, ev), None
 
     return fold
 
@@ -771,12 +592,11 @@ def vectorized_scalar_lms_scan_fold_factory(c: dict):
     reg = float(c["regularizationConstant"])
     init = c["initialState"]
     m0 = 0.0 if init is None else float(np.ravel(init)[0])
-    names = [STATE_KEY, "stateIndex", "state", EVENT_TIME]
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return empty_pdf(LMS_COLUMNS), None
         keys_arr = pdf[STATE_KEY].to_numpy()
         new_key = np.ones(N, dtype=bool)
         new_key[1:] = keys_arr[1:] != keys_arr[:-1]
@@ -809,19 +629,7 @@ def vectorized_scalar_lms_scan_fold_factory(c: dict):
             a[d:] = np.where(mk, na, ar)
             d *= 2
         state = S * m0 + a
-
-        out = cols_to_pdf(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": pos + 1,
-                # 1-element vector cells for the public (state VECTOR) schema
-                "state": list(state[:, None]),
-                EVENT_TIME: ev if ev is not None else None,
-            },
-            N,
-            names,
-        )
-        return out, None
+        return _lms_frame(keys_arr, pos + 1, state[:, None], ev), None
 
     return fold
 
@@ -911,11 +719,12 @@ def vectorized_sigma_fold_factory(c: dict):
     compute_maha = c["calculateMahalanobis"]
     pf = deserialize_callable(c.get("processFunction"))
     mf = deserialize_callable(c.get("measurementFunction"))
+    layout = kalman_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(vflat_nd_fields(n, mdim)), None
+            return layout.frame(0), None
 
         keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
 
@@ -1017,8 +826,9 @@ def vectorized_sigma_fold_factory(c: dict):
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = emit_nd_flat(
-            keys_arr, out_idx, out_mean, out_cov, out_res, out_rescov, ev, out_ll, out_maha, n, mdim
+        out = layout.frame(
+            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
+            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
         )
         return out, None
 
@@ -1031,8 +841,7 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
     the sequential scalar fold (kalman.py _scalar_lkf_fold_factory), so the
     per-row results are bit-identical to it — no batched LAPACK (the general
     fold's batched SVD pinv on (A,1,1) matrices was the per-step hot spot
-    for this shape) and flat primitive columns across the Python->JVM
-    boundary (VFLAT_SCALAR_OUT_SCHEMA)."""
+    for this shape)."""
     f = float(c["processModel"][0, 0])
     q = float(c["processNoise"][0, 0])
     h = float(c["measurementModel"][0, 0])
@@ -1044,12 +853,12 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
     compute_ll = c["calculateLoglikelihood"] or compute_sll
     compute_maha = c["calculateMahalanobis"]
     ll_window = int(c.get("slidingLikelihoodWindow") or 1)
-    names = [fld.name for fld in VFLAT_SCALAR_OUT_SCHEMA.fields]
+    layout = kalman_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
 
         keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
 
@@ -1134,22 +943,10 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = cols_to_pdf(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": out_idx,
-                "stepIndex": 0,
-                "mean": out_mean,
-                "cov": out_cov,
-                "res": out_res,
-                "resCov": out_rescov,
-                EVENT_TIME: ev if ev is not None else None,
-                "loglikelihood": out_ll,
-                "mahalanobis": out_maha,
-                "slidingLikelihood": out_sll,
-            },
-            N,
-            names,
+        out = layout.frame(
+            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
+            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
+            slidingLikelihood=out_sll,
         )
         return out, None
 
@@ -1357,18 +1154,18 @@ def vectorized_scalar_lkf_scan_fold_factory(c: dict):
     compute_ll = c["calculateLoglikelihood"] or compute_sll
     compute_maha = c["calculateMahalanobis"]
     ll_window = int(c.get("slidingLikelihoodWindow") or 1)
-    names = [fld.name for fld in VFLAT_SCALAR_OUT_SCHEMA.fields]
+    layout = kalman_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
 
         fwd = _scalar_scan_forward(pdf, N, f, q, h, rr, m0, p0)
         out = _scalar_scan_emit(
             fwd, N, f, q, h, rr,
             compute_ll=compute_ll, compute_maha=compute_maha,
-            compute_sll=compute_sll, ll_window=ll_window, names=names,
+            compute_sll=compute_sll, ll_window=ll_window, layout=layout,
         )
         return out, None
 
@@ -1377,7 +1174,7 @@ def vectorized_scalar_lkf_scan_fold_factory(c: dict):
 
 def _scalar_scan_emit(
     fwd, N: int, f, q, h, rr, *,
-    compute_ll, compute_maha, compute_sll, ll_window, names, idx_offset=0,
+    compute_ll, compute_maha, compute_sll, ll_window, layout, idx_offset=0,
 ):
     """Residual family + output frame from a `_scalar_scan_forward` result
     (shared by the in-task scan fold and the distributed engine's seeded
@@ -1426,22 +1223,10 @@ def _scalar_scan_emit(
         if compute_maha:
             out_maha[meas] = np.sqrt(np.maximum((r * r) / S, 0.0))
 
-    return cols_to_pdf(
-        {
-            STATE_KEY: keys_arr,
-            "stateIndex": pos + 1 + idx_offset,
-            "stepIndex": 0,
-            "mean": out_mean,
-            "cov": out_cov,
-            "res": out_res,
-            "resCov": out_rescov,
-            EVENT_TIME: ev if ev is not None else None,
-            "loglikelihood": out_ll,
-            "mahalanobis": out_maha,
-            "slidingLikelihood": out_sll,
-        },
-        N,
-        names,
+    return layout.frame(
+        N, stateKey=keys_arr, stateIndex=pos + 1 + idx_offset, stepIndex=0, m=out_mean,
+        c=out_cov, r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll,
+        mahalanobis=out_maha, slidingLikelihood=out_sll,
     )
 
 
@@ -1482,7 +1267,7 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
     fad2 = fad**2
     compute_ll = c["calculateLoglikelihood"]
     compute_maha = c["calculateMahalanobis"]
-    names = [fld.name for fld in VFLAT_SCALAR_OUT_SCHEMA.fields]
+    layout = kalman_layout(c)
 
     # point offsets (p,) and weights for n = 1
     if kind == "ckf":
@@ -1515,7 +1300,7 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
 
         keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
 
@@ -1603,21 +1388,9 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = pd.DataFrame(
-            {
-                STATE_KEY: keys_arr,
-                "stateIndex": out_idx,
-                "stepIndex": 0,
-                "mean": out_mean,
-                "cov": out_cov,
-                "res": out_res,
-                "resCov": out_rescov,
-                EVENT_TIME: ev if ev is not None else None,
-                "loglikelihood": out_ll,
-                "mahalanobis": out_maha,
-                "slidingLikelihood": np.nan,
-            },
-            columns=names,
+        out = layout.frame(
+            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
+            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
         )
         return out, None
 
@@ -1668,11 +1441,12 @@ def vectorized_lkf_fold_factory(c: dict):
         and not np.any(Q)
         and np.array_equal(F_, eye_n)
     )
+    layout = kalman_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(vflat_nd_fields(n, mdim)), None
+            return layout.frame(0), None
 
         # step-major layout (all pos==0 rows, then pos==1, ...; rows of one
         # key are contiguous after the caller's key+eventTime sort)
@@ -1808,8 +1582,9 @@ def vectorized_lkf_fold_factory(c: dict):
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = emit_nd_flat(
-            keys_arr, out_idx, out_mean, out_cov, out_res, out_rescov, ev, out_ll, out_maha, n, mdim
+        out = layout.frame(
+            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
+            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
         )
         return out, None
 
@@ -2102,8 +1877,8 @@ def vectorized_lkf_scan_fold_factory(c: dict):
     solve — nonsingular since C, J are PSD). log2(N) passes of batched
     (N,n,n) solves/matmuls replace the O(rows-per-key) Python loop;
     covers the per-row-measurementModel OLS regression shape
-    (lkf_ols_multikey). Output contract mirrors the time-synchronous
-    general fold (vflat_nd_schema); parity ~1e-9 relative."""
+    (lkf_ols_multikey). Same output layout as the time-synchronous
+    general fold; parity ~1e-9 relative."""
     n = c["stateSize"]
     mdim = c["measurementSize"]
     F_ = c["processModel"]
@@ -2114,20 +1889,17 @@ def vectorized_lkf_scan_fold_factory(c: dict):
     P0 = c["initialStateCovariance"]
     compute_ll = c["calculateLoglikelihood"]
     compute_maha = c["calculateMahalanobis"]
-    eye_n = np.eye(n)
-
-    def sym(M):
-        return (M + np.swapaxes(M, 1, 2)) * 0.5
+    layout = kalman_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(vflat_nd_fields(n, mdim)), None
+            return layout.frame(0), None
 
         fwd = _nd_scan_forward(pdf, N, n, mdim, F_, Q, R, H_const, m0, P0)
         out = _nd_scan_emit(
             fwd, N, n, mdim, F_, Q, R, H_const,
-            compute_ll=compute_ll, compute_maha=compute_maha,
+            compute_ll=compute_ll, compute_maha=compute_maha, layout=layout,
         )
         return out, None
 
@@ -2136,7 +1908,7 @@ def vectorized_lkf_scan_fold_factory(c: dict):
 
 def _nd_scan_emit(
     fwd, N: int, n, mdim, F_, Q, R, H_const, *,
-    compute_ll, compute_maha, idx_offset=0,
+    compute_ll, compute_maha, layout, idx_offset=0,
 ):
     """Residual family + output frame from a `_nd_scan_forward` result
     (shared by the in-task n-D scan fold and the distributed engine's
@@ -2182,9 +1954,10 @@ def _nd_scan_emit(
             if compute_ll:
                 out_ll[meas] = -0.5 * (mdim * _LOG2PI + logdet + sq)
 
-    return emit_nd_flat(
-        keys_arr, pos + 1 + idx_offset, out_mean, out_cov, out_res, out_rescov,
-        ev, out_ll, out_maha, n, mdim,
+    return layout.frame(
+        N, stateKey=keys_arr, stateIndex=pos + 1 + idx_offset, stepIndex=0, m=out_mean,
+        c=out_cov, r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll,
+        mahalanobis=out_maha,
     )
 
 
@@ -2207,12 +1980,12 @@ def vectorized_scalar_smoother_scan_fold_factory(c: dict):
     rr = float(c["measurementNoise"][0, 0])
     m0 = float(c["initialStateMean"][0])
     p0 = float(c["initialStateCovariance"][0, 0])
-    names = [STATE_KEY, "stateIndex", "stepIndex", "mean", "cov", "gain", EVENT_TIME]
+    layout = smoother_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         (
             keys_arr, seg, pos, first_idx, has_z, Z, ev, m0k, p0k,
             filt_m, filt_P,
@@ -2227,7 +2000,7 @@ def vectorized_scalar_smoother_scan_fold_factory(c: dict):
         anchors = np.nonzero(pos >= lag - 1)[0]
         M = len(anchors)
         if M == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         total = M * lag
         o_row = np.empty(total, dtype=np.int64)
         o_step = np.empty(total, dtype=np.int64)
@@ -2253,18 +2026,9 @@ def vectorized_scalar_smoother_scan_fold_factory(c: dict):
             o_mean[w : w + M] = sm_m
             o_cov[w : w + M] = sm_p
             o_gain[w : w + M] = gj
-        out = cols_to_pdf(
-            {
-                STATE_KEY: keys_arr[o_row],
-                "stateIndex": pos[o_row] + 1,
-                "stepIndex": o_step,
-                "mean": o_mean,
-                "cov": o_cov,
-                "gain": o_gain,
-                EVENT_TIME: ev[o_row] if ev is not None else None,
-            },
-            total,
-            names,
+        out = layout.frame(
+            total, stateKey=keys_arr[o_row], stateIndex=pos[o_row] + 1, stepIndex=o_step,
+            m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
         )
         return out, None
 
@@ -2307,12 +2071,12 @@ def vectorized_nd_smoother_scan_fold_factory(c: dict):
     H_const = c["measurementModel"]
     m0 = c["initialStateMean"]
     P0 = c["initialStateCovariance"]
-    names = [STATE_KEY, "stateIndex", "stepIndex", "mean", "cov", "gainVals", EVENT_TIME]
+    layout = smoother_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         (
             keys_arr, seg, pos, first_idx, has_z, Z, Hrows, ev, m0k, P0k,
             filt_m, filt_P,
@@ -2327,7 +2091,7 @@ def vectorized_nd_smoother_scan_fold_factory(c: dict):
         anchors = np.nonzero(pos >= lag - 1)[0]
         M = len(anchors)
         if M == 0:
-            return empty_pdf(names), None
+            return layout.frame(0), None
         total = M * lag
         o_row = np.empty(total, dtype=np.int64)
         o_step = np.empty(total, dtype=np.int64)
@@ -2353,21 +2117,9 @@ def vectorized_nd_smoother_scan_fold_factory(c: dict):
             o_mean[w : w + M] = sm_m
             o_cov[w : w + M] = sm_P
             o_gain[w : w + M] = gj
-        # one transpose+reshape per column, then row views — NOT 300k
-        # per-row .T.ravel() Python calls (the emission was the shared
-        # bound that compressed the scan's speedup)
-        out = cols_to_pdf(
-            {
-                STATE_KEY: keys_arr[o_row],
-                "stateIndex": pos[o_row] + 1,
-                "stepIndex": o_step,
-                "mean": list(o_mean),
-                "cov": list(o_cov.transpose(0, 2, 1).reshape(total, -1)),
-                "gainVals": list(o_gain.transpose(0, 2, 1).reshape(total, -1)),
-                EVENT_TIME: ev[o_row] if ev is not None else None,
-            },
-            total,
-            names,
+        out = layout.frame(
+            total, stateKey=keys_arr[o_row], stateIndex=pos[o_row] + 1, stepIndex=o_step,
+            m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
         )
         return out, None
 
@@ -2406,6 +2158,7 @@ def vectorized_smoother_fold_factory(c: dict):
     fad2 = float(c["fadingFactor"]) ** 2
     scalar = n == 1 and mdim == 1
     eye_n = np.eye(n)
+    layout = smoother_layout(c)
 
     def _layout(pdf):
         N = len(pdf)
@@ -2418,18 +2171,9 @@ def vectorized_smoother_fold_factory(c: dict):
         order = np.lexsort((key_idx, pos))
         return N, keys_arr, key_codes, key_idx, K, counts, first, pos, order
 
-    def _emit_frame(cols, names):
-        n_out = len(cols[0])
-        if n_out == 0:
-            return empty_pdf(names)
-        # block-consolidation-free (the cols_to_pdf rationale): the float
-        # columns here are N*lag long
-        return cols_to_pdf(dict(zip(names, cols)), n_out, names)
-
     def fold_scalar(pdf: pd.DataFrame, _state):
-        names = [STATE_KEY, "stateIndex", "stepIndex", "mean", "cov", "gain", EVENT_TIME]
         if len(pdf) == 0:
-            return _emit_frame([[] for _ in names], names), None
+            return layout.frame(0), None
         N, keys_arr, key_codes, key_idx, K, counts, first, pos, order = _layout(pdf)
         f = float(F_[0, 0])
         q = float(Q[0, 0])
@@ -2510,21 +2254,15 @@ def vectorized_smoother_fold_factory(c: dict):
                 o_cov[w : w + A] = sm_p
                 o_gain[w : w + A] = gj
                 w += A
-        cols = [
-            keys_arr[o_row],
-            o_idx,
-            o_step,
-            o_mean,
-            o_cov,
-            o_gain,
-            ev[o_row] if ev is not None else None,
-        ]
-        return _emit_frame(cols, names), None
+        out = layout.frame(
+            M, stateKey=keys_arr[o_row], stateIndex=o_idx, stepIndex=o_step, m=o_mean,
+            c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
+        )
+        return out, None
 
     def fold_general(pdf: pd.DataFrame, _state):
-        names = [STATE_KEY, "stateIndex", "stepIndex", "mean", "cov", "gainVals", EVENT_TIME]
         if len(pdf) == 0:
-            return _emit_frame([[] for _ in names], names), None
+            return layout.frame(0), None
         N, keys_arr, key_codes, key_idx, K, counts, first, pos, order = _layout(pdf)
 
         has_z, Z = read_measurements(pdf, mdim)
@@ -2618,17 +2356,11 @@ def vectorized_smoother_fold_factory(c: dict):
                 o_cov[w : w + A] = sm_P
                 o_gain[w : w + A] = gj
                 w += A
-        n_out = len(o_row)
-        cols = [
-            keys_arr[o_row],
-            o_idx,
-            o_step,
-            list(o_mean),
-            list(o_cov.transpose(0, 2, 1).reshape(n_out, -1)),
-            list(o_gain.transpose(0, 2, 1).reshape(n_out, -1)),
-            ev[o_row] if ev is not None else None,
-        ]
-        return _emit_frame(cols, names), None
+        out = layout.frame(
+            M, stateKey=keys_arr[o_row], stateIndex=o_idx, stepIndex=o_step, m=o_mean,
+            c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
+        )
+        return out, None
 
     return fold_scalar if scalar else fold_general
 
@@ -2638,26 +2370,6 @@ def supports_vectorized_mixture(c: dict) -> bool:
     per-row initial model (batch mode walks all keys in lock-step, so the
     schedule must be key-independent)."""
     return not c.get("hasPerRowCols")
-
-
-def mixture_param_width(c: dict) -> int:
-    """Flat parameter vector width per mixture model row: gaussian packs
-    (mean, row-major covariance) per component; scalar families one value
-    per component."""
-    kc = len(c["initialWeights"])
-    if c["family"] == "gaussian":
-        d = int(np.asarray(c["initialParams"]["means"]).shape[1])
-        return kc * (d + d * d)
-    return kc
-
-
-def mixture_flat_fields(kc: int, n_params: int) -> list:
-    return (
-        [STATE_KEY, "stateIndex"]
-        + [f"w{j}" for j in range(kc)]
-        + [f"p{i}" for i in range(n_params)]
-        + [EVENT_TIME, "loglikelihood"]
-    )
 
 
 def vectorized_mixture_fold_factory(c: dict):
@@ -2678,20 +2390,14 @@ def vectorized_mixture_fold_factory(c: dict):
     w0 = c["initialWeights"]
     p0 = c["initialParams"]
     kc = len(w0)
-    # FLAT PRIMITIVE double columns across the Python->JVM boundary
-    # (mixture_flat_fields; the array-column emission cost ~19us per model
-    # row in Arrow list transport + reassembly — at minibatch 1 that was
-    # the whole query wall). mixture.py _shapeMixtureOutput arrays them
-    # back JVM-side.
-    n_params = mixture_param_width(c)
-    out_fields = mixture_flat_fields(kc, n_params)
+    layout = mixture_layout(c)
 
     from artan_spark.types import vec_to_np
 
     def fold(pdf: pd.DataFrame, _state):
         N = len(pdf)
         if N == 0:
-            return empty_pdf(out_fields), None
+            return layout.frame(0), None
         keys_acc, idx_acc, W_acc, P_acc, ev_acc, ll_acc = [], [], [], [], [], []
         keys_arr = pdf[STATE_KEY].to_numpy()
         key_idx, _codes = pd.factorize(keys_arr)  # see multi_key_layout
@@ -2861,24 +2567,19 @@ def vectorized_mixture_fold_factory(c: dict):
                 emitted[rows] = True
 
             if not emitted.any():
-                return empty_pdf(out_fields), None
+                return layout.frame(0), None
             pos = np.arange(N) - first[key_idx]
             sel = np.nonzero(emitted)[0]
-            full = len(sel) == N
-            data = {
-                STATE_KEY: keys_arr if full else keys_arr[sel],
-                "stateIndex": (pos + 1 if full else pos[sel] + 1).astype(np.int64),
-            }
-            for j in range(kc):
-                data[f"w{j}"] = out_W[:, j] if full else out_W[sel, j]
-            for i in range(2 * kc):
-                data[f"p{i}"] = out_P[:, i] if full else out_P[sel, i]
-            if ev is not None:
-                data[EVENT_TIME] = ev if full else ev[sel]
-            else:
-                data[EVENT_TIME] = [None] * len(sel)
-            data["loglikelihood"] = out_ll if full else out_ll[sel]
-            return pd.DataFrame(data, columns=out_fields), None
+            if len(sel) < N:
+                keys_arr, pos, out_W, out_P, out_ll = (
+                    keys_arr[sel], pos[sel], out_W[sel], out_P[sel], out_ll[sel]
+                )
+                ev = ev[sel] if ev is not None else None
+            out = layout.frame(
+                len(sel), stateKey=keys_arr, stateIndex=pos + 1, w=out_W, p=out_P,
+                eventTime=ev, loglikelihood=out_ll,
+            )
+            return out, None
 
         if family in ("poisson", "bernoulli") and mb == 1:
             # Same fused minibatch-1 treatment for the scalar families:
@@ -2941,22 +2642,7 @@ def vectorized_mixture_fold_factory(c: dict):
                     ev_acc.append(ev[rows])
                 ll_acc.append(lls)
 
-            if not keys_acc:
-                return empty_pdf(out_fields), None
-            W = np.vstack(W_acc)
-            P = np.vstack(P_acc)
-            n_out = len(W)
-            data = {
-                STATE_KEY: np.concatenate(keys_acc),
-                "stateIndex": np.concatenate(idx_acc),
-            }
-            for j in range(kc):
-                data[f"w{j}"] = W[:, j]
-            for i in range(P.shape[1]):
-                data[f"p{i}"] = P[:, i]
-            data[EVENT_TIME] = np.concatenate(ev_acc) if ev is not None else [None] * n_out
-            data["loglikelihood"] = np.concatenate(ll_acc)
-            return pd.DataFrame(data, columns=out_fields), None
+            return _mixture_frame(layout, keys_acc, idx_acc, W_acc, P_acc, ev_acc, ll_acc), None
 
         for t in range(T):
             alive = np.nonzero(steps > t)[0]
@@ -3024,21 +2710,21 @@ def vectorized_mixture_fold_factory(c: dict):
                 ev_acc.append(ev[trig])
             ll_acc.append(lls)
 
-        if not keys_acc:
-            return empty_pdf(out_fields), None
-        W = np.vstack(W_acc)
-        P = np.vstack(P_acc)
-        n_out = len(W)
-        data = {
-            STATE_KEY: np.concatenate(keys_acc),
-            "stateIndex": np.concatenate(idx_acc),
-        }
-        for j in range(kc):
-            data[f"w{j}"] = W[:, j]
-        for i in range(P.shape[1]):
-            data[f"p{i}"] = P[:, i]
-        data[EVENT_TIME] = np.concatenate(ev_acc) if ev is not None else [None] * n_out
-        data["loglikelihood"] = np.concatenate(ll_acc)
-        return pd.DataFrame(data, columns=out_fields), None
+        return _mixture_frame(layout, keys_acc, idx_acc, W_acc, P_acc, ev_acc, ll_acc), None
 
     return fold
+
+
+def _mixture_frame(layout, keys_acc, idx_acc, W_acc, P_acc, ev_acc, ll_acc) -> pd.DataFrame:
+    """The mixture layout's frame from the per-step output blocks."""
+    if not keys_acc:
+        return layout.frame(0)
+    return layout.frame(
+        sum(map(len, keys_acc)),
+        stateKey=np.concatenate(keys_acc),
+        stateIndex=np.concatenate(idx_acc),
+        w=np.vstack(W_acc),
+        p=np.vstack(P_acc),
+        eventTime=np.concatenate(ev_acc) if ev_acc else None,
+        loglikelihood=np.concatenate(ll_acc),
+    )

@@ -1,6 +1,6 @@
-"""Spark-free truth table for ``resolve_engine``: which engine, batched flag,
-fold factory and boundary kind every (operator shape, foldEngine,
-vectorizedBatch, batch/stream) case gets, and which cases raise.
+"""Spark-free truth table for ``resolve_engine``: which engine, batched flag
+and fold factory every (operator shape, foldEngine, vectorizedBatch,
+batch/stream) case gets, and which cases raise.
 
 The table in ``data/engine_truth_table.json`` was recorded by running each
 case through ``transform()`` on the code before the resolver existed (one
@@ -28,6 +28,7 @@ from artan_spark.operators import (
 )
 
 TABLE = os.path.join(os.path.dirname(__file__), "data", "engine_truth_table.json")
+PUBLIC_SCHEMAS = os.path.join(os.path.dirname(__file__), "data", "public_schemas.json")
 
 F2 = np.array([[1.0, 1.0], [0.0, 1.0]])
 H2 = np.array([[1.0, 0.0]])
@@ -213,7 +214,6 @@ def test_resolver_matches_recorded_table(name):
             "engine": plan.engine,
             "vectorized": plan.vectorized,
             "factory": plan.factory.__name__,
-            "boundary": plan.boundary,
         }
         assert got == want, row_id(*key)
         assert plan.reason, row_id(*key)
@@ -225,15 +225,31 @@ SCHEMA_CASES = (
     "lkf1", "lkf2", "ekf1", "ukf1", "ukf2", "ckf1", "sm1", "sm2",
     "rls1", "rls2", "lms1", "lms2", "gmm", "poisson", "bernoulli",
 )
-# distributedScan runs its first pass at transform time. Its scalar,
-# smoother, RLS and LMS transforms reassemble through the operator's own
-# _shapeOutput with the sequential boundary; only the n-D LKF has its own
-# reassembly (distscan._shape_nd_output)
+
+
+def pinned_schema_cases():
+    """(name, operator, mode) of every pinned public schema: each
+    SCHEMA_CASES shape on the sequential engine, a 2-state LKF emitting
+    its system matrices and multi-step forecasts, and a streaming 1-D LKF.
+    ``tools/capture_engine_table.py`` records them in PUBLIC_SCHEMAS."""
+    for name in SCHEMA_CASES:
+        has_fe = "foldEngine" in CASES[name]()._paramMap
+        yield name, configured(name, "sequential" if has_fe else None, False), "batch"
+    yield "lkf2_osm_msp", _kalman(
+        LinearKalmanFilter, 2, outputSystemMatrices=True, multiStepPredict=2
+    ), "batch"
+    yield "lkf1_stream", _kalman(LinearKalmanFilter), "stream"
+
+
+# distributedScan runs its first pass at transform time, so it is compared
+# on one shape only; every distributed transform reassembles through the
+# operator's own _shapeOutput
 DIST_CASES = {"lkf2"}
 
 
-@pytest.fixture(scope="module")
-def frame(spark):
+def _frame_rows():
+    """Three keys of 8 rows, plus one k0 row with a NaN measurement and
+    label (``features2`` is the 2-D feature column of the rls2/lms2 runs)."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
@@ -246,14 +262,55 @@ def frame(spark):
             [1.0],
             [float(i)],
             float(i % 2),
+            [1.0, float(i)],
         )
         for i in range(24)
     ]
+    nan = float("nan")
+    rows.append(("k0", t0 + dt.timedelta(seconds=24), [nan], nan, [1.0], [24.0], 0.0, [1.0, 24.0]))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def frame(spark):
     return spark.createDataFrame(
-        rows,
+        _frame_rows(),
         "stateKey string, ts timestamp, measurement array<double>, label double, "
-        "features array<double>, sample array<double>, sampled double",
+        "features array<double>, sample array<double>, sampled double, "
+        "features2 array<double>",
     )
+
+
+@pytest.mark.parametrize("name", ["sm1", "sm2", "lkf2", "rls2", "lms2"])
+def test_nan_input_completes(frame, name):
+    """NaN arrives from Arrow as NULL; no public field may declare it
+    impossible, or the job aborts reading the fold's output."""
+    from collections import Counter
+
+    op = configured(name, "sequential", False)
+    if name in ("rls2", "lms2"):
+        op._set("featuresCol", "features2")
+    per_key = Counter(r[0] for r in _frame_rows()).values()
+    lag = 3  # the smoother cases' fixedLag
+    want = sum(max(0, k - lag + 1) * lag for k in per_key) if name.startswith("sm") else sum(per_key)
+    assert len(op.transform(frame).collect()) == want
+
+
+def test_public_schemas_match_recorded(spark, frame):
+    from pyspark.sql import functions as F
+
+    stream = spark.readStream.format("rate").load().select(
+        F.lit("k").alias("stateKey"),
+        F.col("timestamp").alias("ts"),
+        F.array(F.col("value").cast("double")).alias("measurement"),
+    )
+    with open(PUBLIC_SCHEMAS) as f:
+        want = json.load(f)
+    got = {
+        name: json.loads(op.transform(stream if mode == "stream" else frame).schema.json())
+        for name, op, mode in pinned_schema_cases()
+    }
+    assert got == want
 
 
 @pytest.mark.parametrize("name", SCHEMA_CASES)

@@ -3,11 +3,12 @@
 For each case of ``tests/test_engine_resolver.py`` (operator shape x
 foldEngine x vectorizedBatch x batch/stream) this builds the plan on a tiny
 frame and records the engine the operator reports, whether a batched fold
-ran, the fold factory inside the Python UDF, the boundary kind of the UDF's
-output schema, or the ``ValueError`` message. The distributed-scan
+ran, the fold factory inside the Python UDF, or the ``ValueError`` message. The distributed-scan
 transforms are replaced by recorders that end the call, so no case
 launches a Python worker; the only Spark jobs are the bucket-sizing
-samples.
+samples. In the same run it records the public schema of every
+``pinned_schema_cases()`` entry of the cases module into
+``data/public_schemas.json`` next to it.
 
     python tools/capture_engine_table.py --out tests/data/engine_truth_table.json
 
@@ -68,21 +69,6 @@ def _find_factory(fn, depth=0):
         if found:
             return found
     return None
-
-
-def _boundary(op, schema):
-    """Boundary kind of a UDF output schema: flat doubles (scalar), flat
-    mixture columns, the operator's own sequential schema, or n-D."""
-    from pyspark.sql.types import DoubleType
-
-    names = schema.fieldNames()
-    if "w0" in names:
-        return "mixture"
-    if "mean" in names and isinstance(schema["mean"].dataType, DoubleType):
-        return "scalar"
-    if "m0" not in names and schema == op._outSchema():
-        return "own"
-    return "nd"
 
 
 def _frames(spark, tmp):
@@ -160,14 +146,12 @@ def capture(cases_path: str) -> dict:
         orig = getattr(GroupedData, kind)
 
         def wrapper(self, fn, *args, **kwargs):
-            schema = args[0] if args else kwargs.get("outputStructType")
             if kind == "transformWithStateInPandas":
                 fn = kwargs.get("statefulProcessor", fn)
             seen.setdefault(
                 "udf",
                 {
                     "factory": _find_factory(fn),
-                    "schema": schema,
                     "salted": "__salt__" in self._df.columns,
                 },
             )
@@ -189,6 +173,14 @@ def capture(cases_path: str) -> dict:
     table = {}
     try:
         batch, stream = _frames(spark, tmp)
+        schemas = {
+            name: json.loads(op.transform(stream if mode == "stream" else batch).schema.json())
+            for name, op, mode in cases.pinned_schema_cases()
+        }
+        out = os.path.join(os.path.dirname(os.path.abspath(cases_path)), "data", "public_schemas.json")
+        with open(out, "w") as f:
+            json.dump(schemas, f, indent=1, sort_keys=True)
+            f.write("\n")
         for key in cases.case_keys():
             name, fe, vb, mode = key
             seen.clear()
@@ -205,7 +197,6 @@ def capture(cases_path: str) -> dict:
                     "engine": op._lastFoldEngine,
                     "vectorized": True,
                     "factory": seen["dist"],
-                    "boundary": "own",
                 }
             else:
                 udf = seen["udf"]
@@ -213,7 +204,6 @@ def capture(cases_path: str) -> dict:
                     "engine": getattr(op, "_lastFoldEngine", None) or "sequential",
                     "vectorized": udf["salted"],
                     "factory": udf["factory"],
-                    "boundary": _boundary(op, udf["schema"]),
                 }
             reported = getattr(op, "_lastFoldVectorized", None)
             assert reported in (None, entry["vectorized"]), (key, reported)
