@@ -14,14 +14,15 @@ chunk in a deterministic order (FileStreamSource processes oldest-first).
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.conversion import LocalDataToArrowConversion
 
 
 def stream_transform(
@@ -42,18 +43,13 @@ def stream_transform(
     name = "artan_stream_" + uuid.uuid4().hex[:8]
     try:
         base_t = time.time() - 3600
-        step = 0
-        for i in range(0, len(rows), chunk_rows):
-            chunk_dir = tempfile.mkdtemp(prefix="artan_chunk_")
-            spark.createDataFrame(rows[i : i + chunk_rows], schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(chunk_dir)
-            for part in sorted(glob.glob(os.path.join(chunk_dir, "part-*.parquet"))):
-                dest = os.path.join(src_dir, f"chunk-{step:06d}.parquet")
-                shutil.move(part, dest)
-                os.utime(dest, (base_t + step, base_t + step))
-                step += 1
-            shutil.rmtree(chunk_dir, ignore_errors=True)
+        for step, i in enumerate(range(0, len(rows), chunk_rows)):
+            # written driver-side through Arrow: the same rows, types and
+            # order a one-partition Spark write gives, without a job per chunk
+            dest = os.path.join(src_dir, f"chunk-{step:06d}.parquet")
+            chunk = LocalDataToArrowConversion.convert(rows[i : i + chunk_rows], schema, False)
+            pq.write_table(chunk, dest)
+            os.utime(dest, (base_t + step, base_t + step))
 
         stream = (
             spark.readStream.schema(schema)
