@@ -72,7 +72,7 @@ class Layout:
             [StructField(c, types.get(c, DoubleType()), True) for c in self.columns]
         )
 
-    def frame(self, n: int, **cols) -> pd.DataFrame:
+    def frame(self, n: int, /, **cols) -> pd.DataFrame:
         """The boundary frame of ``n`` rows. The key, index and event-time
         entries of ``cols`` are arrays or one value for the whole frame (a
         per-key fold's key, stepIndex 0, no event time); a block is an
@@ -136,15 +136,19 @@ def _per_row(v, n: int, dtype):
 def kalman_layout(c: dict) -> Layout:
     """LKF/EKF/UKF/CKF (MMAE included): state mean ``m`` and covariance
     ``c``, residual ``r`` and its covariance ``rc``, and the resolved
-    system matrices ``pm``/``pn``/``mm`` when outputSystemMatrices is set."""
+    system matrices ``pm``/``pn``/``mm`` when outputSystemMatrices is set.
+    A likelihood output crosses only when its flag is set."""
     n, mdim = int(c["stateSize"]), int(c["measurementSize"])
     blocks = [("m", n), ("c", n * n), ("r", mdim), ("rc", mdim * mdim)]
     if c.get("outputSystemMatrices"):
         blocks += [("pm", n * n), ("pn", n * n), ("mm", mdim * n)]
+    outputs = (
+        ("loglikelihood", "calculateLoglikelihood"),
+        ("mahalanobis", "calculateMahalanobis"),
+        ("slidingLikelihood", "calculateSlidingLikelihood"),
+    )
     return Layout(
-        blocks,
-        ("stateIndex", "stepIndex"),
-        ("loglikelihood", "mahalanobis", "slidingLikelihood"),
+        blocks, ("stateIndex", "stepIndex"), [name for name, flag in outputs if c.get(flag)]
     )
 
 

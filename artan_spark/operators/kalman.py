@@ -252,19 +252,40 @@ def _kalman_fold_factory(c: dict):
     mdim = c["measurementSize"]
     emit_sysmat = c.get("outputSystemMatrices")
     layout = kalman_layout(c)
+    batched_fns = bool(c.get("vectorizedFunctions"))
+    # the batched folds pass a per-row measurementModel column as a stack
+    h_stack = "measurementModel" in (c.get("perRowCols") or ())
+
+    def call(fn, m, model, stack=False):
+        """User function ``fn`` at state ``m``. With vectorizedFunctions it
+        follows the batched folds' contract: it takes a (1, n) state stack
+        (and the model as a stack of one where they pass a stack) and
+        returns a stack of one."""
+        if not batched_fns:
+            return fn(m, model)
+        return np.asarray(fn(m[None], model[None] if stack else model), dtype=np.float64)[0]
+
+    def call_points(fn, pts, model, stack=False):
+        """``fn`` at every sigma point: one call on the (p, n) stack with
+        vectorizedFunctions (a model stack repeats the model per point),
+        else one call per point."""
+        if not batched_fns:
+            return np.stack([np.asarray(fn(p, model), dtype=np.float64).ravel() for p in pts])
+        models = np.broadcast_to(model, (len(pts), *model.shape)) if stack else model
+        return np.asarray(fn(pts, models), dtype=np.float64).reshape(len(pts), -1)
 
     def predict(m, P, Fm, Q, B, u):
         if kind == "lkf":
             return linalg.kf_predict(m, P, Fm, Q, B, u, fading)
         if kind == "ekf":
             pf, pj, pnj = c["processFunction"], c["processStateJacobian"], c["processNoiseJacobian"]
-            m1 = pf(m, Fm) if pf is not None else Fm @ m
+            m1 = call(pf, m, Fm) if pf is not None else Fm @ m
             if B is not None and u is not None:
                 m1 = m1 + B @ u
-            Fj = pj(m, Fm) if pj is not None else Fm
+            Fj = call(pj, m, Fm) if pj is not None else Fm
             Qe = Q
             if pnj is not None:
-                L = pnj(m, Q)
+                L = call(pnj, m, Q)
                 Qe = L @ Q @ L.T
             P1 = (fading**2) * (Fj @ P @ Fj.T) + Qe
             return np.asarray(m1, dtype=np.float64).ravel(), linalg.sym(P1)
@@ -272,7 +293,7 @@ def _kalman_fold_factory(c: dict):
         pf = c["processFunction"]
         pts, wm, wc = _points(kind, c, m, P)
         if pf is not None:
-            prop = np.stack([np.asarray(pf(p, Fm), dtype=np.float64).ravel() for p in pts])
+            prop = call_points(pf, pts, Fm)
         else:
             prop = pts @ Fm.T
         if B is not None and u is not None:
@@ -290,11 +311,11 @@ def _kalman_fold_factory(c: dict):
             return m1, P1, r, S, None
         if kind == "ekf":
             mf, mj, mnj = c["measurementFunction"], c["measurementStateJacobian"], c["measurementNoiseJacobian"]
-            zhat = np.asarray(mf(m, H), dtype=np.float64).ravel() if mf is not None else H @ m
-            Hj = mj(m, H) if mj is not None else H
+            zhat = np.asarray(call(mf, m, H, h_stack), dtype=np.float64).ravel() if mf is not None else H @ m
+            Hj = call(mj, m, H, h_stack) if mj is not None else H
             Re = R
             if mnj is not None:
-                L = mnj(m, R)
+                L = call(mnj, m, R)
                 Re = L @ R @ L.T
             r = z - zhat
             S = linalg.sym(Hj @ P @ Hj.T + Re)
@@ -306,7 +327,7 @@ def _kalman_fold_factory(c: dict):
         mf = c["measurementFunction"]
         pts, wm, wc = _points(kind, c, m, P)
         if mf is not None:
-            zpts = np.stack([np.asarray(mf(p, H), dtype=np.float64).ravel() for p in pts])
+            zpts = call_points(mf, pts, H, stack=True)
         else:
             zpts = pts @ H.T
         zmean, S = linalg.unscented_transform(zpts, wm, wc, R)

@@ -118,8 +118,8 @@ def vec_cells_to_2d(cells, width: int, has_mask=None) -> np.ndarray:
     Fast path: one C-level ``np.concatenate`` over the present cells plus a
     reshape — same doubles, no per-row Python ``asarray``/``ravel`` loop
     (measured ~10x on the 2.5M-row lkf_ols_multikey bucket at sf1.0). Any
-    non-conforming cell (wrong length, non-numeric) makes the reshape or
-    cast raise and drops to the exact original loop."""
+    non-conforming cell makes the reshape or cast raise and drops to the
+    per-row loop, which raises on a cell of the wrong length."""
     N = len(cells)
     out = np.zeros((N, width))
     idx = None if has_mask is None else np.nonzero(has_mask)[0]
@@ -132,7 +132,10 @@ def vec_cells_to_2d(cells, width: int, has_mask=None) -> np.ndarray:
         vals = flat.reshape(n_sel, width)
     except (TypeError, ValueError):
         for i in range(N) if idx is None else idx:
-            out[i] = np.asarray(cells[i], dtype=np.float64).ravel()
+            v = np.asarray(cells[i], dtype=np.float64).ravel()
+            if len(v) != width:
+                raise ValueError(f"expected {width} values per cell, got {len(v)}") from None
+            out[i] = v
         return out
     if n_sel == N:
         return vals
@@ -176,11 +179,10 @@ def cells_not_none(cells) -> np.ndarray:
 # object per row (~1-2 us/row to materialize + another ~1 us/row for the fold
 # to read), while the same doubles projected JVM-side into plain double
 # columns cross as float64 buffers the fold reads with one .to_numpy() per
-# element. The vectorized transforms ship `__zok__`/`__z{j}__` (and
-# `__hr__`/`__hc__`/`__h{j}__` when a per-row measurementModel is set) and
-# drop the cell columns; the cell paths below stay as the fallback so
-# direct-pdf callers (tests, the distributed-scan engine's own frames) are
-# unchanged.
+# element. The vectorized transforms and both distributed-scan passes ship
+# `__zok__`/`__z{j}__` (and `__hr__`/`__hc__`/`__h{j}__` when a per-row
+# measurementModel is set) and drop the cell columns; the cell paths below
+# stay as the fallback so direct-pdf callers (tests, tools) are unchanged.
 
 
 def flat_input_projection(keyed, mdim: int, n: int):
@@ -288,6 +290,54 @@ def multi_key_layout(pdf: pd.DataFrame):
     return keys_arr, key_idx, K, counts, first, order
 
 
+def key_runs(keys_arr: np.ndarray):
+    """(seg, first_idx, pos) of a frame whose keys are contiguous runs (the
+    caller sorted it by key and event time): each row's 0-based run id,
+    each run's first row, each row's 0-based position within its run."""
+    new_key = np.ones(len(keys_arr), dtype=bool)
+    new_key[1:] = keys_arr[1:] != keys_arr[:-1]
+    seg = np.cumsum(new_key) - 1
+    first_idx = np.nonzero(new_key)[0]
+    return seg, first_idx, np.arange(len(keys_arr)) - first_idx[seg]
+
+
+def affine_scan(S: np.ndarray, adds: list, pos: np.ndarray, seed=None):
+    """Segmented inclusive scan (Hillis-Steele doubling, in place) of the
+    affine composites v -> S*v + a that the RLS information form and the
+    normalized LMS reduce to. ``S`` is (N,), each ``adds`` entry (N, ...)
+    takes S as a scalar scale; composing right after left gives
+    S = S_r*S_l, a = S_r*a_l + a_r. ``pos`` is each row's position within
+    its key run (``key_runs``): rows d apart combine only inside one run.
+
+    ``seed``: an incoming composite ``(S0, adds0)`` composed before every
+    prefix — the distributed engine's chunk seed. Returns (S, adds)."""
+    N = len(S)
+    d = 1
+    while d < N:
+        mk = pos[d:] >= d
+        Sr = S[d:]
+        news = [Sr.reshape(-1, *(1,) * (a.ndim - 1)) * a[:-d] + a[d:] for a in adds]
+        S[d:] = np.where(mk, Sr * S[:-d], Sr)
+        for a, na in zip(adds, news):
+            a[d:] = np.where(mk.reshape(-1, *(1,) * (a.ndim - 1)), na, a[d:])
+        d *= 2
+    if seed is None:
+        return S, adds
+    S0, adds0 = seed
+    return S * S0, [S * a0 + a for a0, a in zip(adds0, adds)]
+
+
+def _rls_prior(c: dict, n: int):
+    """RLS prior (m0, P0) from the params: zeros and the identity unless
+    initialStateMean / regularizationMatrix are set."""
+    m0 = c["initialStateMean"]
+    P0 = c["regularizationMatrix"]
+    return (
+        np.zeros(n) if m0 is None else np.asarray(m0, dtype=np.float64).ravel(),
+        np.eye(n) if P0 is None else np.asarray(P0, dtype=np.float64),
+    )
+
+
 def vectorized_nd_rls_scan_fold_factory(c: dict):
     """n-D RLS parallel scan: the matrix information form. With
     I = P^-1 and beta = I @ m the forgetting recursion is
@@ -305,16 +355,7 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
     sequential rank-1 recursion (tests/test_scan_engine.py)."""
     lam = float(c["forgettingFactor"])
     n = int(c["stateSize"])
-    m0v = (
-        np.zeros(n)
-        if c["initialStateMean"] is None
-        else np.asarray(c["initialStateMean"], dtype=np.float64).ravel()
-    )
-    P0m = (
-        np.eye(n)
-        if c["regularizationMatrix"] is None
-        else np.asarray(c["regularizationMatrix"], dtype=np.float64)
-    )
+    m0v, P0m = _rls_prior(c, n)
     I0 = np.linalg.inv(P0m)
     beta0 = I0 @ m0v
     layout = rls_layout(c)
@@ -324,35 +365,13 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
         if N == 0:
             return layout.frame(0), None
         keys_arr = pdf[STATE_KEY].to_numpy()
-        new_key = np.ones(N, dtype=bool)
-        new_key[1:] = keys_arr[1:] != keys_arr[:-1]
-        first_idx = np.nonzero(new_key)[0]
-        seg = np.cumsum(new_key) - 1
-        pos = np.arange(N) - first_idx[seg]
-
+        pos = key_runs(keys_arr)[2]
         y = pdf["label"].to_numpy(dtype=np.float64)
-        feats = pdf["features"].values
-        X = vec_cells_to_2d(feats, n)
+        X = vec_cells_to_2d(pdf["features"].values, n)
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-
-        S = np.full(N, lam)
-        aI = np.einsum("ai,aj->aij", X, X)
-        aB = X * y[:, None]
-        d = 1
-        while d < N:
-            mk = pos[d:] >= d
-            mv = mk[:, None]
-            mm = mk[:, None, None]
-            Sl, Il, Bl = S[:-d], aI[:-d], aB[:-d]
-            Sr, Ir, Br = S[d:], aI[d:], aB[d:]
-            nS = Sr * Sl
-            nI = Sr[:, None, None] * Il + Ir
-            nB = Sr[:, None] * Bl + Br
-            S[d:] = np.where(mk, nS, Sr)
-            aI[d:] = np.where(mm, nI, Ir)
-            aB[d:] = np.where(mv, nB, Br)
-            d *= 2
-
+        S, (aI, aB) = affine_scan(
+            np.full(N, lam), [np.einsum("ai,aj->aij", X, X), X * y[:, None]], pos
+        )
         Imat = S[:, None, None] * I0 + aI
         beta = S[:, None] * beta0 + aB
         mean = np.linalg.solve(Imat, beta[..., None])[..., 0]
@@ -364,69 +383,74 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
     return fold
 
 
+def scalar_features(pdf: pd.DataFrame, engine: str, shape: str = "shape") -> np.ndarray:
+    """The 1-element ``features`` cells as one float64 vector; a wider
+    first cell raises the guided error of ``engine``."""
+    feats = pdf["features"].values
+    if len(np.ravel(feats[0])) != 1:
+        raise ValueError(
+            f"foldEngine={engine!r} supports the 1-D {shape} only — use "
+            "the sequential engine for n-D feature vectors"
+        )
+    return np.fromiter((np.ravel(f)[0] for f in feats), dtype=np.float64, count=len(feats))
+
+
+def _affine_frame(pdf: pd.DataFrame, seed, offset: int, X: np.ndarray, elements, emit):
+    """One seeded affine-scan pass over a (key, eventTime)-sorted frame:
+    ``elements(X, y) -> (S, adds)`` per row, the segmented scan composed
+    after ``seed``, then ``emit(keys, stateIndex, S, adds, ev)``."""
+    keys_arr = pdf[STATE_KEY].to_numpy()
+    pos = key_runs(keys_arr)[2]
+    S, adds = affine_scan(*elements(X, pdf["label"].to_numpy(dtype=np.float64)), pos, seed)
+    ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
+    return emit(keys_arr, pos + 1 + offset, S, adds, ev)
+
+
+def scalar_rls_scan(c: dict):
+    """(elements, emit) of the 1-D RLS information-form scan: each row is
+    v -> lam*v + (x^2, x*y) on (I, beta); m = beta/I, P = 1/I with
+    I = S/p0 + aI and beta = S*(m0/p0) + aBeta."""
+    lam = float(c["forgettingFactor"])
+    m0v, P0m = _rls_prior(c, 1)
+    m0, p0 = float(m0v[0]), float(P0m.ravel()[0])
+    layout = rls_layout(c)
+
+    def elements(X, y):
+        return np.full(len(X), lam), [X * X, X * y]
+
+    def emit(keys_arr, idx, S, adds, ev):
+        aI, aB = adds
+        I = S * (1.0 / p0) + aI
+        beta = S * (m0 / p0) + aB
+        return layout.frame(len(S), stateKey=keys_arr, stateIndex=idx, m=beta / I, c=1.0 / I, eventTime=ev)
+
+    return elements, emit
+
+
 def vectorized_scalar_rls_scan_fold_factory(c: dict):
     """PARALLEL-SCAN scalar RLS fold. The forgetting-factor RLS recursion
     is, in information form, a pair of exponentially-discounted sums
     (derivation: P' = P/(lam + x^2 P) gives I' = lam*I + x^2 for
     I = 1/P, and beta' = lam*beta + x*y for beta = I*m), i.e. each row
     is the affine map v -> lam*v + c. Composed prefixes are one
-    segmented doubling scan over (S, aI, aBeta) — compose (right after
-    left): S = S_r*S_l, a = S_r*a_l + a_r — so ANY forgetting factor is
-    supported (lam=1 degenerates to plain cumulative sums; for lam<1
-    the composite scale underflows toward 0 exactly as old information
-    is forgotten). Then m_k = beta_k/I_k, P_k = 1/I_k with
-    I_k = S_k/p0 + aI_k, beta_k = S_k*(m0/p0) + aBeta_k.
+    segmented doubling scan over (S, aI, aBeta) (``affine_scan``), so ANY
+    forgetting factor is supported (lam=1 degenerates to plain cumulative
+    sums; for lam<1 the composite scale underflows toward 0 exactly as
+    old information is forgotten); ``scalar_rls_scan`` maps the prefixes
+    to (m, P).
 
     Opt-in (``setFoldEngine("scan")``): op order differs from the
     sequential recursion — ~1e-12 relative parity
     (tests/test_scan_engine.py), not bit-exact; the driver oracle entry
     stays sequential."""
-    lam = float(c["forgettingFactor"])
-    m0 = 0.0 if c["initialStateMean"] is None else float(np.ravel(c["initialStateMean"])[0])
-    p0 = (
-        1.0
-        if c["regularizationMatrix"] is None
-        else float(np.ravel(c["regularizationMatrix"])[0])
-    )
+    scan = scalar_rls_scan(c)
     layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
-        N = len(pdf)
-        if N == 0:
+        if len(pdf) == 0:
             return layout.frame(0), None
-        # rows arrive sorted (key, eventTime): keys are contiguous runs
-        keys_arr = pdf[STATE_KEY].to_numpy()
-        new_key = np.ones(N, dtype=bool)
-        new_key[1:] = keys_arr[1:] != keys_arr[:-1]
-        first_idx = np.nonzero(new_key)[0]
-        seg = np.cumsum(new_key) - 1
-        pos = np.arange(N) - first_idx[seg]
-
-        y = pdf["label"].to_numpy(dtype=np.float64)
-        feats = pdf["features"].values
-        X = np.fromiter((f[0] for f in feats), dtype=np.float64, count=N)
-        ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-
-        S = np.full(N, lam)
-        aI = X * X
-        aB = X * y
-        d = 1
-        while d < N:
-            m = pos[d:] >= d
-            Sl, Il, Bl = S[:-d], aI[:-d], aB[:-d]
-            Sr, Ir, Br = S[d:], aI[d:], aB[d:]
-            nS = Sr * Sl
-            nI = Sr * Il + Ir
-            nB = Sr * Bl + Br
-            S[d:] = np.where(m, nS, Sr)
-            aI[d:] = np.where(m, nI, Ir)
-            aB[d:] = np.where(m, nB, Br)
-            d *= 2
-
-        I = S * (1.0 / p0) + aI
-        beta = S * (m0 / p0) + aB
-        out = layout.frame(N, stateKey=keys_arr, stateIndex=pos + 1, m=beta / I, c=1.0 / I, eventTime=ev)
-        return out, None
+        X = np.fromiter((f[0] for f in pdf["features"].values), dtype=np.float64, count=len(pdf))
+        return _affine_frame(pdf, None, 0, X, *scan), None
 
     return fold
 
@@ -439,24 +463,8 @@ def vectorized_rls_fold_factory(c: dict):
     lam = float(c["forgettingFactor"])
     n = c["stateSize"]
     scalar = n == 1
-    if scalar:
-        m0 = 0.0 if c["initialStateMean"] is None else float(np.ravel(c["initialStateMean"])[0])
-        p0 = (
-            1.0
-            if c["regularizationMatrix"] is None
-            else float(np.ravel(c["regularizationMatrix"])[0])
-        )
-    else:
-        m0v = (
-            np.zeros(n)
-            if c["initialStateMean"] is None
-            else np.asarray(c["initialStateMean"], dtype=np.float64).ravel()
-        )
-        P0m = (
-            np.eye(n)
-            if c["regularizationMatrix"] is None
-            else np.asarray(c["regularizationMatrix"], dtype=np.float64)
-        )
+    m0v, P0m = _rls_prior(c, n)
+    m0, p0 = float(m0v[0]), float(P0m.ravel()[0])
     layout = rls_layout(c)
 
     def fold(pdf: pd.DataFrame, _state):
@@ -580,66 +588,54 @@ def vectorized_lms_fold_factory(c: dict):
     return fold
 
 
-def vectorized_scalar_lms_scan_fold_factory(c: dict):
-    """PARALLEL-SCAN scalar normalized-LMS fold: the 1-D update
-    m' = m + lr*(y - x*m)/(reg + x^2)*x is the affine map
-    m' = s_i*m + a_i with s_i = 1 - lr*x^2/(reg + x^2) and
-    a_i = lr*x*y/(reg + x^2) — one segmented doubling scan over
-    (scale, add), the RLS-scan pattern without the information form.
-    Opt-in via ``setFoldEngine("scan")``; ~1e-12 relative parity with the
-    sequential recursion (tests/test_scan_engine.py)."""
+def scalar_lms_scan(c: dict):
+    """(elements, emit) of the 1-D normalized-LMS scan: the update
+    m' = m + lr*(y - x*m)/(reg + x^2)*x is the affine map m' = s*m + a
+    with s = 1 - lr*x^2/(reg + x^2) and a = lr*x*y/(reg + x^2)."""
     lr = float(c["learningRate"])
     reg = float(c["regularizationConstant"])
     init = c["initialState"]
     m0 = 0.0 if init is None else float(np.ravel(init)[0])
 
+    def elements(X, y):
+        g = lr * X / (reg + X * X)
+        return 1.0 - g * X, [g * y]
+
+    def emit(keys_arr, idx, S, adds, ev):
+        return _lms_frame(keys_arr, idx, (S * m0 + adds[0])[:, None], ev)
+
+    return elements, emit
+
+
+def vectorized_scalar_lms_scan_fold_factory(c: dict):
+    """PARALLEL-SCAN scalar normalized-LMS fold: one segmented doubling
+    scan over (scale, add) (``affine_scan``, the RLS-scan pattern without
+    the information form) of the ``scalar_lms_scan`` elements.
+    Opt-in via ``setFoldEngine("scan")``; ~1e-12 relative parity with the
+    sequential recursion (tests/test_scan_engine.py)."""
+    scan = scalar_lms_scan(c)
+
     def fold(pdf: pd.DataFrame, _state):
-        N = len(pdf)
-        if N == 0:
+        if len(pdf) == 0:
             return empty_pdf(LMS_COLUMNS), None
-        keys_arr = pdf[STATE_KEY].to_numpy()
-        new_key = np.ones(N, dtype=bool)
-        new_key[1:] = keys_arr[1:] != keys_arr[:-1]
-        first_idx = np.nonzero(new_key)[0]
-        seg = np.cumsum(new_key) - 1
-        pos = np.arange(N) - first_idx[seg]
-
-        y = pdf["label"].to_numpy(dtype=np.float64)
-        feats = pdf["features"].values
-        if len(np.ravel(feats[0])) != 1:
-            raise ValueError(
-                "foldEngine='scan' supports the 1-D LMS shape only — use "
-                "the sequential engine for n-D feature vectors"
-            )
-        X = np.fromiter((np.ravel(f)[0] for f in feats), dtype=np.float64, count=N)
-        ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-
-        denom = reg + X * X
-        g = lr * X / denom
-        S = 1.0 - g * X
-        a = g * y
-        d = 1
-        while d < N:
-            mk = pos[d:] >= d
-            Sl, al = S[:-d], a[:-d]
-            Sr, ar = S[d:], a[d:]
-            nS = Sr * Sl
-            na = Sr * al + ar
-            S[d:] = np.where(mk, nS, Sr)
-            a[d:] = np.where(mk, na, ar)
-            d *= 2
-        state = S * m0 + a
-        return _lms_frame(keys_arr, pos + 1, state[:, None], ev), None
+        X = scalar_features(pdf, "scan", "LMS shape")
+        return _affine_frame(pdf, None, 0, X, *scan), None
 
     return fold
 
 
-def _seed_initial_state(pdf: pd.DataFrame, first, m, P):
-    """Overwrite per-key (m, P) rows from the first row's
-    ``initialStateDistribution`` struct (same semantics as the sequential
-    fold: the distribution seen on a key's first row wins; kalman.py:378-396)."""
+def first_row_priors(pdf: pd.DataFrame, first, m, P) -> None:
+    """Overwrite per-key prior rows in place from the
+    ``initialStateDistribution`` cell of each key's first row ``first[k]``,
+    when the column is there (the sequential fold's rule: the distribution
+    seen on a key's first row wins; kalman.py). ``m``/``P`` are (K, n) /
+    (K, n, n) stacks, or (K,) vectors for the 1-D folds."""
+    if "initialStateDistribution" not in pdf.columns:
+        return
     from artan_spark.types import mat_to_np, vec_to_np
 
+    m = m.reshape(len(first), -1)
+    P = P.reshape(len(first), m.shape[1], m.shape[1])
     cells = pdf["initialStateDistribution"].values
     for k, f0 in enumerate(first):
         d = cells[f0]
@@ -735,8 +731,7 @@ def vectorized_sigma_fold_factory(c: dict):
 
         m = np.tile(m0, (K, 1))
         P = np.tile(P0, (K, 1, 1))
-        if "initialStateDistribution" in pdf.columns:
-            _seed_initial_state(pdf, first, m, P)
+        first_row_priors(pdf, first, m, P)
 
         out_mean = np.empty((N, n))
         out_cov = np.empty((N, n, n))
@@ -867,18 +862,7 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
 
         m = np.full(K, m0)
         P = np.full(K, p0)
-        if "initialStateDistribution" in pdf.columns:
-            cells = pdf["initialStateDistribution"].values
-            for k, f0 in enumerate(first):
-                d = cells[f0]
-                if d is None:
-                    continue
-                if isinstance(d, dict):
-                    m[k] = float(d["mean"][0])
-                    P[k] = float(d["covariance"]["values"][0])
-                else:
-                    m[k] = float(d.mean[0])
-                    P[k] = float(d.covariance.values[0])
+        first_row_priors(pdf, first, m, P)
 
         out_mean = np.empty(N)
         out_cov = np.empty(N)
@@ -1055,11 +1039,7 @@ def _scalar_scan_forward(pdf: pd.DataFrame, N: int, f, q, h, rr, m0, p0, prior_o
     distribution computed by the driver prefix."""
     # rows arrive sorted (key, eventTime): keys are contiguous runs
     keys_arr = pdf[STATE_KEY].to_numpy()
-    new_key = np.ones(N, dtype=bool)
-    new_key[1:] = keys_arr[1:] != keys_arr[:-1]
-    seg = np.cumsum(new_key) - 1  # 0-based segment id per row
-    first_idx = np.nonzero(new_key)[0]
-    pos = np.arange(N) - first_idx[seg]  # 0-based position within key
+    seg, first_idx, pos = key_runs(keys_arr)
 
     has_z, Z = read_scalar_measurements(pdf)
     ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
@@ -1072,18 +1052,7 @@ def _scalar_scan_forward(pdf: pd.DataFrame, N: int, f, q, h, rr, m0, p0, prior_o
     else:
         m0k = np.full(K, m0)
         p0k = np.full(K, p0)
-    if prior_override is None and "initialStateDistribution" in pdf.columns:
-        cells = pdf["initialStateDistribution"].values
-        for k, f0 in enumerate(first_idx):
-            d = cells[f0]
-            if d is None:
-                continue
-            if isinstance(d, dict):
-                m0k[k] = float(d["mean"][0])
-                p0k[k] = float(d["covariance"]["values"][0])
-            else:
-                m0k[k] = float(d.mean[0])
-                p0k[k] = float(d.covariance.values[0])
+        first_row_priors(pdf, first_idx, m0k, p0k)
 
     # ---- build the per-row elements --------------------------------
     A, b, C, eta, J = _scalar_generic_elements(Z, has_z, N, f, q, h, rr)
@@ -1309,18 +1278,7 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
 
         m = np.full(K, m0)
         P = np.full(K, p0)
-        if "initialStateDistribution" in pdf.columns:
-            cells = pdf["initialStateDistribution"].values
-            for k, f0 in enumerate(first):
-                d0 = cells[f0]
-                if d0 is None:
-                    continue
-                if isinstance(d0, dict):
-                    m[k] = float(d0["mean"][0])
-                    P[k] = float(d0["covariance"]["values"][0])
-                else:
-                    m[k] = float(d0.mean[0])
-                    P[k] = float(d0.covariance.values[0])
+        first_row_priors(pdf, first, m, P)
 
         out_mean = np.empty(N)
         out_cov = np.empty(N)
@@ -1459,8 +1417,7 @@ def vectorized_lkf_fold_factory(c: dict):
 
         m = np.tile(m0, (K, 1))
         P = np.tile(P0, (K, 1, 1))
-        if "initialStateDistribution" in pdf.columns:
-            _seed_initial_state(pdf, first, m, P)
+        first_row_priors(pdf, first, m, P)
 
         out_mean = np.empty((N, n))
         out_cov = np.empty((N, n, n))
@@ -1802,11 +1759,7 @@ def _nd_scan_forward(pdf: pd.DataFrame, N: int, n, mdim, F_, Q, R, H_const, m0, 
         return (M + np.swapaxes(M, 1, 2)) * 0.5
 
     keys_arr = pdf[STATE_KEY].to_numpy()
-    new_key = np.ones(N, dtype=bool)
-    new_key[1:] = keys_arr[1:] != keys_arr[:-1]
-    seg = np.cumsum(new_key) - 1
-    first_idx = np.nonzero(new_key)[0]
-    pos = np.arange(N) - first_idx[seg]
+    seg, first_idx, pos = key_runs(keys_arr)
     K = len(first_idx)
 
     has_z, Z = read_measurements(pdf, mdim)
@@ -1819,8 +1772,7 @@ def _nd_scan_forward(pdf: pd.DataFrame, N: int, n, mdim, F_, Q, R, H_const, m0, 
     else:
         m0k = np.tile(m0, (K, 1))
         P0k = np.tile(P0, (K, 1, 1))
-        if "initialStateDistribution" in pdf.columns:
-            _seed_initial_state(pdf, first_idx, m0k, P0k)
+        first_row_priors(pdf, first_idx, m0k, P0k)
 
     # ---- per-row elements ------------------------------------------
     A, b, C, eta, J = _nd_generic_elements(Z, has_z, Hrows, N, n, mdim, F_, Q, R, H_const)
@@ -1991,48 +1943,59 @@ def vectorized_scalar_smoother_scan_fold_factory(c: dict):
             filt_m, filt_P,
         ) = _scalar_scan_forward(pdf, N, f, q, h, rr, m0, p0)
 
-        # per-row one-step predicts + RTS gains (row-local, fully batched;
-        # same expressions as the sequential fold's backward loop)
-        nm = f * filt_m
-        nc = (f * filt_P) * f + q
-        g = (filt_P * f) * (1.0 / nc)
-
+        # same key: pos[anchor] >= lag-1 >= every backward step
         anchors = np.nonzero(pos >= lag - 1)[0]
-        M = len(anchors)
-        if M == 0:
+        if len(anchors) == 0:
             return layout.frame(0), None
-        total = M * lag
-        o_row = np.empty(total, dtype=np.int64)
-        o_step = np.empty(total, dtype=np.int64)
-        o_mean = np.empty(total)
-        o_cov = np.empty(total)
-        o_gain = np.empty(total)
-
-        sm_m = filt_m[anchors]
-        sm_p = filt_P[anchors]
-        o_row[:M] = anchors
-        o_step[:M] = 0
-        o_mean[:M] = sm_m
-        o_cov[:M] = sm_p
-        o_gain[:M] = 0.0
-        for step in range(1, lag):
-            j = anchors - step  # same key: pos[anchor] >= lag-1 >= step
-            gj = g[j]
-            sm_m = filt_m[j] + gj * (sm_m - nm[j])
-            sm_p = filt_P[j] + (gj * (sm_p - nc[j])) * gj
-            w = step * M
-            o_row[w : w + M] = j
-            o_step[w : w + M] = step
-            o_mean[w : w + M] = sm_m
-            o_cov[w : w + M] = sm_p
-            o_gain[w : w + M] = gj
+        o_row, o_step, o_mean, o_cov, o_gain = scalar_lag_windows(filt_m, filt_P, anchors, f, q, lag)
         out = layout.frame(
-            total, stateKey=keys_arr[o_row], stateIndex=pos[o_row] + 1, stepIndex=o_step,
+            len(o_row), stateKey=keys_arr[o_row], stateIndex=pos[o_row] + 1, stepIndex=o_step,
             m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
         )
         return out, None
 
     return fold
+
+
+def scalar_lag_windows(filt_m, filt_P, anchors, f, q, lag: int):
+    """The 1-D fixed-lag backward windows of every anchor row at once:
+    ``lag`` numpy passes instead of the per-trigger Python loop. Each
+    anchor emits ``lag`` rows (step 0 = the anchor itself, gain 0); the
+    ``lag - 1`` rows before an anchor must be its own key's. Returns the
+    (row, step, mean, cov, gain) arrays of the ``len(anchors) * lag``
+    emitted rows. Per-row one-step predicts and RTS gains are batched once,
+    with the same expressions and op order as the sequential fold's
+    backward loop."""
+    nm = f * filt_m
+    nc = (f * filt_P) * f + q
+    g = (filt_P * f) * (1.0 / nc)
+    M = len(anchors)
+    total = M * lag
+    o_row = np.empty(total, dtype=np.int64)
+    o_step = np.empty(total, dtype=np.int64)
+    o_mean = np.empty(total)
+    o_cov = np.empty(total)
+    o_gain = np.empty(total)
+
+    sm_m = filt_m[anchors]
+    sm_p = filt_P[anchors]
+    o_row[:M] = anchors
+    o_step[:M] = 0
+    o_mean[:M] = sm_m
+    o_cov[:M] = sm_p
+    o_gain[:M] = 0.0
+    for step in range(1, lag):
+        j = anchors - step
+        gj = g[j]
+        sm_m = filt_m[j] + gj * (sm_m - nm[j])
+        sm_p = filt_P[j] + (gj * (sm_p - nc[j])) * gj
+        w = step * M
+        o_row[w : w + M] = j
+        o_step[w : w + M] = step
+        o_mean[w : w + M] = sm_m
+        o_cov[w : w + M] = sm_p
+        o_gain[w : w + M] = gj
+    return o_row, o_step, o_mean, o_cov, o_gain
 
 
 def supports_scan_smoother(c: dict) -> bool:

@@ -242,9 +242,12 @@ def pinned_schema_cases():
 
 
 # distributedScan runs its first pass at transform time, so it is compared
-# on one shape only; every distributed transform reassembles through the
-# operator's own _shapeOutput
-DIST_CASES = {"lkf2"}
+# on one shape of each distributed family only
+DIST_CASES = {"lkf1", "lkf2", "sm1", "rls1", "lms1"}
+
+# shapes whose engines are also compared row by row (1e-9 relative, 1e-12
+# absolute for the states near zero)
+VALUE_CASES = ("ukf2_vecfn",)
 
 
 def _frame_rows():
@@ -296,6 +299,23 @@ def test_nan_input_completes(frame, name):
     assert len(op.transform(frame).collect()) == want
 
 
+def test_short_feature_cells_raise_spark_free():
+    from artan_spark.operators.vectorized import vec_cells_to_2d
+
+    with pytest.raises(ValueError, match="expected 2 values per cell, got 1"):
+        vec_cells_to_2d([[1.0], [2.0], [3.0]], 2)
+
+
+@pytest.mark.parametrize("fe,vb", [("sequential", False), ("sequential", True), ("scan", True)])
+def test_short_feature_cells_raise(frame, fe, vb):
+    """A 2-state RLS reading 1-element feature cells fails on every
+    engine; the batched folds do not copy the one value into both slots."""
+    op = configured("rls2", fe, vb)
+    op._set("vectorizedBuckets", 2)  # no bucket-sizing job
+    with pytest.raises(Exception, match="ValueError"):
+        op.transform(frame).collect()
+
+
 def test_public_schemas_match_recorded(spark, frame):
     from pyspark.sql import functions as F
 
@@ -313,11 +333,20 @@ def test_public_schemas_match_recorded(spark, frame):
     assert got == want
 
 
-@pytest.mark.parametrize("name", SCHEMA_CASES)
+def _states(df):
+    """(key, index) and the state mean + covariance doubles of each row."""
+    rows = sorted(df.collect(), key=lambda r: (r.stateKey, r.stateIndex))
+    return [(r.stateKey, r.stateIndex) for r in rows], np.array(
+        [[*r.state.mean, *r.state.covariance.values] for r in rows], dtype=np.float64
+    )
+
+
+@pytest.mark.parametrize("name", SCHEMA_CASES + VALUE_CASES)
 def test_every_engine_emits_the_sequential_schema(spark, frame, name):
     has_fe = "foldEngine" in CASES[name]()._paramMap
     seq = configured(name, "sequential" if has_fe else None, False)
     want = seq.transform(frame).schema
+    want_states = _states(seq.transform(frame)) if name in VALUE_CASES else None
     ran = {(seq._lastFoldEngine, seq._lastFoldVectorized)}
     engines = ("sequential", "scan") + (("distributedScan",) if name in DIST_CASES else ())
     for fe in engines if has_fe else (None,):
@@ -329,4 +358,8 @@ def test_every_engine_emits_the_sequential_schema(spark, frame, name):
             continue  # the shape has no such engine
         ran.add((op._lastFoldEngine, op._lastFoldVectorized))
         assert out.schema == want, (name, fe)
+        if want_states is not None:
+            keys, values = _states(out)
+            assert keys == want_states[0], (name, fe)
+            np.testing.assert_allclose(values, want_states[1], rtol=1e-9, atol=1e-12, err_msg=f"{name} {fe}")
     assert len(ran) > 1, ran  # at least one batched engine was compared
