@@ -19,11 +19,12 @@ Both paths share ONE fold function so batch == streaming bit-for-bit (the
 reference asserts exact Row equality between the two; identical float op
 order requires a shared fold — SURVEY §7.3.2).
 
-Batch engines (``resolve_engine``): the per-key fold above, or ONE salted
-multi-key bucketed transform (``_bucketedTransform``): ``groupBy(crc32(stateKey)
-% buckets)`` folds many keys per ``applyInPandas`` group time-synchronously
-or by parallel scan (operators/vectorized.py), so wall-clock no longer
-scales with one Python call per key; the distributed scan
+Batch engines (``resolve_engine``): the per-key fold above, or ONE
+multi-key bucketed transform (``_bucketedTransform``):
+``repartition(buckets, stateKey).mapInPandas(fold)`` gives each bucket of
+key hashes its own task, whose one Python call folds all its keys
+time-synchronously or by parallel scan (operators/vectorized.py), so
+wall-clock no longer scales with one Python call per key; the distributed scan
 (operators/distscan.py) splits a hot key across tasks by event-time chunk.
 State is bounded by #keys × state size (README.md:19-25 of the reference);
 constants are closure-captured so per-row Arrow traffic carries only true
@@ -44,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from artan_spark.compat import drop_zip_finders
 from artan_spark.params import HasParams
 
 STATE_KEY = "stateKey"
@@ -93,7 +95,7 @@ class EnginePlan(NamedTuple):
     # fold factory; for distributedScan the distributed transform itself
     factory: Callable
     reason: str
-    buckets: int | None = None  # salt buckets; sized only when keyed is given
+    buckets: int | None = None  # bucket tasks; sized only when keyed is given
 
 
 def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None = None) -> EnginePlan:
@@ -112,8 +114,8 @@ def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None
     Scan          vectorizedBatch)
     ============  ==============================  =====================
 
-    A batch "scan" or ``vectorizedBatch`` run folds salted multi-key
-    buckets when the operator's ``_bucketedFold`` offers a factory for
+    A batch "scan" or ``vectorizedBatch`` run folds multi-key buckets,
+    one task each, when the operator's ``_bucketedFold`` offers a factory for
     the shape; otherwise it falls back to the per-key sequential fold.
     Operators without a ``foldEngine`` param (the mixtures) resolve as
     "sequential". Auto scans only scalar shapes: the n-D scans lose on
@@ -126,7 +128,9 @@ def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None
     task parallelism. The distinct-key count comes from a bounded sample
     (``take(2048)``, one job on the first partition) instead of a count
     job, which taxed the fold by ~13%; a floor of 4 buckets keeps task
-    parallelism. An under-estimate only yields fewer, wider buckets.
+    parallelism, so with at most 4 shuffle partitions the count is the
+    partition count and no sample job runs. An under-estimate only yields
+    fewer, wider buckets.
     """
     params = op._paramMap
     requested = params.get("foldEngine", "sequential")
@@ -152,7 +156,7 @@ def resolve_engine(op, constants: dict, streaming: bool, keyed: DataFrame | None
         factory = op._bucketedFold(constants, engine)
         if factory is not None:
             buckets = _bucket_count(op, keyed) if keyed is not None else None
-            return EnginePlan(engine, True, factory, f"{reason}; salted buckets", buckets)
+            return EnginePlan(engine, True, factory, f"{reason}; key buckets", buckets)
         reason += "; no batched fold for this shape"
     return EnginePlan("sequential", False, op._foldFactory(), reason)
 
@@ -161,6 +165,8 @@ def _bucket_count(op, keyed: DataFrame) -> int:
     buckets = op.get("vectorizedBuckets")
     if buckets is None:
         par = max(1, int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")))
+        if par <= 4:  # the floor below already equals par
+            return par
         head = keyed.select(STATE_KEY).take(2048)
         n_keys = len({r[0] for r in head})
         if n_keys >= 1024:
@@ -234,7 +240,7 @@ class StatefulTransformer(HasParams):
         return False
 
     def _bucketedFold(self, c: dict, engine: str):
-        """Fold factory of the salted multi-key fold for ``engine``
+        """Fold factory of the bucketed multi-key fold for ``engine``
         ("scan" or "sequential"), or None when the shape has none; raises
         ValueError for a forced scan it cannot run. It emits the same
         frame as the sequential fold."""
@@ -280,6 +286,7 @@ class StatefulTransformer(HasParams):
         if not df.isStreaming:
 
             def batch_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+                drop_zip_finders()
                 rows, _state = fold(sort_group(pdf), None)
                 return rows_to_pdf(rows, [f.name for f in out_schema.fields])
 
@@ -321,6 +328,7 @@ class StatefulTransformer(HasParams):
                 horizon_ms = int(pd.Timedelta(dur).total_seconds() * 1000)
 
             def stream_fn(key, pdf_iter: Iterator[pd.DataFrame], group_state) -> Iterator[pd.DataFrame]:
+                drop_zip_finders()
                 if group_state.hasTimedOut:
                     # timeout clears state; the key restarts from the initial
                     # state on its next row (StatefulTransformer.scala:439-441)
@@ -382,25 +390,32 @@ class StatefulTransformer(HasParams):
         return self._shapeOutput(result)
 
     def _bucketedTransform(self, keyed: DataFrame, plan: EnginePlan, constants: dict) -> DataFrame:
-        """The salted multi-key bucket path shared by every batched fold:
-        keys hash into ``plan.buckets`` groups, so ONE ``applyInPandas``
+        """The multi-key bucket path shared by every batched fold: keys
+        hash into ``plan.buckets`` partitions, one task each, so ONE Python
         call folds many keys time-synchronously (operators/vectorized.py);
         each bucket is stably sorted by (key, event time) before the fold,
-        which emits the operator's one boundary frame."""
-        salted = self._bucketInput(keyed).withColumn(
-            "__salt__", F.pmod(F.crc32(F.col(STATE_KEY).cast("binary")), F.lit(plan.buckets))
-        )
+        which emits the operator's one boundary frame. An explicit-count
+        repartition is never coalesced by AQE."""
         factory, cell = plan.factory, []
 
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            drop_zip_finders()
+            frames = list(batches)
+            if not frames:
+                return
             if not cell:
                 cell.append(factory(constants))
+            pdf = pd.concat(frames, ignore_index=True)
             cols = [STATE_KEY] + ([EVENT_TIME] if EVENT_TIME in pdf.columns else [])
             pdf = pdf.sort_values(cols, kind="stable", na_position="first")
             out, _ = cell[0](pdf, None)
-            return out
+            yield out
 
-        res = salted.groupBy("__salt__").applyInPandas(fn, self._outSchema())
+        res = (
+            self._bucketInput(keyed)
+            .repartition(plan.buckets, STATE_KEY)
+            .mapInPandas(fn, self._outSchema())
+        )
         return self._shapeOutput(res)
 
     def _bucketInput(self, keyed: DataFrame) -> DataFrame:
@@ -486,6 +501,7 @@ class StatefulTransformer(HasParams):
                 self._handle.registerTimer(expiry_ms)
 
             def handleInputRows(self, key, rows, timer_values):
+                drop_zip_finders()
                 pdf = pd.concat(list(rows), ignore_index=True)
                 last_ev = None
                 state = None

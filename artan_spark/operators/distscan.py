@@ -74,6 +74,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from artan_spark.compat import drop_zip_finders
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY
 from artan_spark.operators.codec import Layout, kalman_layout, rls_layout, smoother_layout
 from artan_spark.operators.vectorized import (
@@ -154,6 +155,7 @@ def _two_pass(op, df: DataFrame, fam: _Family) -> DataFrame:
     summary = Layout(fam.blocks, index=(CHUNK, "n"))
 
     def pass1(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         pdf = _sorted(pdf)
         return summary.frame(
             1, stateKey=pdf[STATE_KEY].values[:1], n=len(pdf),
@@ -181,6 +183,7 @@ def _two_pass(op, df: DataFrame, fam: _Family) -> DataFrame:
     seeds_bc = df.sparkSession.sparkContext.broadcast(seeds)
 
     def pass2(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         seed, off = seeds_bc.value[(pdf[STATE_KEY].values[0], int(pdf[CHUNK].values[0]))]
         return fam.finish(_sorted(pdf), seed, off)
 
@@ -564,6 +567,7 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
     layout = smoother_layout(c)
 
     def backward_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         pdf = pdf.sort_values("stateIndex", kind="stable")
         idx = pdf["stateIndex"].to_numpy(dtype=np.int64)
         # contract: the group holds consecutive global indices

@@ -15,6 +15,7 @@ from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
 from artan_spark.operators.vectorized import (
     _lms_frame,
+    check_width,
     vectorized_lms_fold_factory,
     vectorized_scalar_lms_scan_fold_factory,
 )
@@ -69,6 +70,7 @@ def _lms_fold_factory(c: dict):
                     mean = np.zeros(len(vec_to_np(feats[i])))
                 state = {"idx": 0, "mean": np.asarray(mean, dtype=np.float64).ravel()}
             x = vec_to_np(feats[i])
+            check_width(len(x), len(state["mean"]))
             state["mean"] = linalg.lms_update(state["mean"], float(labels[i]), x, lr, reg)
             state["idx"] += 1
             o_idx.append(state["idx"])

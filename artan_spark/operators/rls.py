@@ -15,6 +15,7 @@ from artan_spark import linalg
 from artan_spark.operators.base import EVENT_TIME, STATE_KEY, StatefulTransformer
 from artan_spark.operators.codec import rls_layout
 from artan_spark.operators.vectorized import (
+    check_width,
     vectorized_nd_rls_scan_fold_factory,
     vectorized_rls_fold_factory,
     vectorized_scalar_rls_scan_fold_factory,
@@ -65,6 +66,7 @@ def _scalar_rls_fold_factory(c: dict):
         o_mean = np.empty(nrows)
         o_cov = np.empty(nrows)
         for i in range(nrows):
+            check_width(len(feats[i]), 1)
             x = float(feats[i][0])
             Px = P * x
             denom = lam + x * Px
@@ -120,6 +122,7 @@ def _rls_fold_factory(c: dict):
                     cov = np.eye(n_state)
                 state = {"idx": 0, "mean": np.asarray(mean, dtype=np.float64).ravel(), "cov": np.asarray(cov, dtype=np.float64)}
             x = vec_to_np(feats[i])
+            check_width(len(x), n_state)
             m1, P1, _gain = linalg.rls_update(state["mean"], state["cov"], float(labels[i]), x, lam)
             state["idx"] += 1
             state["mean"], state["cov"] = m1, P1

@@ -2,10 +2,11 @@
 
 The sequential per-group fold is O(rows) Python-loop iterations per key —
 fine for 1-D (scalar fast paths) but the weak spot for n-D states with many
-keys. These folds restructure the computation: keys are salted into
-``groupBy(crc32(stateKey) % P)`` buckets (``base.resolve_engine`` and the
-one bucketed transform ``StatefulTransformer._bucketedTransform``) so ONE
-``applyInPandas`` group holds MANY keys, and the fold steps
+keys. These folds restructure the computation: keys are hash-partitioned
+into P buckets, one task each (``repartition(P, stateKey)``, sized by
+``base.resolve_engine``, run by the one bucketed transform
+``StatefulTransformer._bucketedTransform``), so ONE ``mapInPandas`` call
+holds MANY keys, and the fold steps
 **time-synchronously across keys** — step t updates every key's t-th row in
 one batched numpy/einsum call (batched gemm, batched pinv, Joseph form).
 Per-row Python overhead drops from O(rows) to O(max rows per key). The
@@ -111,6 +112,13 @@ def extract_scalar_measurements(z_cells, has_z, n: int) -> np.ndarray:
     return Z
 
 
+def check_width(n: int, width: int) -> None:
+    """The one error of every fold for a cell of ``n`` values where the
+    shape declares ``width``."""
+    if n != width:
+        raise ValueError(f"expected {width} values per cell, got {n}")
+
+
 def vec_cells_to_2d(cells, width: int, has_mask=None) -> np.ndarray:
     """array<double> cells -> (N, width) float64; rows where ``has_mask``
     is False stay zero (the missing-measurement convention of the folds).
@@ -128,13 +136,13 @@ def vec_cells_to_2d(cells, width: int, has_mask=None) -> np.ndarray:
         return out
     sel = cells if idx is None or n_sel == N else cells[idx]
     try:
-        flat = np.asarray(np.concatenate(sel), dtype=np.float64)
-        vals = flat.reshape(n_sel, width)
+        vals = np.asarray(np.concatenate(sel), dtype=np.float64).reshape(n_sel, width)
     except (TypeError, ValueError):
+        vals = None
+    if vals is None:
         for i in range(N) if idx is None else idx:
             v = np.asarray(cells[i], dtype=np.float64).ravel()
-            if len(v) != width:
-                raise ValueError(f"expected {width} values per cell, got {len(v)}") from None
+            check_width(0 if cells[i] is None else len(v), width)
             out[i] = v
         return out
     if n_sel == N:
@@ -385,14 +393,15 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
 
 def scalar_features(pdf: pd.DataFrame, engine: str, shape: str = "shape") -> np.ndarray:
     """The 1-element ``features`` cells as one float64 vector; a wider
-    first cell raises the guided error of ``engine``."""
+    first cell raises the guided error of ``engine``, a wider later one
+    ``vec_cells_to_2d``'s."""
     feats = pdf["features"].values
     if len(np.ravel(feats[0])) != 1:
         raise ValueError(
             f"foldEngine={engine!r} supports the 1-D {shape} only — use "
             "the sequential engine for n-D feature vectors"
         )
-    return np.fromiter((np.ravel(f)[0] for f in feats), dtype=np.float64, count=len(feats))
+    return vec_cells_to_2d(feats, 1)[:, 0]
 
 
 def _affine_frame(pdf: pd.DataFrame, seed, offset: int, X: np.ndarray, elements, emit):
@@ -449,7 +458,7 @@ def vectorized_scalar_rls_scan_fold_factory(c: dict):
     def fold(pdf: pd.DataFrame, _state):
         if len(pdf) == 0:
             return layout.frame(0), None
-        X = np.fromiter((f[0] for f in pdf["features"].values), dtype=np.float64, count=len(pdf))
+        X = vec_cells_to_2d(pdf["features"].values, 1)[:, 0]
         return _affine_frame(pdf, None, 0, X, *scan), None
 
     return fold
@@ -480,8 +489,7 @@ def vectorized_rls_fold_factory(c: dict):
         alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
 
         if scalar:
-            # same f[0] semantics as the old indexing loop, one C-level pass
-            X = np.fromiter((f[0] for f in feats), np.float64, N)
+            X = vec_cells_to_2d(feats, 1)[:, 0]
             m = np.full(K, m0)
             P = np.full(K, p0)
             out_mean = np.empty(N)

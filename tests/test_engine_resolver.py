@@ -306,14 +306,72 @@ def test_short_feature_cells_raise_spark_free():
         vec_cells_to_2d([[1.0], [2.0], [3.0]], 2)
 
 
+# shape: (feature column, the error every engine raises)
+WIDTH_CASES = {
+    "rls2": ("features", "expected 2 values per cell, got 1"),
+    "rls1": ("features2", "expected 1 values per cell, got 2"),
+    "lms1": ("features2", "expected 1 values per cell, got 2"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(WIDTH_CASES))
 @pytest.mark.parametrize("fe,vb", [("sequential", False), ("sequential", True), ("scan", True)])
-def test_short_feature_cells_raise(frame, fe, vb):
-    """A 2-state RLS reading 1-element feature cells fails on every
-    engine; the batched folds do not copy the one value into both slots."""
-    op = configured("rls2", fe, vb)
+def test_short_feature_cells_raise(frame, fe, vb, name):
+    """A feature cell whose width is not the state's fails on every
+    engine: the batched folds do not copy a short cell's one value into
+    both slots, and no fold reads only the first value of a wide one."""
+    col, message = WIDTH_CASES[name]
+    if name == "lms1" and fe == "scan":
+        message = "supports the 1-D LMS shape only"  # the scan's guided error
+    op = configured(name, fe, vb)
+    op._set("featuresCol", col)
     op._set("vectorizedBuckets", 2)  # no bucket-sizing job
-    with pytest.raises(Exception, match="ValueError"):
+    with pytest.raises(Exception, match=message):
         op.transform(frame).collect()
+
+
+def test_each_bucket_runs_in_its_own_task(spark):
+    """``vectorizedBuckets`` is the task count: 64 keys in 4 buckets fold
+    in 4 distinct partitions, none left empty or merged with another."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(f"k{i % 64}", t0 + dt.timedelta(seconds=i), [float(i)]) for i in range(128)],
+        "stateKey string, ts timestamp, measurement array<double>",
+    )
+    op = configured("lkf1", "sequential", True)
+    op._set("vectorizedBuckets", 4)
+    out = op.transform(df)
+    parts = out.select(F.spark_partition_id().alias("p"), "stateKey").distinct().collect()
+    assert op._lastFoldVectorized
+    assert len({r.stateKey for r in parts}) == 64
+    assert len({r.p for r in parts}) == 4
+
+
+def test_bucket_count_needs_no_job_on_few_partitions(spark, frame):
+    """With at most 4 shuffle partitions the bucket count is the partition
+    count, so resolving a bucketed plan runs no sizing job; with more it
+    samples the keys."""
+    from artan_spark.operators.base import resolve_engine
+
+    sc = spark.sparkContext
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for par in (3, 4, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(par))
+            op = configured("lkf1", "sequential", True)
+            group = f"bucket-sizing-{par}"
+            sc.setJobGroup(group, group)
+            plan = resolve_engine(op, op._constants(), False, op._keyed(frame))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert (len(jobs) > 0) == (par > 4), (par, jobs)
+            assert plan.buckets == (par if par <= 4 else 4), par
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
 
 
 def test_public_schemas_match_recorded(spark, frame):

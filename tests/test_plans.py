@@ -87,9 +87,10 @@ def test_range_join_stays_equi_join(spark):
 
 def test_stateful_op_single_shuffle(spark):
     plan = _plan(spark, "lkf_events_local_level")
-    # exactly one exchange: the groupBy(stateKey) hash partitioning
+    # exactly one exchange: the repartition(buckets, stateKey) hash
+    # partitioning of the bucketed fold
     assert plan.count("Exchange hashpartitioning") == 1
-    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInPandas" in plan
 
 
 def test_ann_broadcast_queries(spark):

@@ -120,9 +120,9 @@ def test_bucketed_stateful_fold_no_exchange(spark):
             .setProcessNoise(np.array([[0.1]]))
             .setMeasurementNoise(np.array([[1.0]]))
             # the exchange-free layout contract belongs to the SEQUENTIAL
-            # fold: the auto-selected scan engine groups by a salt column,
-            # which (correctly) re-shuffles — a bucketed-by-key deployment
-            # that wants to stay shuffle-free pins the sequential engine
+            # fold: the auto-selected scan engine repartitions into its own
+            # bucket tasks, which (correctly) re-shuffles — a bucketed-by-key
+            # deployment that wants to stay shuffle-free pins the sequential engine
             .setFoldEngine("sequential")
         )
         bucketed = lkf.transform(spark.table("t_ev_fold_bucketed"))

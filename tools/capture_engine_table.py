@@ -5,8 +5,8 @@ foldEngine x vectorizedBatch x batch/stream) this builds the plan on a tiny
 frame and records the engine the operator reports, whether a batched fold
 ran, the fold factory inside the Python UDF, or the ``ValueError`` message. The distributed-scan
 transforms are replaced by recorders that end the call, so no case
-launches a Python worker; the only Spark jobs are the bucket-sizing
-samples. In the same run it records the public schema of every
+launches a Python worker, and the session's 2 shuffle partitions need no
+bucket-sizing sample. In the same run it records the public schema of every
 ``pinned_schema_cases()`` entry of the cases module into
 ``data/public_schemas.json`` next to it.
 
@@ -142,25 +142,21 @@ def capture(cases_path: str) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     seen: dict = {}
 
-    def record(kind):
-        orig = getattr(GroupedData, kind)
+    def record(cls, kind, bucketed):
+        orig = getattr(cls, kind)
 
         def wrapper(self, fn, *args, **kwargs):
             if kind == "transformWithStateInPandas":
                 fn = kwargs.get("statefulProcessor", fn)
-            seen.setdefault(
-                "udf",
-                {
-                    "factory": _find_factory(fn),
-                    "salted": "__salt__" in self._df.columns,
-                },
-            )
+            seen.setdefault("udf", {"factory": _find_factory(fn), "bucketed": bucketed})
             return orig(self, fn, *args, **kwargs)
 
-        setattr(GroupedData, kind, wrapper)
+        setattr(cls, kind, wrapper)
 
     for kind in ("applyInPandas", "applyInPandasWithState", "transformWithStateInPandas"):
-        record(kind)
+        record(GroupedData, kind, False)
+    # the bucketed folds: repartition(buckets, stateKey).mapInPandas
+    record(type(spark.range(0)), "mapInPandas", True)
     for name in DIST_FNS:
 
         def dist(op, df, _name=name):
@@ -202,7 +198,7 @@ def capture(cases_path: str) -> dict:
                 udf = seen["udf"]
                 entry = {
                     "engine": getattr(op, "_lastFoldEngine", None) or "sequential",
-                    "vectorized": udf["salted"],
+                    "vectorized": udf["bucketed"],
                     "factory": udf["factory"],
                 }
             reported = getattr(op, "_lastFoldVectorized", None)

@@ -50,7 +50,7 @@ def main():
             F.lit(3).alias("numCols"),
             F.array(x, F.sqrt(x + F.lit(0.5)), F.lit(1.0)).alias("values"),
         ).alias("measurementModel"),
-    ).filter(F.pmod(F.crc32(F.col(STATE_KEY).cast("binary")), F.lit(4)) == 0)
+    ).filter(F.pmod(F.hash(STATE_KEY), F.lit(4)) == 0)  # bucket 0 of repartition(4, stateKey)
 
     import artan_spark.operators.vectorized as V
     from artan_spark.operators.kalman import LinearKalmanFilter
