@@ -306,25 +306,33 @@ def test_short_feature_cells_raise_spark_free():
         vec_cells_to_2d([[1.0], [2.0], [3.0]], 2)
 
 
-# shape: (feature column, the error every engine raises)
-WIDTH_CASES = {
-    "rls2": ("features", "expected 2 values per cell, got 1"),
-    "rls1": ("features2", "expected 1 values per cell, got 2"),
-    "lms1": ("features2", "expected 1 values per cell, got 2"),
+@pytest.mark.parametrize("fe,vb", [("sequential", False), ("sequential", True), ("scan", True)])
+def test_short_feature_cells_raise(frame, fe, vb):
+    """A 2-state RLS reading 1-element feature cells fails on every
+    engine; the batched folds do not copy the one value into both slots."""
+    op = configured("rls2", fe, vb)
+    op._set("vectorizedBuckets", 2)  # no bucket-sizing job
+    with pytest.raises(Exception, match="expected 2 values per cell, got 1"):
+        op.transform(frame).collect()
+
+
+# shape: the error every engine raises on 2-element feature cells
+WIDE_CASES = {
+    "rls1": "expected 1 values per cell, got 2",
+    "lms1": "expected 1 values per cell, got 2",
 }
 
 
-@pytest.mark.parametrize("name", sorted(WIDTH_CASES))
+@pytest.mark.parametrize("name", sorted(WIDE_CASES))
 @pytest.mark.parametrize("fe,vb", [("sequential", False), ("sequential", True), ("scan", True)])
-def test_short_feature_cells_raise(frame, fe, vb, name):
-    """A feature cell whose width is not the state's fails on every
-    engine: the batched folds do not copy a short cell's one value into
-    both slots, and no fold reads only the first value of a wide one."""
-    col, message = WIDTH_CASES[name]
+def test_wide_feature_cells_raise(frame, fe, vb, name):
+    """A 1-state RLS or LMS reading 2-element feature cells fails on
+    every engine: no fold reads only the first value of a wide cell."""
+    message = WIDE_CASES[name]
     if name == "lms1" and fe == "scan":
         message = "supports the 1-D LMS shape only"  # the scan's guided error
     op = configured(name, fe, vb)
-    op._set("featuresCol", col)
+    op._set("featuresCol", "features2")
     op._set("vectorizedBuckets", 2)  # no bucket-sizing job
     with pytest.raises(Exception, match=message):
         op.transform(frame).collect()
