@@ -90,11 +90,11 @@ from artan_spark.operators.vectorized import (
     _scalar_segmented_scan,
     affine_scan,
     first_row_priors,
+    lag_windows,
     read_measurement_models,
     read_measurements,
     read_scalar_measurements,
     scalar_features,
-    scalar_lag_windows,
     scalar_lms_scan,
     scalar_rls_scan,
     supports_scan,
@@ -331,7 +331,7 @@ class _Affine(_Family):
         self.schema = schema
 
     def summarize(self, pdf):
-        X = scalar_features(pdf, "distributedScan")
+        X = scalar_features(pdf)
         y = pdf["label"].to_numpy(dtype=np.float64)
         S, adds = affine_scan(*self.elements(X, y), np.arange(len(pdf)))
         return {"S": S[-1:], "a": np.array([[a[-1] for a in adds]])}
@@ -344,7 +344,7 @@ class _Affine(_Family):
         return S * seed[0], S * seed[1] + summary["a"]
 
     def finish(self, pdf, seed, offset):
-        X = scalar_features(pdf, "distributedScan")
+        X = scalar_features(pdf)
         return _affine_frame(pdf, (seed[0], list(seed[1])), offset, X, self.elements, self.emit)
 
 
@@ -552,7 +552,7 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
     to the later chunks that need it (``_ScalarSmoother.seeds``); then
     per (key, target chunk) the rows are consecutive global indices by
     construction, and the anchor-vectorized backward windows (the in-task
-    scan smoother's, ``scalar_lag_windows``) emit only for OWN rows.
+    smoothers' ``lag_windows``) emit only for OWN rows.
     Three linear shuffles; duplication is bounded by lag-1 rows per chunk
     seam."""
     c = op._constants()
@@ -563,7 +563,6 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
             "'sequential' for this configuration"
         )
     fam = _ScalarSmoother(c)
-    f, q, lag = fam.fqhr[0], fam.fqhr[1], fam.lag
     layout = smoother_layout(c)
 
     def backward_fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -573,16 +572,10 @@ def distributed_smoother_transform(op, df: DataFrame) -> DataFrame:
         # contract: the group holds consecutive global indices
         if len(idx) > 1 and not np.all(np.diff(idx) == 1):
             raise AssertionError("distributed smoother group has index gaps")
-        anchors = np.nonzero((pdf["own"].to_numpy() == 1) & (idx >= lag))[0]
-        if len(anchors) == 0:
-            return layout.frame(0)
-        o_row, o_step, o_mean, o_cov, o_gain = scalar_lag_windows(
+        return lag_windows(
+            layout, pdf[STATE_KEY].to_numpy(), idx, pdf[EVENT_TIME].values,
             pdf["f0"].to_numpy(dtype=np.float64), pdf["f1"].to_numpy(dtype=np.float64),
-            anchors, f, q, lag,
-        )
-        return layout.frame(
-            len(o_row), stateKey=pdf[STATE_KEY].to_numpy()[o_row], stateIndex=idx[o_row],
-            stepIndex=o_step, m=o_mean, c=o_cov, g=o_gain, eventTime=pdf[EVENT_TIME].values[o_row],
+            c["processModel"], c["processNoise"], fam.lag, own=pdf["own"].to_numpy() == 1,
         )
 
     filtered = _two_pass(op, df, fam)

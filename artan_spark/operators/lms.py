@@ -110,7 +110,7 @@ class LeastMeanSquaresFilter(StatefulTransformer):
         return init is not None and len(init) == 1 and not self.get("initialStateCol")
 
     def _bucketedFold(self, c: dict, engine: str):
-        """Salted multi-key folds, time-synchronous across keys
+        """Key-bucketed multi-key folds, time-synchronous across keys
         (operators/vectorized.py). Every LMS engine emits the public
         schema itself: the state width is unknown before the data when
         initialState is None, so the state crosses as one array cell."""

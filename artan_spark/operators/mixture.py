@@ -460,7 +460,7 @@ class FiniteMixtureBase(StatefulTransformer):
         return super().transform(df)
 
     def _bucketedFold(self, c: dict, engine: str):
-        """Salted multi-key batched stochastic-EM fold (vectorized.py)."""
+        """Key-bucketed multi-key batched stochastic-EM fold (vectorized.py)."""
         return vectorized_mixture_fold_factory if supports_vectorized_mixture(c) else None
 
     def _outSchema(self):

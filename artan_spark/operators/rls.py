@@ -164,7 +164,7 @@ class RecursiveLeastSquaresFilter(StatefulTransformer):
         return not c["hasPerRowCols"] and c["stateSize"] == 1
 
     def _bucketedFold(self, c: dict, engine: str):
-        """Salted multi-key folds, time-synchronous across keys
+        """Key-bucketed multi-key folds, time-synchronous across keys
         (operators/vectorized.py); param (not per-row) priors only."""
         if c["hasPerRowCols"] or not c["stateSize"]:
             return None

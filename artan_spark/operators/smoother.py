@@ -268,10 +268,12 @@ class LinearKalmanSmoother(KalmanBase):
         return supports_scan(c) and _is_scalar_smoother(c)
 
     def _bucketedFold(self, c: dict, engine: str):
-        """Salted multi-key smoother folds (vectorized.py) emit the
-        sequential smoother's layout. The scan engine swaps in the
-        parallel-scan forward pass + anchor-vectorized backward window
-        (~1e-12 relative parity, tests/test_scan_engine.py)."""
+        """Key-bucketed multi-key smoother folds (vectorized.py) emit the
+        sequential smoother's layout. Every one runs the same
+        anchor-vectorized backward window (``lag_windows``) after its
+        forward pass: the time-synchronous LKF filter pass, or on the scan
+        engine the parallel-scan forward pass (~1e-12 relative parity,
+        tests/test_scan_engine.py)."""
         if engine == "scan":
             if supports_scan(c) and _is_scalar_smoother(c):
                 return vectorized_scalar_smoother_scan_fold_factory

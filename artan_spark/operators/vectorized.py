@@ -13,6 +13,13 @@ Per-row Python overhead drops from O(rows) to O(max rows per key). The
 parallel-scan folds go further: an associative element per row and
 log2(N) full-width passes, so wall-clock no longer scales with rows per key.
 
+Shared pieces: ``multi_key_layout`` is the one step-major driver of every
+time-synchronous fold; ``filter_fold`` turns a Kalman filter pass into
+the Kalman frame or, for the fixed-lag smoother, into the smoother frame,
+so the time-synchronous smoother's forward pass IS the LKF's; and
+``lag_windows`` is the one backward pass of every smoother engine
+(time-synchronous, both scans and the distributed scan).
+
 Families: LKF/EKF/UKF/CKF, the fixed-lag smoother, RLS, LMS and the
 mixtures. The scalar elementwise folds repeat the sequential op order and
 are bit-identical to it; the batched n-D folds reassociate (~ulp); the
@@ -123,11 +130,12 @@ def vec_cells_to_2d(cells, width: int, has_mask=None) -> np.ndarray:
     """array<double> cells -> (N, width) float64; rows where ``has_mask``
     is False stay zero (the missing-measurement convention of the folds).
 
-    Fast path: one C-level ``np.concatenate`` over the present cells plus a
-    reshape — same doubles, no per-row Python ``asarray``/``ravel`` loop
-    (measured ~10x on the 2.5M-row lkf_ols_multikey bucket at sf1.0). Any
-    non-conforming cell makes the reshape or cast raise and drops to the
-    per-row loop, which raises on a cell of the wrong length."""
+    Fast path: one C-level length check and one ``np.concatenate`` over the
+    present cells plus a reshape — same doubles, no per-row Python
+    ``asarray``/``ravel`` loop (measured ~10x on the 2.5M-row
+    lkf_ols_multikey bucket at sf1.0). Any non-conforming cell (a wrong
+    length, even when the lengths still total rows x width) drops to the
+    per-row loop, which raises on the first cell of the wrong length."""
     N = len(cells)
     out = np.zeros((N, width))
     idx = None if has_mask is None else np.nonzero(has_mask)[0]
@@ -136,6 +144,8 @@ def vec_cells_to_2d(cells, width: int, has_mask=None) -> np.ndarray:
         return out
     sel = cells if idx is None or n_sel == N else cells[idx]
     try:
+        if not (np.fromiter(map(len, sel), np.int64, n_sel) == width).all():
+            raise ValueError
         vals = np.asarray(np.concatenate(sel), dtype=np.float64).reshape(n_sel, width)
     except (TypeError, ValueError):
         vals = None
@@ -278,10 +288,13 @@ def read_measurement_models(pdf: pd.DataFrame, mdim: int, n: int, H_const):
 
 
 def multi_key_layout(pdf: pd.DataFrame):
-    """Shared step-major layout for the time-synchronous folds: returns
-    (keys_arr, key_idx, K, counts, first, order) where ``order`` walks all
-    rows at per-key position 0, then all at position 1, ... (the caller has
-    key+eventTime sorted the frame, so a key's rows are contiguous)."""
+    """The one step-major driver of the time-synchronous folds: returns
+    (keys_arr, K, first, pos, steps). ``steps[t]`` is the (rows, key codes)
+    pair of every key's row at per-key position ``t``, so step t updates
+    each live key once; ``pos`` is each row's position within its key
+    (stateIndex is ``pos + 1``) and ``first`` each key's first row. The
+    caller has key+eventTime sorted the frame, so a key's rows are
+    contiguous."""
     N = len(pdf)
     keys_arr = pdf[STATE_KEY].to_numpy()
     # hash-based factorize instead of np.unique: no O(N log N) string sort
@@ -295,7 +308,10 @@ def multi_key_layout(pdf: pd.DataFrame):
     first = np.concatenate([[0], np.cumsum(counts)[:-1]])
     pos = np.arange(N) - first[key_idx]
     order = np.lexsort((key_idx, pos))
-    return keys_arr, key_idx, K, counts, first, order
+    # step t holds the keys with more than t rows
+    alive_at = K - np.searchsorted(np.sort(counts), np.arange(int(counts.max())), side="right")
+    cuts = np.cumsum(alive_at)[:-1]
+    return keys_arr, K, first, pos, list(zip(np.split(order, cuts), np.split(key_idx[order], cuts)))
 
 
 def key_runs(keys_arr: np.ndarray):
@@ -391,15 +407,16 @@ def vectorized_nd_rls_scan_fold_factory(c: dict):
     return fold
 
 
-def scalar_features(pdf: pd.DataFrame, engine: str, shape: str = "shape") -> np.ndarray:
-    """The 1-element ``features`` cells as one float64 vector; a wider
-    first cell raises the guided error of ``engine``, a wider later one
-    ``vec_cells_to_2d``'s."""
+def scalar_features(pdf: pd.DataFrame, width_known: bool = True) -> np.ndarray:
+    """The 1-element ``features`` cells as one float64 vector; a wider cell
+    raises ``check_width``'s error. Only a shape that does not declare its
+    width (an LMS without initialState) raises the scan's guided error on
+    a wider first cell instead."""
     feats = pdf["features"].values
-    if len(np.ravel(feats[0])) != 1:
+    if not width_known and len(np.ravel(feats[0])) != 1:
         raise ValueError(
-            f"foldEngine={engine!r} supports the 1-D {shape} only — use "
-            "the sequential engine for n-D feature vectors"
+            "foldEngine='scan' supports the 1-D LMS shape only — use the "
+            "sequential engine for n-D feature vectors"
         )
     return vec_cells_to_2d(feats, 1)[:, 0]
 
@@ -458,8 +475,7 @@ def vectorized_scalar_rls_scan_fold_factory(c: dict):
     def fold(pdf: pd.DataFrame, _state):
         if len(pdf) == 0:
             return layout.frame(0), None
-        X = vec_cells_to_2d(pdf["features"].values, 1)[:, 0]
-        return _affine_frame(pdf, None, 0, X, *scan), None
+        return _affine_frame(pdf, None, 0, scalar_features(pdf), *scan), None
 
     return fold
 
@@ -480,13 +496,10 @@ def vectorized_rls_fold_factory(c: dict):
         N = len(pdf)
         if N == 0:
             return layout.frame(0), None
-        keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
+        keys_arr, K, _, pos, steps = multi_key_layout(pdf)
         y = pdf["label"].to_numpy(dtype=np.float64)
         feats = pdf["features"].values
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-        out_idx = np.empty(N, dtype=np.int64)
-        T = int(counts.max())
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
 
         if scalar:
             X = vec_cells_to_2d(feats, 1)[:, 0]
@@ -494,12 +507,7 @@ def vectorized_rls_fold_factory(c: dict):
             P = np.full(K, p0)
             out_mean = np.empty(N)
             out_cov = np.empty(N)
-            ptr = 0
-            for t in range(T):
-                a = int(alive_at[t])
-                block = order[ptr : ptr + a]
-                ptr += a
-                ki = key_idx[block]
+            for block, ki in steps:
                 x = X[block]
                 # same elementwise op order as the sequential scalar fold
                 Px = P[ki] * x
@@ -508,7 +516,6 @@ def vectorized_rls_fold_factory(c: dict):
                 err = y[block] - x * m[ki]
                 m[ki] = m[ki] + g * err
                 P[ki] = (P[ki] - g * Px) / lam
-                out_idx[block] = t + 1
                 out_mean[block] = m[ki]
                 out_cov[block] = P[ki]
         else:
@@ -517,12 +524,7 @@ def vectorized_rls_fold_factory(c: dict):
             P = np.tile(P0m, (K, 1, 1))
             out_mean = np.empty((N, n))
             out_cov = np.empty((N, n, n))
-            ptr = 0
-            for t in range(T):
-                a = int(alive_at[t])
-                block = order[ptr : ptr + a]
-                ptr += a
-                ki = key_idx[block]
+            for block, ki in steps:
                 x = X[block]
                 Pk = P[ki]
                 Px = np.einsum("aij,aj->ai", Pk, x)
@@ -532,11 +534,10 @@ def vectorized_rls_fold_factory(c: dict):
                 m[ki] = m[ki] + g * err[:, None]
                 P1 = (Pk - g[:, :, None] * Px[:, None, :]) / lam
                 P[ki] = (P1 + np.swapaxes(P1, 1, 2)) * 0.5  # linalg.sym
-                out_idx[block] = t + 1
                 out_mean[block] = m[ki]
                 out_cov[block] = P[ki]
 
-        out = layout.frame(N, stateKey=keys_arr, stateIndex=out_idx, m=out_mean, c=out_cov, eventTime=ev)
+        out = layout.frame(N, stateKey=keys_arr, stateIndex=pos + 1, m=out_mean, c=out_cov, eventTime=ev)
         return out, None
 
     return fold
@@ -567,31 +568,22 @@ def vectorized_lms_fold_factory(c: dict):
         N = len(pdf)
         if N == 0:
             return empty_pdf(LMS_COLUMNS), None
-        keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
+        keys_arr, K, _, pos, steps = multi_key_layout(pdf)
         y = pdf["label"].to_numpy(dtype=np.float64)
         feats = pdf["features"].values
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
         n = len(np.asarray(feats[0], dtype=np.float64).ravel()) if init is None else len(init)
         X = vec_cells_to_2d(feats, n)
         m = np.tile(np.zeros(n) if init is None else init, (K, 1))
-        out_idx = np.empty(N, dtype=np.int64)
         out_state = np.empty((N, n))
-        T = int(counts.max())
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
+        for block, ki in steps:
             x = X[block]
             # linalg.lms_update op order: err, denom, m + (lr*err/denom)*x
             err = y[block] - np.einsum("aj,aj->a", x, m[ki])
             denom = reg + np.einsum("aj,aj->a", x, x)
             m[ki] = m[ki] + (lr * err / denom)[:, None] * x
-            out_idx[block] = t + 1
             out_state[block] = m[ki]
-        return _lms_frame(keys_arr, out_idx, out_state, ev), None
+        return _lms_frame(keys_arr, pos + 1, out_state, ev), None
 
     return fold
 
@@ -626,7 +618,7 @@ def vectorized_scalar_lms_scan_fold_factory(c: dict):
     def fold(pdf: pd.DataFrame, _state):
         if len(pdf) == 0:
             return empty_pdf(LMS_COLUMNS), None
-        X = scalar_features(pdf, "scan", "LMS shape")
+        X = scalar_features(pdf, c["initialState"] is not None)
         return _affine_frame(pdf, None, 0, X, *scan), None
 
     return fold
@@ -700,6 +692,58 @@ def _batched_ut(pts, wm, wc, noise):
     return mean, (cov + np.swapaxes(cov, 1, 2)) * 0.5
 
 
+def _pinv(S):
+    """Batched pinv of innovation covariances (A, m, m); for m = 1 the
+    elementwise 1/S — bit-identical to pinv on 1x1 stacks (SVD of [[s]]
+    reciprocates the lone singular value, one IEEE division either way;
+    s == 0 -> 0 in both), without the batched-SVD per-step hot spot."""
+    if S.shape[1] != 1:
+        return np.linalg.pinv(S)
+    s1 = S[:, 0, 0]
+    return np.where(s1 != 0.0, 1.0 / np.where(s1 == 0.0, 1.0, s1), 0.0)[:, None, None]
+
+
+def innovation_stats(S, r):
+    """(squared Mahalanobis distance, log det S) of residuals r (A, m)
+    under innovation covariances S (A, m, m). For m = 1 the Cholesky and
+    solve reduce to a sqrt and a division — bit-identical, no batched
+    LAPACK."""
+    if S.shape[1] == 1:
+        L1 = np.sqrt(S[:, 0, 0] + 1e-300)
+        return (r[:, 0] / L1) ** 2, 2.0 * np.log(L1)
+    L = np.linalg.cholesky(S + 1e-300 * np.eye(S.shape[1]))
+    w = np.linalg.solve(L, r[..., None])[..., 0]
+    return np.sum(w * w, axis=1), 2.0 * np.sum(np.log(np.diagonal(L, axis1=1, axis2=2)), axis=1)
+
+
+def filter_fold(c: dict, run):
+    """The fold of a time-synchronous Kalman filter pass ``run(pdf) ->
+    columns`` (key, stateIndex, filtered ``m``/``c``, residuals, event
+    time, likelihood outputs): the Kalman layout's frame, or for the
+    fixed-lag smoother (``fixedLag`` in ``c``) the backward lag windows
+    over the filtered rows."""
+    if "fixedLag" in c:
+        layout = smoother_layout(c)
+
+        def emit(cols):
+            return lag_windows(
+                layout, cols[STATE_KEY], cols["stateIndex"], cols[EVENT_TIME], cols["m"],
+                cols["c"], c["processModel"], c["processNoise"], c["fixedLag"],
+            )
+    else:
+        layout = kalman_layout(c)
+
+        def emit(cols):
+            return layout.frame(len(cols["m"]), stepIndex=0, **cols)
+
+    def fold(pdf: pd.DataFrame, _state):
+        if len(pdf) == 0:
+            return layout.frame(0), None
+        return emit(run(pdf)), None
+
+    return fold
+
+
 def vectorized_sigma_fold_factory(c: dict):
     """Vectorized multi-key fold for UKF/CKF: batched sigma-point generation
     (batched SVD square roots), batched point propagation (user fns receive
@@ -723,14 +767,15 @@ def vectorized_sigma_fold_factory(c: dict):
     compute_maha = c["calculateMahalanobis"]
     pf = deserialize_callable(c.get("processFunction"))
     mf = deserialize_callable(c.get("measurementFunction"))
-    layout = kalman_layout(c)
 
-    def fold(pdf: pd.DataFrame, _state):
+    def prop_process(pts_flat):
+        if pf is None:
+            return pts_flat @ F_.T
+        return np.asarray(pf(pts_flat, F_), dtype=np.float64)
+
+    def run(pdf: pd.DataFrame):
         N = len(pdf)
-        if N == 0:
-            return layout.frame(0), None
-
-        keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
+        keys_arr, K, first, pos, steps = multi_key_layout(pdf)
 
         has_z, Z = read_measurements(pdf, mdim)
         Hrows = read_measurement_models(pdf, mdim, n, H_const)
@@ -747,22 +792,8 @@ def vectorized_sigma_fold_factory(c: dict):
         out_rescov = np.full((N, mdim, mdim), np.nan)
         out_ll = np.full(N, np.nan)
         out_maha = np.full(N, np.nan)
-        out_idx = np.empty(N, dtype=np.int64)
 
-        def prop_process(pts_flat):
-            if pf is None:
-                return pts_flat @ F_.T
-            return np.asarray(pf(pts_flat, F_), dtype=np.float64)
-
-        T = int(counts.max())
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
-
+        for block, ki in steps:
             # batched sigma-point predict
             pts, wm, wc = _batched_points(kind, c, m[ki], P[ki])
             A, p, _ = pts.shape
@@ -772,7 +803,6 @@ def vectorized_sigma_fold_factory(c: dict):
                 # exponential fading inflates only the propagated covariance,
                 # not the additive noise (kalman.py:313-314)
                 Pb = fad2 * (Pb - Q) + Q
-            out_idx[block] = t + 1
 
             zi = has_z[block]
             if zi.any():
@@ -791,34 +821,16 @@ def vectorized_sigma_fold_factory(c: dict):
                     zpts = np.asarray(mf(flat, Hrep), dtype=np.float64).reshape(A2, p2, mdim)
                 zmean, S = _batched_ut(zpts, wm2, wc2, R)
                 cross = np.einsum("p,apd,ape->ade", wc2, pts2 - m1[:, None, :], zpts - zmean[:, None, :])
-                if mdim == 1:
-                    # 1/S elementwise — batched SVD pinv on 1x1 matrices is
-                    # the per-step hot spot; identical result for S > 0
-                    s1 = S[:, 0, 0]
-                    pinvS = np.where(s1 != 0.0, 1.0 / np.where(s1 == 0.0, 1.0, s1), 0.0)[
-                        :, None, None
-                    ]
-                else:
-                    pinvS = np.linalg.pinv(S)
-                Kg = np.einsum("ade,aef->adf", cross, pinvS)
+                Kg = np.einsum("ade,aef->adf", cross, _pinv(S))
                 r = Z[rows_u] - zmean
                 m_new = m1 + np.einsum("adf,af->ad", Kg, r)
                 P_new = P1 - np.einsum("adf,afg,aeg->ade", Kg, S, Kg)
-                P_new = (P_new + np.swapaxes(P_new, 1, 2)) * 0.5
                 mb[zi] = m_new
-                Pb[zi] = P_new
+                Pb[zi] = (P_new + np.swapaxes(P_new, 1, 2)) * 0.5
                 out_res[rows_u] = r
                 out_rescov[rows_u] = S
                 if compute_ll or compute_maha:
-                    if mdim == 1:
-                        L1 = np.sqrt(S[:, 0, 0] + 1e-300)
-                        sq = (r[:, 0] / L1) ** 2
-                        logdet = 2.0 * np.log(L1)
-                    else:
-                        L = np.linalg.cholesky(S + 1e-300 * np.eye(mdim))
-                        w = np.linalg.solve(L, r[..., None])[..., 0]
-                        sq = np.sum(w * w, axis=1)
-                        logdet = 2.0 * np.sum(np.log(np.diagonal(L, axis1=1, axis2=2)), axis=1)
+                    sq, logdet = innovation_stats(S, r)
                     if compute_maha:
                         out_maha[rows_u] = np.sqrt(np.maximum(sq, 0.0))
                     if compute_ll:
@@ -829,13 +841,12 @@ def vectorized_sigma_fold_factory(c: dict):
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = layout.frame(
-            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
-            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
+        return dict(
+            stateKey=keys_arr, stateIndex=pos + 1, m=out_mean, c=out_cov, r=out_res,
+            rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
         )
-        return out, None
 
-    return fold
+    return filter_fold(c, run)
 
 
 def vectorized_scalar_lkf_fold_factory(c: dict):
@@ -856,14 +867,10 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
     compute_ll = c["calculateLoglikelihood"] or compute_sll
     compute_maha = c["calculateMahalanobis"]
     ll_window = int(c.get("slidingLikelihoodWindow") or 1)
-    layout = kalman_layout(c)
 
-    def fold(pdf: pd.DataFrame, _state):
+    def run(pdf: pd.DataFrame):
         N = len(pdf)
-        if N == 0:
-            return layout.frame(0), None
-
-        keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
+        keys_arr, K, first, pos, steps = multi_key_layout(pdf)
 
         has_z, Z = read_scalar_measurements(pdf)
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
@@ -879,21 +886,12 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
         out_ll = np.full(N, np.nan)
         out_maha = np.full(N, np.nan)
         out_sll = np.full(N, np.nan)
-        out_idx = np.empty(N, dtype=np.int64)
         # chronological per-key log-likelihood window (newest = last col);
         # zero-initialized slots add exactly 0.0, so short windows sum to
         # the same IEEE result as the sequential fold's python list
         hist = np.zeros((K, ll_window)) if compute_sll else None
 
-        T = int(counts.max())
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
-
+        for block, ki in steps:
             # same elementwise op order as the sequential scalar fold
             mb = f * m[ki]
             Pb = fad2 * ((f * P[ki]) * f) + q
@@ -931,18 +929,16 @@ def vectorized_scalar_lkf_fold_factory(c: dict):
 
             m[ki] = mb
             P[ki] = Pb
-            out_idx[block] = t + 1
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = layout.frame(
-            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
-            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
+        return dict(
+            stateKey=keys_arr, stateIndex=pos + 1, m=out_mean, c=out_cov, r=out_res,
+            rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
             slidingLikelihood=out_sll,
         )
-        return out, None
 
-    return fold
+    return filter_fold(c, run)
 
 
 def supports_scan(c: dict) -> bool:
@@ -1244,7 +1240,6 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
     fad2 = fad**2
     compute_ll = c["calculateLoglikelihood"]
     compute_maha = c["calculateMahalanobis"]
-    layout = kalman_layout(c)
 
     # point offsets (p,) and weights for n = 1
     if kind == "ckf":
@@ -1274,12 +1269,9 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
         mean = pts @ wm
         return mean, pts - mean[:, None]
 
-    def fold(pdf: pd.DataFrame, _state):
+    def run(pdf: pd.DataFrame):
         N = len(pdf)
-        if N == 0:
-            return layout.frame(0), None
-
-        keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
+        keys_arr, K, first, pos, steps = multi_key_layout(pdf)
 
         has_z, Z = read_scalar_measurements(pdf)
         ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
@@ -1294,21 +1286,11 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
         out_rescov = np.full(N, np.nan)
         out_ll = np.full(N, np.nan)
         out_maha = np.full(N, np.nan)
-        out_idx = np.empty(N, dtype=np.int64)
 
-        T = int(counts.max())
-        # per-step alive counts once (counts is fixed across the loop), and
         # the mask machinery hoisted when every row carries a measurement
         # (the common batch shape) — ~7 fewer small numpy calls per step
-        alive_at = (len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right"))
         all_z = bool(has_z.all())
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
-
+        for block, ki in steps:
             # sigma-point predict
             root = np.sqrt(g * P[ki])
             prop = f * (m[ki][:, None] + root[:, None] * ofs)
@@ -1316,7 +1298,6 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
             Pb = (diff * diff) @ wc + q
             if fad != 1.0:
                 Pb = fad2 * (Pb - q) + q
-            out_idx[block] = t + 1
 
             zi = None if all_z else has_z[block]
             if all_z or zi.any():
@@ -1342,25 +1323,23 @@ def vectorized_scalar_sigma_fold_factory(c: dict):
                 out_res[rows_u] = r
                 out_rescov[rows_u] = S
                 if compute_ll or compute_maha:
-                    L1 = np.sqrt(S + 1e-300)
-                    sq = (r / L1) ** 2
+                    sq, logdet = innovation_stats(S[:, None, None], r[:, None])
                     if compute_maha:
                         out_maha[rows_u] = np.sqrt(np.maximum(sq, 0.0))
                     if compute_ll:
-                        out_ll[rows_u] = -0.5 * (_LOG2PI + 2.0 * np.log(L1) + sq)
+                        out_ll[rows_u] = -0.5 * (_LOG2PI + logdet + sq)
 
             m[ki] = mb
             P[ki] = Pb
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = layout.frame(
-            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
-            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
+        return dict(
+            stateKey=keys_arr, stateIndex=pos + 1, m=out_mean, c=out_cov, r=out_res,
+            rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
         )
-        return out, None
 
-    return fold
+    return filter_fold(c, run)
 
 
 def vectorized_ekf_fold_factory(c: dict):
@@ -1407,16 +1386,10 @@ def vectorized_lkf_fold_factory(c: dict):
         and not np.any(Q)
         and np.array_equal(F_, eye_n)
     )
-    layout = kalman_layout(c)
 
-    def fold(pdf: pd.DataFrame, _state):
+    def run(pdf: pd.DataFrame):
         N = len(pdf)
-        if N == 0:
-            return layout.frame(0), None
-
-        # step-major layout (all pos==0 rows, then pos==1, ...; rows of one
-        # key are contiguous after the caller's key+eventTime sort)
-        keys_arr, key_idx, K, counts, first, order = multi_key_layout(pdf)
+        keys_arr, K, first, pos, steps = multi_key_layout(pdf)
 
         has_z, Z = read_measurements(pdf, mdim)
         Hrows = read_measurement_models(pdf, mdim, n, H_const)
@@ -1433,20 +1406,11 @@ def vectorized_lkf_fold_factory(c: dict):
         out_rescov = np.full((N, mdim, mdim), np.nan)
         out_ll = np.full(N, np.nan)
         out_maha = np.full(N, np.nan)
-        out_idx = np.empty(N, dtype=np.int64)
 
-        T = int(counts.max())
-        # per-step alive counts once; mask machinery hoisted when every row
-        # carries a measurement (see the scalar sigma fold)
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
+        # mask machinery hoisted when every row carries a measurement (see
+        # the scalar sigma fold)
         all_z = bool(has_z.all())
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
-
+        for block, ki in steps:
             # batched predict (Jacobians evaluated at the PRIOR mean,
             # matching the sequential EKF: kalman.py predict())
             m_prior = m[ki]
@@ -1470,7 +1434,6 @@ def vectorized_lkf_fold_factory(c: dict):
                     Pb = fad2 * np.einsum("aij,ajk,alk->ail", Fj, P[ki], Fj) + Qe
                 else:
                     Pb = fad2 * np.einsum("ij,ajk,lk->ail", F_, P[ki], F_) + Qe
-            out_idx[block] = t + 1
 
             zi = None if all_z else has_z[block]
             if all_z or zi.any():
@@ -1497,18 +1460,7 @@ def vectorized_lkf_fold_factory(c: dict):
                     Re = None
                     S = np.einsum("aij,ajk,alk->ail", Hb, P1, Hb) + R
                 S = (S + np.swapaxes(S, 1, 2)) * 0.5
-                if mdim == 1:
-                    # elementwise 1/S — bit-identical to pinv on 1x1 stacks
-                    # (SVD of [[s]] reciprocates the lone singular value, one
-                    # IEEE division either way; s==0 -> 0 in both), without
-                    # the batched-SVD per-step hot spot
-                    s1 = S[:, 0, 0]
-                    pinvS = np.where(s1 != 0.0, 1.0 / np.where(s1 == 0.0, 1.0, s1), 0.0)[
-                        :, None, None
-                    ]
-                else:
-                    pinvS = np.linalg.pinv(S)
-                Kg = np.einsum("aij,akj,akl->ail", P1, Hb, pinvS)
+                Kg = np.einsum("aij,akj,akl->ail", P1, Hb, _pinv(S))
                 r = Z[rows_u] - zhat
                 m_new = m1 + np.einsum("aij,aj->ai", Kg, r)
                 ikh = eye_n - np.einsum("aij,ajk->aik", Kg, Hb)
@@ -1526,17 +1478,7 @@ def vectorized_lkf_fold_factory(c: dict):
                 out_res[rows_u] = r
                 out_rescov[rows_u] = S
                 if compute_ll or compute_maha:
-                    if mdim == 1:
-                        # cholesky/solve on 1x1 stacks reduce to sqrt and a
-                        # division — bit-identical, no batched LAPACK
-                        L1 = np.sqrt(S[:, 0, 0] + 1e-300)
-                        sq = (r[:, 0] / L1) ** 2
-                        logdet = 2.0 * np.log(L1)
-                    else:
-                        L = np.linalg.cholesky(S + 1e-300 * np.eye(mdim))
-                        w = np.linalg.solve(L, r[..., None])[..., 0]
-                        sq = np.sum(w * w, axis=1)
-                        logdet = 2.0 * np.sum(np.log(np.diagonal(L, axis1=1, axis2=2)), axis=1)
+                    sq, logdet = innovation_stats(S, r)
                     if compute_maha:
                         out_maha[rows_u] = np.sqrt(np.maximum(sq, 0.0))
                     if compute_ll:
@@ -1547,13 +1489,12 @@ def vectorized_lkf_fold_factory(c: dict):
             out_mean[block] = mb
             out_cov[block] = Pb
 
-        out = layout.frame(
-            N, stateKey=keys_arr, stateIndex=out_idx, stepIndex=0, m=out_mean, c=out_cov,
-            r=out_res, rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
+        return dict(
+            stateKey=keys_arr, stateIndex=pos + 1, m=out_mean, c=out_cov, r=out_res,
+            rc=out_rescov, eventTime=ev, loglikelihood=out_ll, mahalanobis=out_maha,
         )
-        return out, None
 
-    return fold
+    return filter_fold(c, run)
 
 
 def supports_scan_general(c: dict) -> bool:
@@ -1900,15 +1841,7 @@ def _nd_scan_emit(
         out_res[meas] = r
         out_rescov[meas] = S
         if compute_ll or compute_maha:
-            if mdim == 1:
-                L1 = np.sqrt(S[:, 0, 0] + 1e-300)
-                sq = (r[:, 0] / L1) ** 2
-                logdet = 2.0 * np.log(L1)
-            else:
-                L = np.linalg.cholesky(S + 1e-300 * np.eye(mdim))
-                w = np.linalg.solve(L, r[..., None])[..., 0]
-                sq = np.sum(w * w, axis=1)
-                logdet = 2.0 * np.sum(np.log(np.diagonal(L, axis1=1, axis2=2)), axis=1)
+            sq, logdet = innovation_stats(S, r)
             if compute_maha:
                 out_maha[meas] = np.sqrt(np.maximum(sq, 0.0))
             if compute_ll:
@@ -1924,16 +1857,13 @@ def _nd_scan_emit(
 def vectorized_scalar_smoother_scan_fold_factory(c: dict):
     """Scan-engine fixed-lag RTS smoother (scalar shape): forward pass =
     the shared associative filtering scan (log2 N full-width passes);
-    backward pass = the fixed-lag window recursion vectorized over ALL
-    anchors at once — ``lag`` numpy passes instead of the per-trigger
-    Python loop, so wall-clock no longer scales with rows-per-key. Same
-    emission contract as the sequential queue fold (smoother.py): each
-    row with at least ``lag-1`` predecessors in its key anchors a window
-    emitting ``lag`` smoothed rows (stepIndex 0 = the anchor itself,
-    gain 0). Op order of the backward recursion mirrors the sequential
-    fold exactly; the forward state comes from the scan (~1e-12
-    relative vs the recursion, tests/test_scan_engine.py)."""
-    lag = c["fixedLag"]
+    backward pass = ``lag_windows`` over ALL anchors at once — ``lag``
+    numpy passes instead of the per-trigger Python loop, so wall-clock no
+    longer scales with rows-per-key. Same emission contract as the
+    sequential queue fold (smoother.py). Op order of the backward
+    recursion mirrors the sequential fold exactly; the forward state
+    comes from the scan (~1e-12 relative vs the recursion,
+    tests/test_scan_engine.py)."""
     f = float(c["processModel"][0, 0])
     q = float(c["processNoise"][0, 0])
     h = float(c["measurementModel"][0, 0])
@@ -1946,64 +1876,70 @@ def vectorized_scalar_smoother_scan_fold_factory(c: dict):
         N = len(pdf)
         if N == 0:
             return layout.frame(0), None
-        (
-            keys_arr, seg, pos, first_idx, has_z, Z, ev, m0k, p0k,
-            filt_m, filt_P,
-        ) = _scalar_scan_forward(pdf, N, f, q, h, rr, m0, p0)
-
-        # same key: pos[anchor] >= lag-1 >= every backward step
-        anchors = np.nonzero(pos >= lag - 1)[0]
-        if len(anchors) == 0:
-            return layout.frame(0), None
-        o_row, o_step, o_mean, o_cov, o_gain = scalar_lag_windows(filt_m, filt_P, anchors, f, q, lag)
-        out = layout.frame(
-            len(o_row), stateKey=keys_arr[o_row], stateIndex=pos[o_row] + 1, stepIndex=o_step,
-            m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
+        keys_arr, _seg, pos, _fi, _hz, _z, ev, _m0k, _p0k, filt_m, filt_P = _scalar_scan_forward(
+            pdf, N, f, q, h, rr, m0, p0
         )
-        return out, None
+        return lag_windows(
+            layout, keys_arr, pos + 1, ev, filt_m, filt_P, c["processModel"], c["processNoise"],
+            c["fixedLag"],
+        ), None
 
     return fold
 
 
-def scalar_lag_windows(filt_m, filt_P, anchors, f, q, lag: int):
-    """The 1-D fixed-lag backward windows of every anchor row at once:
-    ``lag`` numpy passes instead of the per-trigger Python loop. Each
-    anchor emits ``lag`` rows (step 0 = the anchor itself, gain 0); the
-    ``lag - 1`` rows before an anchor must be its own key's. Returns the
-    (row, step, mean, cov, gain) arrays of the ``len(anchors) * lag``
-    emitted rows. Per-row one-step predicts and RTS gains are batched once,
-    with the same expressions and op order as the sequential fold's
-    backward loop."""
-    nm = f * filt_m
-    nc = (f * filt_P) * f + q
-    g = (filt_P * f) * (1.0 / nc)
+def lag_windows(layout, keys, index, ev, filt_m, filt_P, F_, Q, lag: int, own=True):
+    """The fixed-lag RTS backward windows of every anchor row at once, as
+    the smoother layout's frame: ``lag`` numpy passes instead of a
+    per-trigger Python loop. A row anchors a window when its stateIndex
+    ``index`` is at least ``lag`` (and ``own`` holds for it); the
+    ``lag - 1`` rows before an anchor must be its own key's. Each anchor
+    emits ``lag`` rows (stepIndex 0 = the anchor itself, gain 0) — the
+    emission contract of the sequential queue fold (smoother.py).
+
+    The per-row one-step predicts and RTS gains are batched once. 1-D
+    filtered states (``filt_m`` of shape (N,)) use the sequential scalar
+    fold's elementwise expressions and op order, so that path is
+    bit-exact with it; n-D states use batched einsum and pinv (~ulp)."""
+    anchors = np.nonzero((index >= lag) & own)[0]
     M = len(anchors)
+    if M == 0:
+        return layout.frame(0)
+    if filt_m.ndim == 1:
+        f, q = float(F_[0, 0]), float(Q[0, 0])
+        nm = f * filt_m
+        nc = (f * filt_P) * f + q
+        g = (filt_P * f) * (1.0 / nc)
+
+        def back(sm_m, sm_P, j, gj):
+            return filt_m[j] + gj * (sm_m - nm[j]), filt_P[j] + (gj * (sm_P - nc[j])) * gj
+    else:
+        nm = filt_m @ F_.T
+        nc = np.einsum("ij,ajk,lk->ail", F_, filt_P, F_) + Q
+        g = np.einsum("aij,kj,akl->ail", filt_P, F_, np.linalg.pinv(nc))
+
+        def back(sm_m, sm_P, j, gj):
+            return (
+                filt_m[j] + np.einsum("aij,aj->ai", gj, sm_m - nm[j]),
+                filt_P[j] + np.einsum("aij,ajk,alk->ail", gj, sm_P - nc[j], gj),
+            )
+
     total = M * lag
     o_row = np.empty(total, dtype=np.int64)
-    o_step = np.empty(total, dtype=np.int64)
-    o_mean = np.empty(total)
-    o_cov = np.empty(total)
-    o_gain = np.empty(total)
-
-    sm_m = filt_m[anchors]
-    sm_p = filt_P[anchors]
-    o_row[:M] = anchors
-    o_step[:M] = 0
-    o_mean[:M] = sm_m
-    o_cov[:M] = sm_p
-    o_gain[:M] = 0.0
+    o_mean = np.empty((total, *filt_m.shape[1:]))
+    o_cov = np.empty((total, *filt_P.shape[1:]))
+    o_gain = np.zeros((total, *g.shape[1:]))
+    sm_m, sm_P = filt_m[anchors], filt_P[anchors]
+    o_row[:M], o_mean[:M], o_cov[:M] = anchors, sm_m, sm_P
     for step in range(1, lag):
         j = anchors - step
         gj = g[j]
-        sm_m = filt_m[j] + gj * (sm_m - nm[j])
-        sm_p = filt_P[j] + (gj * (sm_p - nc[j])) * gj
-        w = step * M
-        o_row[w : w + M] = j
-        o_step[w : w + M] = step
-        o_mean[w : w + M] = sm_m
-        o_cov[w : w + M] = sm_p
-        o_gain[w : w + M] = gj
-    return o_row, o_step, o_mean, o_cov, o_gain
+        sm_m, sm_P = back(sm_m, sm_P, j, gj)
+        w = slice(step * M, (step + 1) * M)
+        o_row[w], o_mean[w], o_cov[w], o_gain[w] = j, sm_m, sm_P, gj
+    return layout.frame(
+        total, stateKey=keys[o_row], stateIndex=index[o_row], stepIndex=np.repeat(np.arange(lag), M),
+        m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
+    )
 
 
 def supports_scan_smoother(c: dict) -> bool:
@@ -2026,14 +1962,10 @@ def supports_scan_smoother(c: dict) -> bool:
 def vectorized_nd_smoother_scan_fold_factory(c: dict):
     """Scan-engine fixed-lag RTS smoother, n-D states: forward pass = the
     shared matrix-element scan (``_nd_scan_forward``, log2 N batched
-    LAPACK passes); backward pass = the fixed-lag window recursion
-    vectorized over ALL anchors at once — ``lag`` batched einsum passes
-    instead of the per-trigger Python loop. Same emission contract and
-    backward op order as the sequential general fold
-    (``vectorized_smoother_fold_factory`` fold_general); the forward
-    state comes from the scan (~1e-9 relative,
+    LAPACK passes); backward pass = ``lag_windows`` over ALL anchors at
+    once, the same backward op order as every other smoother engine. The
+    forward state comes from the scan (~1e-9 relative,
     tests/test_scan_engine.py)."""
-    lag = c["fixedLag"]
     n = c["stateSize"]
     mdim = c["measurementSize"]
     F_ = c["processModel"]
@@ -2048,51 +1980,10 @@ def vectorized_nd_smoother_scan_fold_factory(c: dict):
         N = len(pdf)
         if N == 0:
             return layout.frame(0), None
-        (
-            keys_arr, seg, pos, first_idx, has_z, Z, Hrows, ev, m0k, P0k,
-            filt_m, filt_P,
-        ) = _nd_scan_forward(pdf, N, n, mdim, F_, Q, R, H_const, m0, P0)
-
-        # per-row RTS predicts + gains, batched once (same expressions as
-        # the sequential general fold's backward loop)
-        nm = filt_m @ F_.T
-        nc = np.einsum("ij,ajk,lk->ail", F_, filt_P, F_) + Q
-        g = np.einsum("aij,kj,akl->ail", filt_P, F_, np.linalg.pinv(nc))
-
-        anchors = np.nonzero(pos >= lag - 1)[0]
-        M = len(anchors)
-        if M == 0:
-            return layout.frame(0), None
-        total = M * lag
-        o_row = np.empty(total, dtype=np.int64)
-        o_step = np.empty(total, dtype=np.int64)
-        o_mean = np.empty((total, n))
-        o_cov = np.empty((total, n, n))
-        o_gain = np.empty((total, n, n))
-
-        sm_m = filt_m[anchors]
-        sm_P = filt_P[anchors]
-        o_row[:M] = anchors
-        o_step[:M] = 0
-        o_mean[:M] = sm_m
-        o_cov[:M] = sm_P
-        o_gain[:M] = 0.0
-        for step in range(1, lag):
-            j = anchors - step  # same key: pos[anchor] >= lag-1 >= step
-            gj = g[j]
-            sm_m = filt_m[j] + np.einsum("aij,aj->ai", gj, sm_m - nm[j])
-            sm_P = filt_P[j] + np.einsum("aij,ajk,alk->ail", gj, sm_P - nc[j], gj)
-            w = step * M
-            o_row[w : w + M] = j
-            o_step[w : w + M] = step
-            o_mean[w : w + M] = sm_m
-            o_cov[w : w + M] = sm_P
-            o_gain[w : w + M] = gj
-        out = layout.frame(
-            total, stateKey=keys_arr[o_row], stateIndex=pos[o_row] + 1, stepIndex=o_step,
-            m=o_mean, c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
+        keys_arr, _seg, pos, _fi, _hz, _z, _h, ev, _m0k, _P0k, filt_m, filt_P = _nd_scan_forward(
+            pdf, N, n, mdim, F_, Q, R, H_const, m0, P0
         )
-        return out, None
+        return lag_windows(layout, keys_arr, pos + 1, ev, filt_m, filt_P, F_, Q, c["fixedLag"]), None
 
     return fold
 
@@ -2105,235 +1996,18 @@ def supports_vectorized_smoother(c: dict) -> bool:
 
 
 def vectorized_smoother_fold_factory(c: dict):
-    """Time-synchronous multi-key fixed-lag RTS smoother.
-
-    Forward pass = the batched LKF filter recording every filtered (m, P);
-    the per-row RTS predicts/gains (which depend only on the row, not the
-    trigger) are then computed ONCE fully batched, and the backward
-    recursion walks (trigger t, window step j) emitting lag rows per
-    surviving row — same O(N*lag) output as the sequential queue fold
-    (smoother.py), but with O(T*lag) batched numpy calls instead of
-    O(N*lag) Python iterations. 1-D states take an elementwise (A,) scalar
-    path that is bit-exact with the sequential scalar fold; n-D uses
-    batched einsum/pinv (~ulp).
-    """
-    lag = c["fixedLag"]
-    n = c["stateSize"]
-    mdim = c["measurementSize"]
-    F_ = c["processModel"]
-    Q = c["processNoise"]
-    R = c["measurementNoise"]
-    H_const = c["measurementModel"]
-    m0 = c["initialStateMean"]
-    P0 = c["initialStateCovariance"]
-    fad2 = float(c["fadingFactor"]) ** 2
-    scalar = n == 1 and mdim == 1
-    eye_n = np.eye(n)
-    layout = smoother_layout(c)
-
-    def _layout(pdf):
-        N = len(pdf)
-        keys_arr = pdf[STATE_KEY].to_numpy()
-        key_idx, key_codes = pd.factorize(keys_arr)  # see multi_key_layout
-        K = len(key_codes)
-        counts = np.bincount(key_idx, minlength=K)
-        first = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        pos = np.arange(N) - first[key_idx]
-        order = np.lexsort((key_idx, pos))
-        return N, keys_arr, key_codes, key_idx, K, counts, first, pos, order
-
-    def fold_scalar(pdf: pd.DataFrame, _state):
-        if len(pdf) == 0:
-            return layout.frame(0), None
-        N, keys_arr, key_codes, key_idx, K, counts, first, pos, order = _layout(pdf)
-        f = float(F_[0, 0])
-        q = float(Q[0, 0])
-        h = float(H_const[0, 0])
-        rr = float(R[0, 0])
-
-        has_z, Z = read_scalar_measurements(pdf)
-        ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-
-        m = np.full(K, float(m0[0]))
-        P = np.full(K, float(P0[0, 0]))
-        filt_m = np.empty(N)
-        filt_P = np.empty(N)
-        T = int(counts.max())
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
-        row_at = np.full((K, T), -1, dtype=np.int64)
-
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
-            # same elementwise op order as the sequential scalar fold
-            mb = f * m[ki]
-            Pb = fad2 * ((f * P[ki]) * f) + q
-            zi = has_z[block]
-            if zi.any():
-                z0 = Z[block[zi]]
-                m1, P1 = mb[zi], Pb[zi]
-                r = z0 - h * m1
-                S = (h * P1) * h + rr
-                Kg = (P1 * h) * (1.0 / S)
-                mb[zi] = m1 + Kg * r
-                ikh = 1.0 - Kg * h
-                Pb[zi] = (ikh * P1) * ikh + (Kg * rr) * Kg
-            m[ki] = mb
-            P[ki] = Pb
-            filt_m[block] = mb
-            filt_P[block] = Pb
-            row_at[ki, t] = block
-
-        # per-row backward predicts/gains, batched once
-        nm = f * filt_m
-        nc = (f * filt_P) * f + q
-        g = (filt_P * f) * (1.0 / nc)
-
-        M = int(np.sum(np.maximum(0, counts - (lag - 1))) * lag)
-        o_row = np.empty(M, dtype=np.int64)  # source row (for key/eventTime)
-        o_idx = np.empty(M, dtype=np.int64)
-        o_step = np.empty(M, dtype=np.int64)
-        o_mean = np.empty(M)
-        o_cov = np.empty(M)
-        o_gain = np.empty(M)
-        w = 0
-        for t in range(lag - 1, T):
-            alive = np.nonzero(counts > t)[0]
-            A = len(alive)
-            rt = row_at[alive, t]
-            sm_m = filt_m[rt]
-            sm_p = filt_P[rt]
-            o_row[w : w + A] = rt
-            o_idx[w : w + A] = t + 1
-            o_step[w : w + A] = 0
-            o_mean[w : w + A] = sm_m
-            o_cov[w : w + A] = sm_p
-            o_gain[w : w + A] = 0.0
-            w += A
-            for step, j in enumerate(range(t - 1, t - lag, -1), start=1):
-                rj = row_at[alive, j]
-                gj = g[rj]
-                sm_m = filt_m[rj] + gj * (sm_m - nm[rj])
-                sm_p = filt_P[rj] + (gj * (sm_p - nc[rj])) * gj
-                o_row[w : w + A] = rj
-                o_idx[w : w + A] = j + 1
-                o_step[w : w + A] = step
-                o_mean[w : w + A] = sm_m
-                o_cov[w : w + A] = sm_p
-                o_gain[w : w + A] = gj
-                w += A
-        out = layout.frame(
-            M, stateKey=keys_arr[o_row], stateIndex=o_idx, stepIndex=o_step, m=o_mean,
-            c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
-        )
-        return out, None
-
-    def fold_general(pdf: pd.DataFrame, _state):
-        if len(pdf) == 0:
-            return layout.frame(0), None
-        N, keys_arr, key_codes, key_idx, K, counts, first, pos, order = _layout(pdf)
-
-        has_z, Z = read_measurements(pdf, mdim)
-        ev = pdf[EVENT_TIME].values if EVENT_TIME in pdf.columns else None
-
-        m = np.tile(m0, (K, 1))
-        P = np.tile(P0, (K, 1, 1))
-        filt_m = np.empty((N, n))
-        filt_P = np.empty((N, n, n))
-        T = int(counts.max())
-        alive_at = len(counts) - np.searchsorted(np.sort(counts), np.arange(T), side="right")
-        row_at = np.full((K, T), -1, dtype=np.int64)
-
-        ptr = 0
-        for t in range(T):
-            a = int(alive_at[t])
-            block = order[ptr : ptr + a]
-            ptr += a
-            ki = key_idx[block]
-            mb = m[ki] @ F_.T
-            Pb = fad2 * np.einsum("ij,ajk,lk->ail", F_, P[ki], F_) + Q
-            zi = has_z[block]
-            if zi.any():
-                rows_u = block[zi]
-                Hb = np.broadcast_to(H_const, (len(rows_u), mdim, n))
-                P1 = Pb[zi]
-                m1 = mb[zi]
-                S = np.einsum("aij,ajk,alk->ail", Hb, P1, Hb) + R
-                S = (S + np.swapaxes(S, 1, 2)) * 0.5
-                if mdim == 1:
-                    # elementwise 1/S — bit-identical to pinv on 1x1 stacks
-                    # (SVD of [[s]] reciprocates the lone singular value, one
-                    # IEEE division either way; s==0 -> 0 in both), without
-                    # the batched-SVD per-step hot spot
-                    s1 = S[:, 0, 0]
-                    pinvS = np.where(s1 != 0.0, 1.0 / np.where(s1 == 0.0, 1.0, s1), 0.0)[
-                        :, None, None
-                    ]
-                else:
-                    pinvS = np.linalg.pinv(S)
-                Kg = np.einsum("aij,akj,akl->ail", P1, Hb, pinvS)
-                r = Z[rows_u] - np.einsum("aij,aj->ai", Hb, m1)
-                mb[zi] = m1 + np.einsum("aij,aj->ai", Kg, r)
-                ikh = eye_n - np.einsum("aij,ajk->aik", Kg, Hb)
-                P_new = np.einsum("aij,ajk,alk->ail", ikh, P1, ikh) + np.einsum(
-                    "aij,jk,alk->ail", Kg, R, Kg
-                )
-                Pb[zi] = (P_new + np.swapaxes(P_new, 1, 2)) * 0.5
-            m[ki] = mb
-            P[ki] = Pb
-            filt_m[block] = mb
-            filt_P[block] = Pb
-            row_at[ki, t] = block
-
-        # per-row RTS predict + gain, one batched shot over all N rows
-        nm = filt_m @ F_.T
-        nc = np.einsum("ij,ajk,lk->ail", F_, filt_P, F_) + Q
-        g = np.einsum("aij,kj,akl->ail", filt_P, F_, np.linalg.pinv(nc))
-
-        M = int(np.sum(np.maximum(0, counts - (lag - 1))) * lag)
-        o_row = np.empty(M, dtype=np.int64)
-        o_idx = np.empty(M, dtype=np.int64)
-        o_step = np.empty(M, dtype=np.int64)
-        o_mean = np.empty((M, n))
-        o_cov = np.empty((M, n, n))
-        o_gain = np.empty((M, n, n))
-        w = 0
-        zero_g = np.zeros((n, n))
-        for t in range(lag - 1, T):
-            alive = np.nonzero(counts > t)[0]
-            A = len(alive)
-            rt = row_at[alive, t]
-            sm_m = filt_m[rt]
-            sm_P = filt_P[rt]
-            o_row[w : w + A] = rt
-            o_idx[w : w + A] = t + 1
-            o_step[w : w + A] = 0
-            o_mean[w : w + A] = sm_m
-            o_cov[w : w + A] = sm_P
-            o_gain[w : w + A] = zero_g
-            w += A
-            for step, j in enumerate(range(t - 1, t - lag, -1), start=1):
-                rj = row_at[alive, j]
-                gj = g[rj]
-                sm_m = filt_m[rj] + np.einsum("aij,aj->ai", gj, sm_m - nm[rj])
-                sm_P = filt_P[rj] + np.einsum("aij,ajk,alk->ail", gj, sm_P - nc[rj], gj)
-                o_row[w : w + A] = rj
-                o_idx[w : w + A] = j + 1
-                o_step[w : w + A] = step
-                o_mean[w : w + A] = sm_m
-                o_cov[w : w + A] = sm_P
-                o_gain[w : w + A] = gj
-                w += A
-        out = layout.frame(
-            M, stateKey=keys_arr[o_row], stateIndex=o_idx, stepIndex=o_step, m=o_mean,
-            c=o_cov, g=o_gain, eventTime=ev[o_row] if ev is not None else None,
-        )
-        return out, None
-
-    return fold_scalar if scalar else fold_general
+    """Time-synchronous multi-key fixed-lag RTS smoother: the forward pass
+    is the time-synchronous LKF filter pass itself — the scalar fold's
+    elementwise pass for the 1-D shape, the batched einsum/pinv pass
+    otherwise — and ``filter_fold`` hands its filtered (m, P) to
+    ``lag_windows``, the backward pass every smoother engine shares. The
+    1-D smoother is bit-exact with the sequential scalar fold; n-D
+    reassociates (~ulp). The smoother emits no likelihood, so the pass
+    computes none."""
+    c = dict(c, calculateLoglikelihood=False, calculateMahalanobis=False, calculateSlidingLikelihood=False)
+    if c["stateSize"] == 1 and c["measurementSize"] == 1:
+        return vectorized_scalar_lkf_fold_factory(c)
+    return vectorized_lkf_fold_factory(c)
 
 
 def supports_vectorized_mixture(c: dict) -> bool:

@@ -304,6 +304,9 @@ def test_short_feature_cells_raise_spark_free():
 
     with pytest.raises(ValueError, match="expected 2 values per cell, got 1"):
         vec_cells_to_2d([[1.0], [2.0], [3.0]], 2)
+    # mixed widths that total rows x width are not re-chunked across rows
+    with pytest.raises(ValueError, match="expected 2 values per cell, got 1"):
+        vec_cells_to_2d([[1.0], [2.0, 3.0, 4.0]], 2)
 
 
 @pytest.mark.parametrize("fe,vb", [("sequential", False), ("sequential", True), ("scan", True)])
@@ -329,8 +332,6 @@ def test_wide_feature_cells_raise(frame, fe, vb, name):
     """A 1-state RLS or LMS reading 2-element feature cells fails on
     every engine: no fold reads only the first value of a wide cell."""
     message = WIDE_CASES[name]
-    if name == "lms1" and fe == "scan":
-        message = "supports the 1-D LMS shape only"  # the scan's guided error
     op = configured(name, fe, vb)
     op._set("featuresCol", "features2")
     op._set("vectorizedBuckets", 2)  # no bucket-sizing job

@@ -157,11 +157,15 @@ def test_vectorized_rls_scalar_bit_exact(spark):
             RecursiveLeastSquaresFilter(1)
             .setStateKeyCol("key")
             .setForgettingFactor(0.95)
+            .setFoldEngine("sequential")
             .setVectorizedBatch(vectorized)
         )
 
-    seq = mk(False).transform(df).collect()
-    vec = mk(True).transform(df).collect()
+    seq_op, vec_op = mk(False), mk(True)
+    seq = seq_op.transform(df).collect()
+    vec = vec_op.transform(df).collect()
+    assert seq_op._lastFoldEngine == vec_op._lastFoldEngine == "sequential"
+    assert not seq_op._lastFoldVectorized and vec_op._lastFoldVectorized
     assert len(seq) == len(vec) == len(rows)
     key_fn = lambda r: (r.stateKey, r.stateIndex)  # noqa: E731
     for rs, rv in zip(sorted(seq, key=key_fn), sorted(vec, key=key_fn)):

@@ -93,10 +93,29 @@ def test_smoother_beats_filter_mse(spark):
     assert sm_mse < filt_mse
 
 
+def _seq_vs_vectorized(spark, rows, build, lags, compare):
+    """Run the smoother ``build(lag, vectorized)`` at every fixedLag on the
+    sequential engine with and without vectorizedBatch, assert which fold
+    ran, and ``compare`` the sorted rows."""
+    df = spark.createDataFrame(rows, "key string, measurement array<double>")
+    key_fn = lambda r: (r.stateKey, r.stateIndex, r.stepIndex)  # noqa: E731
+    for lag in lags:
+        seq_op, vec_op = build(lag, False), build(lag, True)
+        seq = seq_op.transform(df).collect()
+        vec = vec_op.transform(df).collect()
+        assert seq_op._lastFoldEngine == vec_op._lastFoldEngine == "sequential"
+        assert not seq_op._lastFoldVectorized and vec_op._lastFoldVectorized
+        assert len(seq) == len(vec) > 0
+        for rs, rv in zip(sorted(seq, key=key_fn), sorted(vec, key=key_fn)):
+            assert key_fn(rs) == key_fn(rv)
+            compare(rs, rv)
+
+
 def test_vectorized_smoother_scalar_bit_exact(spark):
     """1-D vectorized multi-key smoother is BIT-EXACT with the sequential
     scalar fold (same elementwise IEEE op order), incl. missing
-    measurements and ragged key lengths."""
+    measurements (on anchor rows too), ragged key lengths, a key shorter
+    than the lag, and fixedLag 1."""
     import numpy as np
 
     from artan_spark.operators import LinearKalmanSmoother
@@ -107,32 +126,32 @@ def test_vectorized_smoother_scalar_bit_exact(spark):
         for i in range(20 + k):
             z = None if (i + k) % 11 == 0 else [float(np.sin(i / 4.0) + rng.normal(0, 0.2))]
             rows.append((f"key{k}", z))
-    df = spark.createDataFrame(rows, "key string, measurement array<double>")
+    rows += [("short", [1.0]), ("short", None), ("short", [0.5])]  # fewer rows than lag 5
 
-    def mk(vectorized):
+    def mk(lag, vectorized):
         return (
             LinearKalmanSmoother(1, 1)
             .setStateKeyCol("key")
             .setInitialStateCovariance(np.array([[50.0]]))
             .setProcessNoise(np.array([[0.5]]))
             .setMeasurementNoise(np.array([[4.0]]))
-            .setFixedLag(5)
+            .setFixedLag(lag)
+            .setFoldEngine("sequential")
             .setVectorizedBatch(vectorized)
         )
 
-    seq = mk(False).transform(df).collect()
-    vec = mk(True).transform(df).collect()
-    assert len(seq) == len(vec) > 0
-    key_fn = lambda r: (r.stateKey, r.stateIndex, r.stepIndex)  # noqa: E731
-    for rs, rv in zip(sorted(seq, key=key_fn), sorted(vec, key=key_fn)):
-        assert key_fn(rs) == key_fn(rv)
-        assert rs.state.mean[0] == rv.state.mean[0]  # bit-exact
+    def bit_exact(rs, rv):
+        assert rs.state.mean[0] == rv.state.mean[0]
         assert rs.state.covariance.values[0] == rv.state.covariance.values[0]
         assert rs.rtsGain.values[0] == rv.rtsGain.values[0]
 
+    _seq_vs_vectorized(spark, rows, mk, (5, 1), bit_exact)
+
 
 def test_vectorized_smoother_general_matches_sequential(spark):
-    """n-D vectorized smoother == sequential queue fold (einsum ~ulp)."""
+    """n-D vectorized smoother == sequential queue fold (einsum ~ulp), incl.
+    missing measurements (on anchor rows too), a key shorter than the lag,
+    and fixedLag 1."""
     import numpy as np
 
     from artan_spark.operators import LinearKalmanSmoother
@@ -143,10 +162,10 @@ def test_vectorized_smoother_general_matches_sequential(spark):
         v = np.zeros(2)
         for i in range(16 + k):
             v = np.array([[1.0, 0.1], [0.0, 1.0]]) @ v + rng.normal(0, 0.1, 2)
-            rows.append((f"key{k}", [float(v[0])]))
-    df = spark.createDataFrame(rows, "key string, measurement array<double>")
+            rows.append((f"key{k}", None if (i + k) % 7 == 6 else [float(v[0])]))
+    rows += [("short", [1.0]), ("short", None), ("short", [0.5])]  # fewer rows than lag 6
 
-    def mk(vectorized):
+    def mk(lag, vectorized):
         return (
             LinearKalmanSmoother(2, 1)
             .setStateKeyCol("key")
@@ -155,16 +174,14 @@ def test_vectorized_smoother_general_matches_sequential(spark):
             .setProcessNoise(0.01 * np.eye(2))
             .setMeasurementModel(np.array([[1.0, 0.0]]))
             .setMeasurementNoise(np.array([[1.0]]))
-            .setFixedLag(6)
+            .setFixedLag(lag)
+            .setFoldEngine("sequential")
             .setVectorizedBatch(vectorized)
         )
 
-    seq = mk(False).transform(df).collect()
-    vec = mk(True).transform(df).collect()
-    assert len(seq) == len(vec) > 0
-    key_fn = lambda r: (r.stateKey, r.stateIndex, r.stepIndex)  # noqa: E731
-    for rs, rv in zip(sorted(seq, key=key_fn), sorted(vec, key=key_fn)):
-        assert key_fn(rs) == key_fn(rv)
+    def close(rs, rv):
         np.testing.assert_allclose(rs.state.mean, rv.state.mean, atol=1e-8)
         np.testing.assert_allclose(rs.state.covariance.values, rv.state.covariance.values, atol=1e-8)
         np.testing.assert_allclose(rs.rtsGain.values, rv.rtsGain.values, atol=1e-8)
+
+    _seq_vs_vectorized(spark, rows, mk, (6, 1), close)
